@@ -44,10 +44,11 @@ def rows_to_context(df: DataFrame, max_rows: int = MAX_PROMPT_ROWS) -> str:
     return "\n".join(lines) if lines else "(no rows)"
 
 
-def template_answer(question: str, df: DataFrame) -> str:
+def template_answer(question: str, context: str) -> str:
     """Deterministic no-LLM fallback: question + the data that answers
-    it. This is also what tests assert against."""
-    return f"Q: {question}\nData:\n{rows_to_context(df)}"
+    it, as ``rows_to_context`` rendered it. This is also what tests
+    assert against."""
+    return f"Q: {question}\nData:\n{context}"
 
 
 def http_transport(url: str, model: str, timeout: float = 30.0) -> Transport:
@@ -96,14 +97,16 @@ def improve_answer(text: str, transport: Transport | None = None) -> str:
 def answer(question: str, result: DataFrame, transport: Transport | None = None) -> str:
     """Grounded answer for a question given its (small) result
     DataFrame. With no transport, or on transport failure, fall back
-    to the template (reference behavior: EDGARclient.py:389)."""
+    to the template (reference behavior: EDGARclient.py:389). The plan
+    runs once: the fallback reuses the rows rendered for the prompt."""
+    context = rows_to_context(result)
     if transport is None:
-        return template_answer(question, result)
+        return template_answer(question, context)
     user_prompt = (
         f"Question: {question}\n\nData rows (JSON, one per line):\n"
-        f"{rows_to_context(result)}\n\nAnswer concisely using only this data."
+        f"{context}\n\nAnswer concisely using only this data."
     )
     try:
         return transport(SYSTEM_PROMPT, user_prompt)
     except Exception:
-        return template_answer(question, result)
+        return template_answer(question, context)

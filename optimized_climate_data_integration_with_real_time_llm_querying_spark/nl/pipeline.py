@@ -639,6 +639,13 @@ class ClimateEngine:
         # fully consumed — release it NOW rather than attaching a
         # cache_handles contract the NL path has no harness to honor.
         seq.unpersist()
+        # The state is one row per key. Bring it to the driver and
+        # release the localCheckpoint that holt_linear_state made, so
+        # the answer plans as a LocalTableScan and the question leaves
+        # no persisted RDD behind.
+        rows = [tuple(r) for r in state.collect()]
+        state._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        state = climate.local_relation(self.spark, rows, state.schema.simpleString())
         plan = state.select(
             key_col,
             (F.round(F.col("l"), 6) + F.lit(0.0)).alias("level"),

@@ -11,12 +11,21 @@ Data is generated deterministically (fixed LCG seed) so golden tests
 are stable; a production deployment would replace ``build_*`` with
 the real CSV/Excel/NetCDF ingest (see ``.ingest`` module) — every
 schema and transform stays the same.
+
+The built-in tables use no Python-side ``createDataFrame``: their small
+inputs (disaster types, cities, metrics, countries, gases, the
+dimension tables) go through ``local_relation``, one inline ``VALUES``
+query that plans as a JVM ``LocalTableScan``. A ``createDataFrame(list)``
+plans as ``Scan ExistingRDD`` over pickled rows, so every query over
+these tables would start Python workers to unpickle them again; ``ask()``
+re-executes its domain table on every question.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DISASTER_TYPES = [
     "Drought",
@@ -115,6 +124,30 @@ FGAS_SUBSTANCES = [
 ]
 
 
+def _sql_string(v) -> str:
+    # Backslash escapes, as the default parser reads them; "$" as well,
+    # so no value can read as a ${var} substitution. str() of a float
+    # is its shortest round-trip repr, so the cast back is exact.
+    text = str(v).replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{text}'"
+
+
+def local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` as one inline ``VALUES``
+    query: a single driver call that plans as ``LocalTableScan``, so no
+    Python worker ever reads the rows. ``schema`` is a DDL string; every
+    value is written as a string literal and cast to its column's type."""
+    fields = StructType.fromDDL(schema).fields
+    cols = ", ".join(
+        f"CAST(col{i} AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for i, f in enumerate(fields, 1)
+    )
+    values = ", ".join(
+        "(" + ", ".join(_sql_string(v) for v in row) + ")" for row in rows
+    )
+    return spark.sql(f"SELECT {cols} FROM VALUES {values}")
+
+
 def _lcg(col, lo: float, hi: float):
     """Deterministic pseudo-random double in [lo, hi) from an integer
     column — xxhash64 as the mixer so generation is pure Spark."""
@@ -126,9 +159,7 @@ def build_disasters_yearly(spark: SparkSession) -> DataFrame:
     """Long form of NOAA `disaster_records` (45 years x 7 types):
     (year, disaster_type, count, cost)."""
     years = spark.range(1980, 2025).select(F.col("id").cast("int").alias("year"))
-    types = spark.createDataFrame(
-        [(t,) for t in DISASTER_TYPES], "disaster_type string"
-    )
+    types = local_relation(spark, [(t,) for t in DISASTER_TYPES], "disaster_type string")
     base = years.crossJoin(types)
     seed = F.concat(F.col("year").cast("string"), F.lit("|"), F.col("disaster_type"))
     return base.select(
@@ -217,12 +248,13 @@ def build_era5_monthly(spark: SparkSession, years: tuple[int, int] = (2019, 2022
     city_rows = [
         (c, city) for c, cities in ERA5_CITIES.items() for city in cities
     ]
-    cities = spark.createDataFrame(city_rows, "country string, city string")
+    cities = local_relation(spark, city_rows, "country string, city string")
     months = spark.sql(
         f"SELECT explode(sequence(to_date('{years[0]}-01-01'), "
         f"to_date('{years[1]}-12-01'), interval 1 month)) AS date"
     )
-    metrics = spark.createDataFrame(
+    metrics = local_relation(
+        spark,
         [(m, fam, unit) for m, (fam, unit) in ERA5_METRICS.items()],
         "metric string, family string, unit string",
     )
@@ -261,12 +293,12 @@ def build_emissions(spark: SparkSession) -> DataFrame:
     The reference's 4 per-gas databases and 54 per-year REAL columns
     (FIXTURES.md §3) become two ordinary columns."""
     country_rows = [(name, code) for name, code in GHG_COUNTRIES.items()]
-    countries = spark.createDataFrame(country_rows, "country string, country_code string")
+    countries = local_relation(spark, country_rows, "country string, country_code string")
     gas_substances = (
         [("CO2", "CO2"), ("CH4", "CH4"), ("N2O", "N2O")]
         + [("F-gas", s) for s in FGAS_SUBSTANCES]
     )
-    gases = spark.createDataFrame(gas_substances, "gas string, substance string")
+    gases = local_relation(spark, gas_substances, "gas string, substance string")
     years = spark.range(1970, 2024).select(F.col("id").cast("int").alias("year"))
     base = countries.crossJoin(gases).crossJoin(years)
     # F-gas reporting starts 1990 in the reference DB.
@@ -351,7 +383,8 @@ def reverse_geocode_join(points: DataFrame, gazetteer: DataFrame) -> DataFrame:
 
 
 def city_gazetteer(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(c, la, lo) for c, (la, lo) in CITY_COORDS.items()],
         "name string, lat double, lon double",
     )
@@ -363,21 +396,26 @@ def city_gazetteer(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def build_dimensions(spark: SparkSession) -> dict[str, DataFrame]:
-    states = spark.createDataFrame(
+    states = local_relation(
+        spark,
         [(n, a) for n, a in US_STATES.items()], "name string, abbr string"
     )
-    countries = spark.createDataFrame(
+    countries = local_relation(
+        spark,
         [(n, c) for n, c in GHG_COUNTRIES.items()], "name string, code_a3 string"
     )
-    metrics = spark.createDataFrame(
+    metrics = local_relation(
+        spark,
         [(m, fam, unit) for m, (fam, unit) in ERA5_METRICS.items()],
         "name string, family string, unit string",
     )
-    cities = spark.createDataFrame(
+    cities = local_relation(
+        spark,
         [(city, c) for c, cs in ERA5_CITIES.items() for city in cs],
         "name string, country string",
     )
-    synonyms = spark.createDataFrame(
+    synonyms = local_relation(
+        spark,
         [(k, v) for k, v in DISASTER_SYNONYMS.items()],
         "keyword string, canonical string",
     )
