@@ -1,22 +1,33 @@
-"""Question -> QuerySpec -> one DataFrame plan -> grounded answer.
+"""Question -> QuerySpec -> one Spark read -> grounded answer.
 
 The end-to-end lifecycle of SURVEY.md §3, one engine instead of four
 stdio client/server pairs. Routing, resolution, and planning are
 driver-side (they look at vocabularies and dimension tables, not
-data); the single compiled plan is the only cluster work per
-question — e.g. "Compare precipitation in Dhaka and Colombo in 2020"
-is ONE groupBy plan here versus the reference's 24 point queries plus
-resolution probes (``era5client.py:246-277``).
+data), so each question reads its domain table once:
+
+- a lookup compiles to ONE plan, run by the answer — e.g. "Compare
+  precipitation in Dhaka and Colombo in 2020" is one groupBy here
+  versus the reference's 24 point queries plus resolution probes
+  (``era5client.py:246-277``);
+- a trend or anomaly question collects its series (keys x years, or
+  series x months: hundreds of rows) with one action and finishes on
+  the driver: the year window, zero-fill, Holt recursion, climatology
+  and departures. Each step is a few arithmetic operations per row,
+  cheaper in Python than the Spark jobs, Py4J calls and codegen a
+  plan per step would cost. The answer then reads a local relation
+  that keeps the result's column names, types and order.
 """
 
 from __future__ import annotations
 
 import re
+from collections import defaultdict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.trend import round6
 from ..plans import QuerySpec, compile_spec
 from ..sources import climate
 import difflib
@@ -48,6 +59,41 @@ def _apply_eq_filters(df: DataFrame, filters: dict, ci=frozenset()) -> DataFrame
         else:
             df = df.filter(c == (val.lower() if col in ci else val))
     return df
+
+
+def _collect_series(df: DataFrame) -> list:
+    """The one Spark action of a trend or anomaly question."""
+    return df.collect()
+
+
+def _mean(values) -> float | None:
+    """Spark's ``avg`` over doubles: nulls skipped, a left-to-right sum
+    from 0.0 divided by the count (no compensated summation). Spark
+    adds partition sums in shuffle order, so the two can differ in the
+    last bit; the 6-dp rounding after it hides that except on a tie."""
+    total, n = 0.0, 0
+    for v in values:
+        if v is not None:
+            total += v
+            n += 1
+    return total / n if n else None
+
+
+def _order_key(v):
+    # Spark's ascending order: nulls first, NaN above every number.
+    if v is None:
+        return (0, 0)
+    if v != v:
+        return (2, 0)
+    return (1, v)
+
+
+def _sort_rows(rows: list, *order: tuple[int, bool]) -> list:
+    """Sort tuples like ``orderBy``: ``order`` is (index, descending)
+    pairs; a descending column puts nulls last, as Spark's DESC does."""
+    for i, desc in reversed(order):
+        rows.sort(key=lambda r: _order_key(r[i]), reverse=desc)
+    return rows
 
 
 def _resolve_word(word: str, names: list[str], cutoff: float) -> str | None:
@@ -465,91 +511,98 @@ class ClimateEngine:
         year RANGE ("anomaly from 2018 to 2020") keeps one output row
         per (year, month) — each year compares to the same full-table
         climatology — clamped to coverage like the trend planner.
-        Both aggregates are two-phase over the filtered series; the
-        climatology is (city x metric x 12) rows — dimension-sized at
-        any archive scale — and values pin to the 6-dp grid before
+        One action collects the filtered series (series x months
+        rows); coverage, climatology, ``n_years`` and departures are
+        computed from those rows on the driver, with Spark's ``avg``
+        and ``round`` semantics. Values pin to the 6-dp grid before
         the subtraction so the anomaly is a well-defined number."""
         spec = self._spec_era5(question)
         tbl = _apply_eq_filters(
             self.tables["era5_monthly"], spec.filters, ci=spec.case_insensitive
         )
-        t = extract_time(question)
-        y_min, y_max = tbl.agg(
-            F.min(F.year("date")), F.max(F.year("date"))
-        ).collect()[0]
-        if y_max is None:
+        rows = _collect_series(
+            tbl.select(
+                "city",
+                "metric",
+                F.year("date").alias("year"),
+                F.month("date").alias("month"),
+                "value",
+            )
+        )
+        years = [r[2] for r in rows if r[2] is not None]
+        if not years:
             raise ValueError(
                 f"no era5 rows match the question's filters "
                 f"({spec.filters!r}) — cannot compute an anomaly"
             )
+        y_min, y_max = min(years), max(years)
+        t = extract_time(question)
         if t.year is not None:
             lo = hi = t.year
         elif t.year_range is not None:
             lo, hi = t.year_range
         else:
-            lo = hi = int(y_max)
+            lo = hi = y_max
         if not t.empty:  # empty spec stays vacuously-false BETWEEN
             if hi < y_min or lo > y_max:
                 raise ValueError(
                     f"anomaly years {lo}-{hi} are outside the table's "
                     f"{y_min}-{y_max} coverage"
                 )
-            lo, hi = max(lo, int(y_min)), min(hi, int(y_max))
-        monthly = tbl.select(
-            "city",
-            "metric",
-            F.year("date").alias("year"),
-            F.month("date").alias("month"),
-            "value",
-        )
-        clim = monthly.groupBy("city", "metric", "month").agg(
-            F.round(F.avg("value"), 6).alias("climatology"),
-            F.countDistinct("year").alias("n_years"),
-        )
-        target = (
-            monthly.filter(F.col("year").between(lo, hi))
-            .groupBy("city", "metric", "year", "month")
-            .agg(F.round(F.avg("value"), 6).alias("value"))
-        )
-        if t.months:
-            # "anomaly in April 2020" — narrow the OUTPUT months; the
+            lo, hi = max(lo, y_min), min(hi, y_max)
+        clim_values, clim_years = defaultdict(list), defaultdict(set)
+        target = defaultdict(list)
+        for city, metric, year, month, value in rows:
+            clim_values[(city, metric, month)].append(value)
+            if year is None:
+                continue
+            clim_years[(city, metric, month)].add(year)
+            # "anomaly in April 2020" narrows the OUTPUT months; the
             # climatology stays full-year (each month compares to its
-            # own-month normal regardless of which months are shown)
-            target = target.filter(F.col("month").isin(t.months))
-        plan = (
-            target.join(clim, ["city", "metric", "month"])
-            .select(
-                "city",
-                "metric",
-                "year",
-                "month",
-                "value",
-                "climatology",
-                F.round(F.col("value") - F.col("climatology"), 6).alias("anomaly"),
-                "n_years",
+            # own-month normal regardless of which months are shown).
+            if lo <= year <= hi and (not t.months or month in t.months):
+                target[(city, metric, year, month)].append(value)
+        monthly = []
+        for (city, metric, year, month), values in target.items():
+            if city is None or metric is None or month is None:
+                continue  # a null key joins no climatology row
+            clim_key = (city, metric, month)
+            value = round6(_mean(values))
+            clim = round6(_mean(clim_values[clim_key]))
+            anomaly = None if value is None or clim is None else round6(value - clim)
+            monthly.append(
+                (city, metric, year, month, value, clim, anomaly,
+                 len(clim_years[clim_key]))
             )
-            .orderBy("city", "metric", "year", "month")
-        )
+        monthly.sort(key=lambda r: r[:4])
         cities = spec.filters.get("city")
         if isinstance(cities, list) and len(cities) > 1:
             # g17 anomaly-COMPARISON composition ("was 2020 more
-            # anomalous in Dhaka than in Delhi?"): the multi-city
-            # spec machinery and the anomaly planner compose into ONE
-            # plan — both cities' departures from the same frozen
-            # full-table climatology — summarized to one row per
-            # (city, metric, year) so the cities are directly
-            # comparable; ordered most-anomalous-first. The monthly
-            # grain stays the single-city output.
-            plan = (
-                plan.groupBy("city", "metric", "year")
-                .agg(
-                    F.round(F.avg("anomaly"), 6).alias("mean_anomaly"),
-                    F.round(F.avg(F.abs(F.col("anomaly"))), 6).alias(
-                        "mean_abs_anomaly"
-                    ),
-                    F.count(F.lit(1)).alias("n_months"),
-                )
-                .orderBy(F.col("mean_abs_anomaly").desc(), "city", "metric", "year")
+            # anomalous in Dhaka than in Delhi?"): both cities'
+            # departures from the same frozen full-table climatology,
+            # summarized to one row per (city, metric, year) so the
+            # cities are directly comparable; ordered most-anomalous-
+            # first. The monthly grain stays the single-city output.
+            by_year = defaultdict(list)
+            for r in monthly:
+                by_year[r[:3]].append(r[6])
+            summary = _sort_rows(
+                [
+                    (
+                        *key,
+                        round6(_mean(anomalies)),
+                        round6(_mean(a if a is None else abs(a) for a in anomalies)),
+                        len(anomalies),
+                    )
+                    for key, anomalies in by_year.items()
+                ],
+                (4, True), (0, False), (1, False), (2, False),
+            )
+            plan = climate.local_relation(
+                self.spark,
+                summary,
+                "city string, metric string, year int, mean_anomaly double, "
+                "mean_abs_anomaly double, n_months bigint",
             )
             out_spec = QuerySpec(
                 dataset="era5_monthly",
@@ -560,6 +613,12 @@ class ClimateEngine:
                 order_by=[("mean_abs_anomaly", False)],
             )
             return out_spec, plan
+        plan = climate.local_relation(
+            self.spark,
+            monthly,
+            "city string, metric string, year int, month int, value double, "
+            "climatology double, anomaly double, n_years bigint",
+        )
         out_spec = QuerySpec(
             dataset="era5_monthly",
             metrics=["value", "climatology", "anomaly"],
@@ -575,29 +634,31 @@ class ClimateEngine:
         state over each series' yearly values, ranked by the trend
         component; forecast_next = level + trend (h=1).
 
-        Window: the question's explicit year range if it gives one
-        (clamped to the years the table actually has — open phrasings
-        like "since 2015" parse with the extractor's default horizon
-        and must not fail the density guard), else the last 10 years
-        of the table (a decade is the honest horizon for 'is it
-        trending' — a 45-year series would let the 1980s dominate the
-        smoothed state). Zero-fill domains densify each key's series
-        over the window (keys x years dimension grid, coalesce to 0)
-        so a sparse key cannot fail the density guard; >= 2 steps and
-        per-key density are still guarded loudly INSIDE
+        One action collects the yearly series (keys x years rows); the
+        rest runs on the driver. Window: the question's explicit year
+        range if it gives one (clamped to the years the table actually
+        has — open phrasings like "since 2015" parse with the
+        extractor's default horizon and must not fail the density
+        guard), else the last 10 years of the table (a decade is the
+        honest horizon for 'is it trending' — a 45-year series would
+        let the 1980s dominate the smoothed state). Zero-fill domains
+        densify each key's series over the window (missing years and
+        nulls count 0) so a sparse key cannot fail the density guard;
+        >= 2 steps and per-key density are still guarded loudly INSIDE
         holt_linear_state (shared with the FULL-oracled
         holt_forecast_daily's 30-day guard)."""
         from ..operators.trend import holt_linear_state
 
         key_col, yearly, zero_fill, filters = self._trend_series(domain, question)
-        t = extract_time(question)
-        # Dimension-scale probe: one MIN/MAX over the tiny yearly table.
-        y_min, y_max = yearly.agg(F.min("year"), F.max("year")).collect()[0]
-        if y_max is None:
+        rows = _collect_series(yearly)
+        years = [r[1] for r in rows if r[1] is not None]
+        if not years:
             raise ValueError(
                 f"no {domain} rows match the question's filters "
                 f"({filters!r}) — cannot fit a trend"
             )
+        y_min, y_max = min(years), max(years)
+        t = extract_time(question)
         if t.year_range:
             lo, hi = t.year_range
             lo, hi = max(lo, y_min), min(hi, y_max)
@@ -610,50 +671,41 @@ class ClimateEngine:
             hi = y_max
             lo = max(y_min, hi - 9)
         n_steps = hi - lo + 1
-        win = yearly.where(F.col("year").between(lo, hi))
+        window = defaultdict(lambda: defaultdict(list))
+        for key, year, val in rows:
+            if year is not None and lo <= year <= hi:
+                window[key][year].append(val)
         if zero_fill:
-            # Densify: keys present in the window x every window year
-            # (a bounded dimension grid), missing years coalesce to 0 —
-            # a sparse disaster type / country is a valid question, not
-            # an exception (ADVICE r9).
-            keys = win.select(key_col).distinct()
-            years = self.spark.range(lo, hi + 1).select(
-                F.col("id").cast("int").alias("year")
-            )
-            win = (
-                keys.crossJoin(years)
-                .join(win, [key_col, "year"], "left")
-                .select(key_col, "year", F.coalesce("val", F.lit(0)).alias("val"))
-            )
-        seq = win.select(
-            key_col,
-            (F.col("year") - F.lit(lo) + 1).alias("rn"),
-            F.col("val").alias("cnt"),
-        ).persist()
-        try:
-            state = holt_linear_state(seq, key_col, n_steps, series_desc="years")
-        except BaseException:
-            seq.unpersist()
-            raise
-        # Every recursion step eagerly localCheckpoints, so seq is
-        # fully consumed — release it NOW rather than attaching a
-        # cache_handles contract the NL path has no harness to honor.
-        seq.unpersist()
-        # The state is one row per key. Bring it to the driver and
-        # release the localCheckpoint that holt_linear_state made, so
-        # the answer plans as a LocalTableScan and the question leaves
-        # no persisted RDD behind.
-        rows = [tuple(r) for r in state.collect()]
-        state._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        state = climate.local_relation(self.spark, rows, state.schema.simpleString())
-        plan = state.select(
-            key_col,
-            (F.round(F.col("l"), 6) + F.lit(0.0)).alias("level"),
-            (F.round(F.col("b"), 6) + F.lit(0.0)).alias("trend"),
-            (F.round(F.col("l") + F.col("b"), 6) + F.lit(0.0)).alias(
-                "forecast_next"
-            ),
-        ).orderBy(F.col("trend").desc(), key_col)
+            # A sparse disaster type / country is a valid question, not
+            # an exception (ADVICE r9): each window year without a row
+            # counts 0.
+            series = {
+                key: [
+                    0 if v is None else v
+                    for y in range(lo, hi + 1)
+                    for v in by_year.get(y, [0])
+                ]
+                for key, by_year in window.items()
+            }
+        else:
+            series = {
+                key: [v for y in sorted(by_year) for v in by_year[y]]
+                for key, by_year in window.items()
+            }
+        state = holt_linear_state(series, key_col, n_steps, series_desc="years")
+        ranked = _sort_rows(
+            [
+                (key, round6(l), round6(b), None if l is None else round6(l + b))
+                for key, (l, b) in state.items()
+            ],
+            (2, True), (0, False),
+        )
+        key_type = yearly.schema[key_col].dataType.simpleString()
+        plan = climate.local_relation(
+            self.spark,
+            ranked,
+            f"{key_col} {key_type}, level double, trend double, forecast_next double",
+        )
         dataset = {
             "disasters": "disasters_yearly",
             "emissions": "emissions",

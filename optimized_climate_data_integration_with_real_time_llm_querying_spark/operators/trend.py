@@ -1,50 +1,60 @@
 """Holt linear-trend state recursion (double exponential smoothing),
-factored out of the ``holt_forecast_daily`` registry query so other
-surfaces — notably the NL planner's "which X is trending up?" path —
-can target the same operator.
+shared by the ``holt_forecast_daily`` registry query and the NL
+planner's "which X is trending up?" path.
 
 The recursion l_t = a*y_t + (1-a)*(l+b); b_t = b*(l_t - l_{t-1}) +
-(1-b)*b_{t-1} is inherently sequential, so it is UNROLLED: one tiny
-keyed join per step over the (key, rn, cnt) sequence frame, each step
-re-rounded to the 6-dp grid (with the default DYADIC constants
-0.75/0.25 the products round deterministically on every engine — the
-property the registry oracle replays as generated CTEs). Each step is
-``coalesce(1).localCheckpoint(eager=True)``: left lazy, the two-
-reference state recurrence doubles the plan per step (the unigram
-lesson — measured analyzer timeout); the checkpointed frame is
-key-count-sized, so the per-step cost is fixed and corpus-independent.
-
-Scale: the corpus appears only through whatever aggregate produced
-the sequence frame (a daily count, a yearly count); the recursion
-itself touches |keys| rows per step.
+(1-b)*b_{t-1} is sequential and its input is small (one value per key
+and step: types x 30 days, or keys x years), so callers collect the
+series with one Spark action and the recursion runs here, on the
+driver. Each step re-rounds to the 6-dp grid with ``round6``, which
+reproduces Spark's ``round(double, 6)``; with the default DYADIC
+constants 0.75/0.25 the trajectory is the one the registry oracle
+replays as generated SQL CTEs, step for step.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import math
+from collections.abc import Mapping, Sequence
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+_SIX_DP = Decimal("1e-6")
+# A finite double has at most 309 integer digits; quantizing to 6 dp
+# must never run out of precision.
+_WIDE = Context(prec=400)
+
+
+def round6(x: float | None) -> float | None:
+    """Spark's ``round(x, 6)`` for a double: HALF_UP on the shortest
+    decimal representation (``BigDecimal.valueOf``), NaN, infinities
+    and null passed through. Python's ``round()`` is banker's rounding
+    on the binary value and differs on ties. ``+ 0.0`` because a
+    BigDecimal has no negative zero, so Spark returns 0.0 for -0.0 and
+    for negatives that round to zero."""
+    if x is None or not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_SIX_DP, ROUND_HALF_UP, _WIDE)) + 0.0
 
 
 def holt_linear_state(
-    seq: DataFrame,
+    series: Mapping[object, Sequence[float | None]],
     key_col: str,
     n_steps: int,
     alpha: float = 0.75,
     beta: float = 0.25,
     series_desc: str = "steps",
-) -> DataFrame:
-    """(key, l, b) after ``n_steps`` Holt steps over ``seq``.
+) -> dict[object, tuple[float | None, float | None]]:
+    """{key: (l, b)} after ``n_steps`` Holt steps over each key's values
+    (in step order).
 
-    ``seq`` columns: ``key_col``, ``rn`` (dense 1..n_steps per key),
-    ``cnt``. Initial state from the first two observations:
-    l_1 = y_1, b_1 = y_2 - y_1 (the standard initialization) — so the
-    recursion NEEDS at least two observations, and a key missing some
-    rn would silently drop out of a stepped join. Both preconditions
-    are guarded HERE, loudly (one small collect over the per-key
-    counts at build time), so no caller can forget them; callers that
-    persisted ``seq`` should wrap this call to unpersist on raise.
-    ``series_desc`` names the step unit in the error ("days",
-    "years") so the message reads in the caller's domain.
+    Initial state from the first two observations: l_1 = y_1,
+    b_1 = y_2 - y_1 (the standard initialization), so the recursion
+    NEEDS at least two observations, and every key must have exactly
+    ``n_steps`` of them: a recursion over a short series would fit the
+    wrong steps. Both preconditions raise here, so no caller can forget
+    them. ``key_col`` and ``series_desc`` ("days", "years") name the
+    key and the step unit in the error. A null observation nulls the
+    key's state, as SQL arithmetic would.
     """
     if n_steps < 2:
         raise ValueError(
@@ -52,47 +62,22 @@ def holt_linear_state(
             f"(got n_steps={n_steps}) — initialization uses the first "
             "two observations"
         )
-    counts = [
-        r[0] for r in seq.groupBy(key_col).count().select("count").collect()
-    ]
+    counts = [len(ys) for ys in series.values()]
     if not counts or min(counts) != n_steps or max(counts) != n_steps:
         raise ValueError(
             f"holt_linear_state: expected exactly {n_steps} "
             f"{series_desc} per {key_col}, got {sorted(set(counts))}"
         )
     a, b_ = alpha, beta
-    # Round-17 rewrite (guide §1.2/§2.4): the recursion is a per-key
-    # SCALAR chain over a guarded-dense, bounded number of steps, so
-    # it unrolls as column expressions over ONE pivoted row per key
-    # (groupBy key, y_t = max(cnt where rn = t)) — replacing the
-    # former per-step join + eager single-task localCheckpoint
-    # (n_steps driver-blocking jobs). Arithmetic is IDENTICAL: the
-    # same per-step double ops and 6-dp roundings, element-wise per
-    # key — no aggregation-order dependence at all. One final eager
-    # localCheckpoint keeps the callers' contract that ``seq`` is
-    # fully consumed when this returns.
-    wide = seq.groupBy(key_col).agg(
-        *[
-            F.max(F.when(F.col("rn") == t, F.col("cnt"))).alias(f"_y{t}")
-            for t in range(1, n_steps + 1)
-        ]
-    )
-    cur = wide.withColumn("_l1", F.col("_y1").cast("double")).withColumn(
-        "_b1", (F.col("_y2") - F.col("_y1")).cast("double")
-    )
-    for t in range(2, n_steps + 1):
-        lp, bp = F.col(f"_l{t - 1}"), F.col(f"_b{t - 1}")
-        cur = cur.withColumn(
-            f"_l{t}",
-            F.round(a * F.col(f"_y{t}") + (1 - a) * (lp + bp), 6),
-        )
-        cur = cur.withColumn(
-            f"_b{t}",
-            F.round(b_ * (F.col(f"_l{t}") - lp) + (1 - b_) * bp, 6),
-        )
-    state = cur.select(
-        key_col,
-        F.col(f"_l{n_steps}").alias("l"),
-        F.col(f"_b{n_steps}").alias("b"),
-    ).localCheckpoint(eager=True)
+    state = {}
+    for key, ys in series.items():
+        if any(y is None for y in ys):
+            state[key] = (None, None)
+            continue
+        l, b = float(ys[0]), float(ys[1] - ys[0])
+        for y in ys[1:]:
+            l_new = round6(a * y + (1 - a) * (l + b))
+            b = round6(b_ * (l_new - l) + (1 - b_) * b)
+            l = l_new
+        state[key] = (l, b)
     return state

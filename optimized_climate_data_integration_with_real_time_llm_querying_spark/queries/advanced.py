@@ -4,6 +4,8 @@ quantiles, cube, ETL scalar functions (F1-F8), and IVF-style ANN.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -11,6 +13,17 @@ from ..catalog import load_table
 from ..operators import similarity
 from ..operators.asof import asof_join_last_ts
 from . import register
+
+
+def _warehouse_path(sf_dir: str, stem: str, ext: str = "") -> str:
+    """Scratch path of a sink round trip: ``spark-warehouse/`` under the
+    working directory (created if missing, as the sqlite, Excel and
+    netCDF writers do not create parent directories), one file or
+    directory per query and data directory."""
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    warehouse = os.path.join(os.getcwd(), "spark-warehouse")
+    os.makedirs(warehouse, exist_ok=True)
+    return os.path.join(warehouse, f"{stem}_{tag}{ext}")
 
 
 @register(
@@ -417,7 +430,6 @@ _PRUNE_DAY_LO, _PRUNE_DAY_HI = 19723, 19726
     "with footer-driven pruning any engine applies automatically.",
 )
 def zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
 
     from ..sources.ingest import box_pruning_stats, write_zorder_layout
 
@@ -428,11 +440,7 @@ def zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
         F.round("value", 2).alias("value"),
     )
-    # Deterministic per-SF path inside the repo's warehouse dir.
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(
-        os.getcwd(), "spark-warehouse", f"_zorder_pruned_read_{tag}"
-    )
+    path = _warehouse_path(sf_dir, "_zorder_pruned_read")
     write_zorder_layout(frame, path, "user_id", "day", bits=16, n_files=16)
 
     preds = [
@@ -555,7 +563,6 @@ def revenue_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import math
-    import os
 
     from ..sources.ingest import box_pruning_stats, compact_small_files
 
@@ -565,9 +572,8 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("o_totalprice", 2).alias("price"),
         "o_orderdate",
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    small = os.path.join(os.getcwd(), "spark-warehouse", f"_compaction_small_{tag}")
-    compacted = os.path.join(os.getcwd(), "spark-warehouse", f"_compaction_out_{tag}")
+    small = _warehouse_path(sf_dir, "_compaction_small")
+    compacted = _warehouse_path(sf_dir, "_compaction_out")
     o.repartition(48).write.mode("overwrite").parquet(small)
 
     in_bytes = sum(
@@ -621,15 +627,13 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "_corrupt_record quarantine) is tested in tests/test_ingest.py.",
 )
 def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
 
     from ..sources.ingest import read_jsonl, write_jsonl
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(os.getcwd(), "spark-warehouse", f"_jsonl_roundtrip_{tag}")
+    path = _warehouse_path(sf_dir, "_jsonl_roundtrip")
     write_jsonl(d, path)
     return read_jsonl(
         spark,
@@ -657,7 +661,6 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gates; hostile-string quoting is pinned in tests/test_ingest.py.",
 )
 def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
 
     from ..sources.ingest import read_csv, write_csv
 
@@ -671,8 +674,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_shipdate",
     ]
     li = load_table(spark, sf_dir, "lineitem").select(*cols)
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(os.getcwd(), "spark-warehouse", f"_csv_roundtrip_{tag}")
+    path = _warehouse_path(sf_dir, "_csv_roundtrip")
     write_csv(li, path)
     return read_csv(
         spark,
@@ -703,15 +705,13 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "conversion pass before this engine queries it.",
 )
 def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
 
     from ..sources.ingest import read_orc, write_orc
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(os.getcwd(), "spark-warehouse", f"_orc_roundtrip_{tag}")
+    path = _warehouse_path(sf_dir, "_orc_roundtrip")
     write_orc(d, path)
     return read_orc(spark, path).select("doc_id", "text", "lang", "source", "n_chars")
 
@@ -735,15 +735,13 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "through SQLite's dynamic typing, mirrored by the oracle's CAST.",
 )
 def sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
 
     from ..sources.ingest import read_sqlite, write_sqlite
 
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    db = os.path.join(os.getcwd(), "spark-warehouse", f"_sqlite_roundtrip_{tag}.db")
+    db = _warehouse_path(sf_dir, "_sqlite_roundtrip", ".db")
     write_sqlite(c, db, "customer")
     return read_sqlite(spark, db, "customer").select(
         "c_custkey",
@@ -774,15 +772,13 @@ def sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "toLocalIterator; facts stay columnar.",
 )
 def excel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
 
     from ..sources.ingest import read_excel, write_excel
 
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(os.getcwd(), "spark-warehouse", f"_excel_roundtrip_{tag}.xlsx")
+    path = _warehouse_path(sf_dir, "_excel_roundtrip", ".xlsx")
     write_excel(s, path, sheet_name="supplier")
     return read_excel(spark, path, sheet=0).select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
@@ -857,7 +853,6 @@ def _netcdf_grid_roundtrip(
     through whichever S4 WRITER, read back through the auto-detecting
     S4 reader — both containers must survive the identical content
     oracle."""
-    import os
 
     import numpy as np
 
@@ -880,7 +875,6 @@ def _netcdf_grid_roundtrip(
         grid[di[r["day"]], ti[r["event_type"]]] = r["n"]
     strlen = max(len(t.encode("utf-8")) for t in types)
     names = np.array([t.encode("utf-8") for t in types], dtype=f"S{strlen}")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     if container == "classic":
         from ..sources.netcdf_writer import write_netcdf_classic as writer
 
@@ -889,9 +883,7 @@ def _netcdf_grid_roundtrip(
         from ..sources.netcdf4_writer import write_netcdf4 as writer
 
         suffix = "nc4"
-    path = os.path.join(
-        os.getcwd(), "spark-warehouse", f"_netcdf_roundtrip_{tag}.{suffix}"
-    )
+    path = _warehouse_path(sf_dir, "_netcdf_roundtrip", f".{suffix}")
     writer(
         path,
         dims=[("day", None), ("type", len(types)), ("strlen", strlen)],

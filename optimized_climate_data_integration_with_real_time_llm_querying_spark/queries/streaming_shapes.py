@@ -9,13 +9,16 @@ north-star's Structured-Streaming-integration capability.
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..operators.trend import holt_linear_state
+from ..operators.trend import holt_linear_state, round6
 
 from ..catalog import load_table
+from ..sources.climate import local_relation
 from . import register
 
 
@@ -726,18 +729,19 @@ def _holt_oracle() -> str:
     "decomposition query (seasonal_decompose_daily) describes but "
     "does not predict. The 30-step state recursion l_t = a*y_t + "
     "(1-a)*(l+b); b_t = b*(l_t - l_{t-1}) + (1-b)*b_t-1 is "
-    "inherently sequential, so it is UNROLLED over the per-day "
-    "aggregate exactly like the BPE/k-means/unigram trainings — 30 "
-    "generated CTEs in the oracle, 30 checkpointed 5-row joins in "
-    "the engine. Determinism: the smoothing constants are DYADIC "
-    "(0.75/0.25 are exact in binary), every state value is re-"
-    "rounded to 6 dp each step, and both engines evaluate identical "
-    "expression trees — so the state trajectories agree exactly at "
+    "inherently sequential: the oracle unrolls it as 30 generated "
+    "CTEs; the engine collects the types x 30 daily counts with one "
+    "Spark action and runs the recursion on the driver "
+    "(operators/trend.holt_linear_state). Determinism: the smoothing "
+    "constants are DYADIC (0.75/0.25 are exact in binary), every "
+    "state value is re-rounded to 6 dp each step with Spark's "
+    "round semantics, and both sides evaluate the same arithmetic "
+    "in the same order — so the state trajectories agree exactly at "
     "every step, not just at the end. The guard raises loudly if "
-    "the series is not the expected dense 30 days (an unrolled "
+    "the series is not the expected dense 30 days (a fixed-length "
     "recursion cannot silently adapt — the unigram lesson). Scale: "
-    "the recursion runs over types x 1 state row; the corpus "
-    "appears only through the daily partial+final count.",
+    "the corpus appears only through the daily partial+final count; "
+    "the driver sees types x 30 rows.",
 )
 def holt_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
@@ -746,45 +750,36 @@ def holt_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    w = W.partitionBy("event_type").orderBy("day")
-    seq = daily.withColumn("rn", F.row_number().over(w)).persist()
+    days = defaultdict(list)
+    for event_type, day, cnt in daily.collect():
+        days[event_type].append((day, cnt))
+    # Step order is day order (a null day first, as in ascending SQL).
+    series = {
+        event_type: [c for _, c in sorted(pts, key=lambda p: (p[0] is not None, p[0]))]
+        for event_type, pts in days.items()
+    }
     # The recursion AND its loud density/min-length guard live in
-    # operators/trend.holt_linear_state (round-9 refactor) so the NL
-    # planner's trend path shares both; constants and per-step
-    # rounding are unchanged. The guard collects at BUILD time; if it
-    # raises, unpersist seq before propagating (no cached-RDD leak on
-    # the loud path).
-    try:
-        state = holt_linear_state(
-            seq,
-            "event_type",
-            _HOLT_T,
-            alpha=_HOLT_ALPHA,
-            beta=_HOLT_BETA,
-            series_desc="days",
-        )
-    except BaseException:
-        seq.unpersist()
-        raise
-    # Every step eagerly localCheckpoints, so the recursion has fully
-    # consumed seq by the time it returns — release it HERE instead
-    # of handing the caller a cache_handle to remember.
-    seq.unpersist()
-    out = state.select(
+    # operators/trend.holt_linear_state, shared with the NL planner's
+    # trend path.
+    state = holt_linear_state(
+        series,
         "event_type",
-        F.explode(F.sequence(F.lit(1), F.lit(_HOLT_H))).alias("h"),
-        "l",
-        "b",
-    ).select(
-        "event_type",
-        F.col("h").cast("int").alias("h"),
-        (F.round(F.col("l"), 6) + F.lit(0.0)).alias("level"),
-        (F.round(F.col("b"), 6) + F.lit(0.0)).alias("trend"),
-        (F.round(F.col("l") + F.col("h") * F.col("b"), 6) + F.lit(0.0)).alias(
-            "forecast"
-        ),
+        _HOLT_T,
+        alpha=_HOLT_ALPHA,
+        beta=_HOLT_BETA,
+        series_desc="days",
     )
-    return out
+    rows = [
+        (event_type, h, round6(l), round6(b), round6(l + h * b))
+        for event_type, (l, b) in state.items()
+        for h in range(1, _HOLT_H + 1)
+    ]
+    return local_relation(
+        spark,
+        rows,
+        f"event_type {daily.schema['event_type'].dataType.simpleString()}, "
+        "h int, level double, trend double, forecast double",
+    )
 
 
 @register(

@@ -128,6 +128,8 @@ def _sql_string(v) -> str:
     # Backslash escapes, as the default parser reads them; "$" as well,
     # so no value can read as a ${var} substitution. str() of a float
     # is its shortest round-trip repr, so the cast back is exact.
+    if v is None:
+        return "NULL"
     text = str(v).replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
     return f"'{text}'"
 
@@ -136,16 +138,20 @@ def local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataF
     """``spark.createDataFrame(rows, schema)`` as one inline ``VALUES``
     query: a single driver call that plans as ``LocalTableScan``, so no
     Python worker ever reads the rows. ``schema`` is a DDL string; every
-    value is written as a string literal and cast to its column's type."""
+    value is written as a string literal (``None`` as NULL) and cast to
+    its column's type. No rows gives an empty relation of that schema."""
     fields = StructType.fromDDL(schema).fields
     cols = ", ".join(
         f"CAST(col{i} AS {f.dataType.simpleString()}) AS `{f.name}`"
         for i, f in enumerate(fields, 1)
     )
+    # VALUES needs at least one row: an empty relation filters out nulls.
+    where = "" if rows else " WHERE false"
     values = ", ".join(
-        "(" + ", ".join(_sql_string(v) for v in row) + ")" for row in rows
+        "(" + ", ".join(_sql_string(v) for v in row) + ")"
+        for row in rows or [(None,) * len(fields)]
     )
-    return spark.sql(f"SELECT {cols} FROM VALUES {values}")
+    return spark.sql(f"SELECT {cols} FROM VALUES {values}{where}")
 
 
 def _lcg(col, lo: float, hi: float):

@@ -11,9 +11,10 @@ mode builds each named query; SPARK_GRAFT_SF_DIR selects the data
 directory (default sf0.1 — the bench scale, where TRAIN_CAP stride
 engages, so the captured plan is the benched plan). ``--ask`` asks the
 questions of ``ASK_QUESTIONS`` (all of them, or the labels given) and
-captures the plan behind each answer; for a trend question it also
-writes <label>_series_<SUFFIX>.txt, the plan of the yearly series the
-Holt recursion reads (see ``trend_inputs``).
+captures the plan behind each answer; for a trend or anomaly question
+it also writes <label>_series_<SUFFIX>.txt, the plan of the series the
+question collects before finishing on the driver (see
+``series_inputs``).
 """
 from __future__ import annotations
 
@@ -66,27 +67,27 @@ def registry_plans(spark, names):
 
 
 @contextmanager
-def trend_inputs():
-    """Collect the series frames handed to ``holt_linear_state`` while
-    the block runs. A trend answer's final plan only scans the Holt
-    state, brought to the driver; the domain table is read in the plan
-    of the series frame."""
-    from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators import (
-        trend,
+def series_inputs():
+    """Collect the series frames a trend or anomaly question reads with
+    its one Spark action while the block runs. Such an answer's final
+    plan only scans rows computed on the driver; the domain table is
+    read in the plan of the series frame."""
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.nl import (
+        pipeline,
     )
 
     seen = []
-    original = trend.holt_linear_state
+    original = pipeline._collect_series
 
-    def spy(seq, *args, **kwargs):
-        seen.append(seq)
-        return original(seq, *args, **kwargs)
+    def spy(df):
+        seen.append(df)
+        return original(df)
 
-    trend.holt_linear_state = spy
+    pipeline._collect_series = spy
     try:
         yield seen
     finally:
-        trend.holt_linear_state = original
+        pipeline._collect_series = original
 
 
 def ask_plans(spark, labels):
@@ -96,7 +97,7 @@ def ask_plans(spark, labels):
 
     engine = ClimateEngine(spark)
     for label in labels or ASK_QUESTIONS:
-        with trend_inputs() as series:
+        with series_inputs() as series:
             result = engine.ask(ASK_QUESTIONS[label]).result
         yield label, explain(result)
         for seq in series:

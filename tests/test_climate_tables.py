@@ -19,7 +19,7 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.nl.pip
     ClimateEngine,
 )
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.sources import climate
-from scripts.capture_plans import ASK_QUESTIONS, explain, trend_inputs
+from scripts.capture_plans import ASK_QUESTIONS, explain, series_inputs
 
 # name -> (schema, rows, sum(xxhash64(*)) as decimal), taken from the
 # createDataFrame-built tables.
@@ -97,13 +97,13 @@ def _python_nodes(plan: str) -> list[str]:
 def test_ask_plan_runs_no_python(spark, engine, label):
     jsc = spark.sparkContext._jsc
     persisted = jsc.getPersistentRDDs().size()
-    with trend_inputs() as series:
+    with series_inputs() as series:
         plan = explain(engine.ask(ASK_QUESTIONS[label]).result)
     assert _python_nodes(plan) == []
     assert jsc.getPersistentRDDs().size() == persisted
-    # A trend answer plans over the Holt state brought to the driver;
-    # the domain table is read by the series frame the recursion gets.
-    assert len(series) == label.startswith("trend_")
+    # A trend or anomaly answer plans over rows computed on the driver;
+    # the domain table is read by the series frame the question collects.
+    assert len(series) == label.startswith(("trend_", "anomaly_"))
     assert all(_python_nodes(explain(seq)) == [] for seq in series)
 
 

@@ -582,3 +582,21 @@ def test_write_excel_roundtrip_hostile_cells(spark, tmp_path):
     }
     with pytest.raises(ValueError, match="sheet name"):
         write_excel(df, str(tmp_path / "b.xlsx"), sheet_name="a/b")
+
+
+@pytest.mark.parametrize(
+    "name", ["sqlite_roundtrip", "excel_roundtrip", "netcdf_roundtrip", "netcdf4_roundtrip"]
+)
+def test_file_sink_roundtrip_from_fresh_directory(spark, sf_small, tmp_path, monkeypatch, name):
+    """The file-sink round trips write under ./spark-warehouse/ and must
+    create it: the sqlite, Excel and netCDF writers open a file there and
+    do not make parent directories."""
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
+        all_queries,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    assert not (tmp_path / "spark-warehouse").exists()
+    rows = all_queries()[name].builder(spark, sf_small).collect()
+    assert rows
+    assert (tmp_path / "spark-warehouse").is_dir()
