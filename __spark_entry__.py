@@ -16,6 +16,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -433,55 +436,30 @@ def _ordered_queries():
     return {q.name: q for q in head + mid + tail}
 
 
-# The driver never releases the persisted/checkpointed frames some
-# pipelines attach as cache_handles (curation DAGs, MinHash,
-# connected components). Release them POST-materialization: the
-# returned frame's collect/count/toPandas is wrapped so the first
-# materialization frees the handles in a finally. That ordering
-# matters for localCheckpoint handles — lineage is truncated, so
-# freeing before the driver materializes (e.g. the old
-# release-on-next-builder scheme) would make the result
-# unrecomputable if the driver ever built several queries before
-# collecting any. A builder-entry sweep remains as a fallback for
-# results the driver builds but never materializes.
-_LIVE_HANDLES: list = []
-
-
-def _drain(handles: list) -> None:
-    while handles:
-        try:
-            handles.pop().unpersist()
-        except Exception:
-            pass
+# The driver never calls release() on what a builder holds, so each
+# result's collect/count/toPandas is wrapped to release it after the
+# first materialization. Releasing later, not at build time, matters for
+# checkpoint handles: their lineage is truncated, so a result freed
+# before it runs could not be recomputed. A result the driver builds but
+# never materializes is released when the next builder is called.
+_UNRELEASED: list[DataFrame] = []
 
 
 def _releasing(builder: Callable[[SparkSession, str], DataFrame]):
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _drain(_LIVE_HANDLES)  # fallback: prior result never materialized
+        while _UNRELEASED:
+            release(_UNRELEASED.pop())
         df = builder(spark, sf_dir)
-        handles = list(getattr(df, "cache_handles", []))
-        single = getattr(df, "cache_handle", None)
-        if single is not None:
-            handles.append(single)
-        if handles:
-            _LIVE_HANDLES.extend(handles)
-            for meth in ("collect", "count", "toPandas"):
-                orig = getattr(df, meth)
+        _UNRELEASED.append(df)
+        for meth in ("collect", "count", "toPandas"):
 
-                def releasing_call(*a, _orig=orig, **kw):
-                    try:
-                        return _orig(*a, **kw)
-                    finally:
-                        # identity-based removal: handles may be
-                        # DataFrames, whose __eq__ is not boolean
-                        _LIVE_HANDLES[:] = [
-                            h
-                            for h in _LIVE_HANDLES
-                            if all(h is not x for x in handles)
-                        ]
-                        _drain(handles)
+            def releasing_call(*a, _orig=getattr(df, meth), **kw):
+                try:
+                    return _orig(*a, **kw)
+                finally:
+                    release(df)
 
-                setattr(df, meth, releasing_call)
+            setattr(df, meth, releasing_call)
         return df
 
     return wrapped

@@ -17,6 +17,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -336,13 +339,8 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
         dt = round(time.perf_counter() - t0, 3)
         timings[name] = min(timings.get(name, dt), dt)
-        # Release per-run persisted frames (curation DAGs, MinHash) so
-        # repeated passes don't stack stale cache entries.
-        for handle in getattr(df, "cache_handles", []):
-            handle.unpersist()
-        single = getattr(df, "cache_handle", None)
-        if single is not None:
-            single.unpersist()
+        # Repeated passes must not stack stale cache entries.
+        release(df)
 
     # DRIFT SENTINEL (VERDICT r14 ask #5): this host's throughput
     # drifts 7-26% between phases of a session, which keeps forcing
@@ -360,14 +358,9 @@ def main() -> None:
             df = registry[name].builder(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
             out[name] = round(time.perf_counter() - t0, 3)
-            # Mirror run_once's handle release so a future handle-
-            # attaching SENTINEL query can't leak persisted frames
-            # into the timed bench region.
-            for handle in getattr(df, "cache_handles", []):
-                handle.unpersist()
-            single = getattr(df, "cache_handle", None)
-            if single is not None:
-                single.unpersist()
+            # A SENTINEL query that persists must not leak into the
+            # timed bench region.
+            release(df)
         return out
 
     # Warm the sentinel plans (codegen + table touch) so the START

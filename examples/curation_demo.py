@@ -17,6 +17,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -59,11 +62,7 @@ def main() -> None:
     for label, name in STEPS:
         df = registry[name].builder(spark, sf_dir)
         n = df.count()
-        for h in getattr(df, "cache_handles", []):
-            h.unpersist()
-        single = getattr(df, "cache_handle", None)
-        if single is not None:
-            single.unpersist()
+        release(df)
         print(f"{label:28s} ({name}): {n} rows")
 
 

@@ -21,8 +21,8 @@ LLM-pipeline capability, same family as ``operators/similarity.py``):
 Scale notes: the assignment join broadcasts k x dim centroid cells
 and shuffles one (vec_id, cluster) scalar row per vector per cluster
 after map-side partial aggregation; the exploded vector frame is
-persisted once and reused by every iteration (released via the
-``cache_handles`` contract). No HOF lambdas in the hot path — the
+persisted once and reused by every iteration (handed to the caller
+with ``lifecycle.hold``). No HOF lambdas in the hot path — the
 explode/join/groupBy shape is fully codegen'd (see
 ``similarity.exploded_pairwise_cosine`` for the measured 3-8x HOF
 penalty this avoids).
@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lifecycle import hold, release
 from .similarity import exploded_pairwise_cosine
 
 
@@ -355,8 +356,7 @@ def kmeans_assign(
     --warm-start). Deterministic given the codebook; registry entries
     never pass it (plans stay byte-stable).
 
-    The returned frame carries ``cache_handles`` (the persisted
-    exploded-vector frame) for post-materialization release.
+    The returned frame holds the persisted training view.
     """
     from pyspark.sql import Window as W
 
@@ -400,7 +400,6 @@ def kmeans_assign(
         sample = _collect_train_sample(df, vec_col, id_col, train_stride)
         centroids = _kmeans_lloyd_driver(sample, k, n_iter)
         out = assign_final(centroids)
-        out.cache_handles = []
         out.centroids = centroids
         # The residual-PQ path re-reads the same hash sample; expose
         # it so one collect serves both trainings.
@@ -433,7 +432,7 @@ def kmeans_assign(
 
     # The per-iteration collect()s can fail mid-run (task loss, OOM);
     # release the persisted exploded frame on ANY exit that won't hand
-    # it to the caller via cache_handles — mirroring the finally-based
+    # it to the caller via hold — mirroring the finally-based
     # hygiene in graph.connected_components.
     try:
         # Seed centroids = the k lowest-id vectors, rounded through
@@ -494,11 +493,10 @@ def kmeans_assign(
     except BaseException:
         et.unpersist()
         raise
-    out.cache_handles = [et]
     # Final (cluster, dim, cval) rows — the coarse quantizer IVF-style
     # searches probe against (driver-held k x dim cells).
     out.centroids = centroids
-    return out
+    return hold(out, et)
 
 
 def kmeans_assign_balanced(
@@ -536,7 +534,7 @@ def kmeans_assign_balanced(
     # member sets, which are the bounded hot fraction by construction.
     cells = kmeans_assign(df, k, n_iter, vec_col, id_col,
                           train_stride=train_stride)
-    handles = list(cells.cache_handles)
+    subs = []
     assign_df = cells.select(id_col, "cluster", "dist2")
     centroids = {c: {} for c in {r[0] for r in cells.centroids}}
     for c, dim, val in cells.centroids:
@@ -586,7 +584,7 @@ def kmeans_assign_balanced(
                 members, 2, n_iter, vec_col, id_col,
                 seed_ids=[int(lo), int(far)] if far != lo else None,
             )
-            handles.extend(sub.cache_handles)
+            subs.append(sub)
             relabeled = sub.select(
                 F.col(id_col),
                 (F.col("cluster") + F.lit(next_id)).alias("cluster"),
@@ -616,8 +614,7 @@ def kmeans_assign_balanced(
         for c in sorted(centroids)
         for dim, val in sorted(centroids[c].items())
     ]
-    out.cache_handles = handles
-    return out
+    return hold(out, cells, *subs)
 
 
 def pq_assign(
@@ -649,7 +646,7 @@ def pq_assign(
     seeds per subspace, 6-dp rounding grid, lowest-code tie-break),
     so the full training trajectory is DuckDB-recomputable.
 
-    The returned frame carries ``cache_handles`` for release.
+    The returned frame holds its persisted training view.
     """
     spark = df.sparkSession
     # (sub, sdim) long form: dim // d_sub, dim % d_sub
@@ -679,16 +676,14 @@ def pq_assign(
         sample = _collect_train_sample(df, vec_col, id_col, train_stride)
         centroids = _pq_lloyd_driver(sample, k, n_iter, m)
         out = _pq_code(e, centroids, id_col, spark)
-        out.cache_handles = []
         out.centroids = centroids
         return out
     et = (
         e.repartition(spark.sparkContext.defaultParallelism, id_col).persist()
     )
     out, centroids = _pq_lloyd(e, et, id_col, k, n_iter, spark)
-    out.cache_handles = [et]
     out.centroids = centroids
-    return out
+    return hold(out, et)
 
 
 def _pq_code(
@@ -824,8 +819,7 @@ def pq_adc_topk(
         .orderBy("adc_dist2", id_col)
         .limit(topk)
     )
-    out.cache_handles = list(codes.cache_handles)
-    return out
+    return hold(out, codes)
 
 
 def _adc_lut(
@@ -854,6 +848,46 @@ def _adc_lut(
         _adc_lut_rows(centroids, qvec, d_sub),
         "sub int, code int, lut_d double",
     )
+
+
+def _train_cells_and_codes(
+    assign, df, n_cells, m, k, n_iter, vec_col, id_col, train_stride
+) -> tuple[DataFrame, DataFrame]:
+    """Train the coarse quantizer (``assign``) and the PQ codebook
+    side by side; returns (cells, codes).
+
+    The two trainings are independent until the search composes them.
+    Each one alternates Spark jobs (the training-sample collect, the
+    Lloyd rounds of an uncapped training) with driver-side work, so
+    from two threads one training's jobs run while the other waits or
+    computes. If either fails, the survivor's persisted state is
+    released before the error propagates.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(
+                assign, df, n_cells, n_iter, vec_col=vec_col, id_col=id_col,
+                train_stride=train_stride,
+            ),
+            pool.submit(
+                pq_assign, df, m, k, n_iter, vec_col, id_col, train_stride
+            ),
+        ]
+        done, errors = [], []
+        for f in futures:
+            try:
+                done.append(f.result())
+            except BaseException as e:  # noqa: BLE001 — raised below
+                errors.append(e)
+    if errors:
+        try:
+            for survivor in done:
+                release(survivor)
+        finally:
+            raise errors[0]
+    return done[0], done[1]
 
 
 def ivf_pq_topk(
@@ -892,44 +926,10 @@ def ivf_pq_topk(
     # contract, so the probe/semi-join pipeline is identical; pair it
     # with a proportionally larger nprobe to hold scan share
     # constant. The oracled registry path keeps the plain quantizer.
-    # Round-17 (guide §2.6 "overlap independent jobs"): the coarse
-    # k-means and the PQ codebook trainings read the same input and
-    # are independent until the search composition, but each is a
-    # chain of driver-blocking collects — run them from two driver
-    # threads so one training's Lloyd round-trips back-fill the
-    # other's idle executors. Results are unchanged (two independent
-    # deterministic computations; only job interleaving moves).
-    from concurrent.futures import ThreadPoolExecutor
-
-    assign = kmeans_assign_balanced if balanced else kmeans_assign
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cells = pool.submit(
-            assign, df, n_cells, n_iter, vec_col=vec_col, id_col=id_col,
-            train_stride=train_stride,
-        )
-        f_codes = pool.submit(
-            pq_assign, df, m, k, n_iter, vec_col, id_col, train_stride
-        )
-        cells_exc = codes_exc = None
-        try:
-            cells = f_cells.result()
-        except BaseException as e:  # noqa: BLE001 — release sibling below
-            cells_exc, cells = e, None
-        try:
-            codes = f_codes.result()
-        except BaseException as e:  # noqa: BLE001
-            codes_exc, codes = e, None
-    if cells_exc is not None or codes_exc is not None:
-        # One half failed: release the survivor's training persist
-        # before propagating (the kmeans/PQ internal hygiene only
-        # covers their OWN failure).
-        for ok in (cells, codes):
-            for h in getattr(ok, "cache_handles", []) if ok is not None else []:
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
-        raise cells_exc or codes_exc
+    cells, codes = _train_cells_and_codes(
+        kmeans_assign_balanced if balanced else kmeans_assign,
+        df, n_cells, m, k, n_iter, vec_col, id_col, train_stride,
+    )
     # Round-17: the cell probe runs ON THE DRIVER (guide §2.4) — the
     # trained centroids are already a driver-held k x dim list, so
     # only the one query row is collected; the probed-cell set becomes
@@ -953,8 +953,7 @@ def ivf_pq_topk(
         .orderBy("adc_dist2", id_col)
         .limit(topk)
     )
-    out.cache_handles = list(cells.cache_handles) + list(codes.cache_handles)
-    return out
+    return hold(out, cells, codes)
 
 
 def ivf_pq_rerank_topk(
@@ -1014,8 +1013,7 @@ def ivf_pq_rerank_topk(
         .orderBy("dist2", id_col)
         .limit(topk)
     )
-    out.cache_handles = list(short.cache_handles)
-    return out
+    return hold(out, short)
 
 
 def kmeans_code_frozen(
@@ -1047,8 +1045,8 @@ def kmeans_code_frozen(
     be globally nearer to another parent's child). Coding is
     codebook-defined, training is trajectory-defined; only the plain
     quantizer's trajectory ends at the flat rule. Returns (id, cluster, dist2)
-    with ``centroids`` re-attached (the frozen list, unchanged) and
-    an empty ``cache_handles`` (single-scan plan: nothing persisted).
+    with ``centroids`` re-attached (the frozen list, unchanged);
+    single-scan plan, nothing persisted.
     """
     spark = df.sparkSession
     cent = spark.createDataFrame(
@@ -1074,7 +1072,6 @@ def kmeans_code_frozen(
         .agg(F.min(F.struct("dist2", "cluster")).alias("m"))
         .select(id_col, F.col("m.cluster").alias("cluster"), F.col("m.dist2").alias("dist2"))
     )
-    out.cache_handles = []
     out.centroids = [(int(c), int(d), float(v)) for c, d, v in centroids]
     return out
 
@@ -1094,7 +1091,7 @@ def pq_code_frozen(
     as :func:`_pq_lloyd`'s final assignment, so coding a corpus
     against its own trained codebook reproduces the training
     assignment row-for-row. Returns (id, sub, code, dist2) with
-    ``centroids`` re-attached and empty ``cache_handles``."""
+    ``centroids`` re-attached; nothing persisted."""
     spark = df.sparkSession
     first = df.select(F.size(vec_col).alias("d")).first()
     dim = int(first["d"])
@@ -1134,7 +1131,6 @@ def pq_code_frozen(
             F.col("mn.dist2").alias("dist2"),
         )
     )
-    out.cache_handles = []
     out.centroids = [(int(c), int(s), int(sd), float(v)) for c, s, sd, v in centroids]
     return out
 
@@ -1249,7 +1245,6 @@ def codebook_churn_flows(
         )
         .orderBy("cluster_old", "cluster_new")
     )
-    out.cache_handles = []
     return out
 
 
@@ -1393,70 +1388,12 @@ def ivf_pq_batch_topk(
     from pyspark.sql import Window as W
 
     spark = df.sparkSession
-    # balanced=True swaps in the hot-list-splitting quantizer — same
-    # (id, cluster) + centroids contract, so the probe/candidate
-    # pipeline is identical (the single-query entries' composition,
-    # now available to the batch call path; registry defaults keep
-    # the plain quantizer so plans stay byte-stable).
-    if coarse_index is not None:
-        cells = kmeans_code_frozen(df, coarse_index, vec_col=vec_col, id_col=id_col)
-        codes_pretrained = None
-    else:
-        assign = kmeans_assign_balanced if balanced else kmeans_assign
-        if pq_index is None:
-            # Round-17 (guide §2.6): when BOTH halves train, the two
-            # independent Lloyd chains run from two driver threads so
-            # each training's collect latency back-fills the other's
-            # executors (see ivf_pq_topk). Frozen halves are lazy
-            # coding scans — nothing to overlap.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_cells = pool.submit(
-                    assign, df, n_cells, n_iter, vec_col=vec_col,
-                    id_col=id_col, train_stride=train_stride,
-                )
-                f_codes = pool.submit(
-                    pq_assign, df, m, k, n_iter, vec_col, id_col,
-                    train_stride,
-                )
-                cells_exc = codes_exc = None
-                try:
-                    cells = f_cells.result()
-                except BaseException as e:  # noqa: BLE001
-                    cells_exc, cells = e, None
-                try:
-                    codes_pretrained = f_codes.result()
-                except BaseException as e:  # noqa: BLE001
-                    codes_exc, codes_pretrained = e, None
-            if cells_exc is not None or codes_exc is not None:
-                for ok in (cells, codes_pretrained):
-                    handles = getattr(ok, "cache_handles", []) if ok is not None else []
-                    for h in handles:
-                        try:
-                            h.unpersist()
-                        except Exception:
-                            pass
-                raise cells_exc or codes_exc
-        else:
-            cells = assign(
-                df, n_cells, n_iter, vec_col=vec_col, id_col=id_col,
-                train_stride=train_stride,
-            )
-            codes_pretrained = None
-    if nprobe_scale_with_split and balanced:
-        realized = len({c for c, _, _ in cells.centroids})
-        nprobe = effective_nprobe(nprobe, n_cells, realized)
-
-    # Round-17: the query MATRIX is collected once (Q bounded rows —
-    # FAISS's search(xq, k) holds it in memory too), and the per-query
-    # probes and LUTs are computed ON THE DRIVER from the already-
-    # driver-held codebooks (guide §2.4), becoming broadcast-sized
-    # local relations: Q x nprobe probe rows, Q x m x k LUT rows —
-    # exactly the sizes the former scan+join+aggregate sub-plans
-    # produced, minus their stages. Probe ranking (d2, cluster) and
-    # the 6-dp grid are unchanged (:func:`_probe_clusters`,
-    # :func:`_adc_lut_rows`).
+    # The query matrix is collected once (Q bounded rows; FAISS's
+    # search(xq, k) holds it in memory too). Per-query probes and LUTs
+    # are then computed on the driver from the driver-held codebooks
+    # (:func:`_probe_clusters`, :func:`_adc_lut_rows`) and become
+    # broadcast-sized local relations: Q x nprobe probe rows and
+    # Q x m x k LUT rows.
     qrows = (
         df.filter(F.col(id_col).isin([int(q) for q in query_ids]))
         if query_ids is not None
@@ -1464,13 +1401,37 @@ def ivf_pq_batch_topk(
     ).select(F.col(id_col), F.col(vec_col)).collect()
     qmap = {int(r[0]): [float(v) for v in r[1]] for r in qrows}
     if not qmap:
-        # ADVICE r17: an empty resolved query set (query_ids matching
-        # no rows) must not crash in next(iter(...)) — fail loudly
-        # with the cause instead.
+        # Fail with the cause, and before training persists anything.
         raise ValueError(
             "ivf_pq_batch_topk: no query rows resolved "
             f"(query_ids={query_ids!r}, n_queries={n_queries})"
         )
+    # balanced=True swaps in the hot-list-splitting quantizer — same
+    # (id, cluster) + centroids contract, so the probe/candidate
+    # pipeline is identical (the single-query entries' composition,
+    # now available to the batch call path; registry defaults keep
+    # the plain quantizer so plans stay byte-stable).
+    assign = kmeans_assign_balanced if balanced else kmeans_assign
+    if coarse_index is None and pq_index is None:
+        cells, codes = _train_cells_and_codes(
+            assign, df, n_cells, m, k, n_iter, vec_col, id_col, train_stride
+        )
+    else:  # a frozen half is a lazy coding scan: nothing to overlap
+        cells = (
+            kmeans_code_frozen(df, coarse_index, vec_col=vec_col, id_col=id_col)
+            if coarse_index is not None
+            else assign(df, n_cells, n_iter, vec_col=vec_col, id_col=id_col,
+                        train_stride=train_stride)
+        )
+        codes = (
+            pq_code_frozen(df, pq_index, m, vec_col=vec_col, id_col=id_col)
+            if pq_index is not None
+            else pq_assign(df, m, k, n_iter, vec_col, id_col, train_stride)
+        )
+    if nprobe_scale_with_split and balanced:
+        realized = len({c for c, _, _ in cells.centroids})
+        nprobe = effective_nprobe(nprobe, n_cells, realized)
+
     d_sub = len(next(iter(qmap.values()))) // m
     probe_rows = [
         (q, int(c))
@@ -1484,12 +1445,6 @@ def ivf_pq_batch_topk(
         .filter(F.col(id_col) != F.col("q_id"))
         .select("q_id", id_col)
     )
-    if pq_index is not None:
-        codes = pq_code_frozen(df, pq_index, m, vec_col=vec_col, id_col=id_col)
-    elif codes_pretrained is not None:
-        codes = codes_pretrained
-    else:
-        codes = pq_assign(df, m, k, n_iter, vec_col, id_col, train_stride)
     # Batched LUT: Q x m x k rows, still broadcast-sized.
     lut_rows = [
         (q, sub, code, lut_d)
@@ -1526,8 +1481,7 @@ def ivf_pq_batch_topk(
         .select("q_id", id_col, "adc_dist2")
         .orderBy("q_id", "adc_dist2", id_col)
     )
-    out.cache_handles = list(cells.cache_handles) + list(codes.cache_handles)
-    return out
+    return hold(out, cells, codes)
 
 
 def ivf_pq_batch_rerank_topk(
@@ -1644,8 +1598,7 @@ def ivf_pq_batch_rerank_topk(
         .select("q_id", id_col, "dist2")
         .orderBy("q_id", "dist2", id_col)
     )
-    out.cache_handles = list(short.cache_handles)
-    return out
+    return hold(out, short)
 
 
 def ivf_residual_pq_topk(
@@ -1777,10 +1730,7 @@ def ivf_residual_pq_topk(
         .orderBy("adc_dist2", id_col)
         .limit(topk)
     )
-    out.cache_handles = list(cells.cache_handles) + [cells_asg] + (
-        [rt] if rt is not None else []
-    )
-    return out
+    return hold(out, cells, cells_asg, rt)
 
 
 def semantic_dedup(
@@ -1845,5 +1795,4 @@ def semantic_dedup(
             F.col("is_dup").isNull().cast("int").alias("is_kept"),
         )
     )
-    out.cache_handles = list(getattr(assign, "cache_handles", [])) + [asg]
-    return out
+    return hold(out, assign, asg)

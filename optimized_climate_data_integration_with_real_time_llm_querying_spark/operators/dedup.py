@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lifecycle import hold
 from .text import normalize_text, tokens
 
 
@@ -662,11 +663,9 @@ def minhash_near_duplicates(
     column pruning would otherwise specialize the two branches into
     different aggregates that ReuseExchange can't unify.
 
-    Cache contract: the persisted frame stays pinned until released —
-    the returned DataFrame carries it as ``result.cache_handle``;
-    long-lived callers should ``result.cache_handle.unpersist()``
-    after materializing the result (one-shot batch jobs can let the
-    app teardown reclaim it).
+    The persisted frame stays pinned until the caller runs
+    ``lifecycle.release`` on the result (one-shot batch jobs can let
+    the app teardown reclaim it).
 
     Shingles are pre-hashed to 8-byte longs, so the signature mins,
     the persisted collect_set, and the array_intersect verify all
@@ -702,8 +701,7 @@ def minhash_near_duplicates(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
-    result.cache_handle = combined
-    return result
+    return hold(result, combined)
 
 
 def minhash_index(
@@ -758,8 +756,8 @@ def incremental_minhash_near_duplicates(
     tests/test_incremental_dedup.py and by the registered query's
     DuckDB oracle.
 
-    Cache contract: the returned frame carries the persisted
-    new-batch combined aggregate as ``result.cache_handle``.
+    The result holds the persisted new-batch combined aggregate and
+    candidate frames.
     """
     sh_fn = hashed_shingles if hash_family is F.xxhash64 else shingles
     # One shingling pass over the NEW batch feeds both its signatures
@@ -851,8 +849,7 @@ def incremental_minhash_near_duplicates(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
-    result.cache_handles = [new_combined, union, cands]
-    return result
+    return hold(result, new_combined, union, cands)
 
 
 def minhash_jaccard_estimates(
@@ -880,8 +877,7 @@ def minhash_jaccard_estimates(
     ``hash_family=md5_hash64`` the whole audit — signatures, bands,
     candidates, estimates, exact sets — is DuckDB-recomputable.
 
-    Cache contract: the returned frame carries the persisted combined
-    aggregate as ``result.cache_handle``; release after materializing.
+    The result holds the persisted combined aggregate.
     """
     sh_fn = hashed_shingles if hash_family is F.xxhash64 else shingles
     sh = sh_fn(df, text_col, id_col, k, distinct=False)
@@ -921,8 +917,7 @@ def minhash_jaccard_estimates(
             F.round(F.abs(est_raw - exact_raw), 6).alias("abs_err"),
         )
     )
-    result.cache_handle = combined
-    return result
+    return hold(result, combined)
 
 
 # --------------------------------------------------------------------------
@@ -999,8 +994,7 @@ def char_ngram_dup_profile(
             ).alias("dup_frac"),
         )
     )
-    out.cache_handles = [g]
-    return out
+    return hold(out, g)
 
 
 # --------------------------------------------------------------------------

@@ -22,22 +22,10 @@ Lineage discipline: each round's labels frame is
 nested plan Catalyst re-optimizes in full every round (a round-9 A/B
 on dedup_clusters: 4.1 s checkpointed vs 14.1 s persisted).
 
-Resource hygiene, all public API: the symmetrized edge frame is an
-eager localCheckpoint (round 17: lineage truncation on the EDGE side
-too — a persist caches rows but every iteration still re-analyzes the
-embedded near-dup lineage) released through the same handle contract;
-superseded label checkpoints are released by
-DROPPING their last Python reference — CPython refcounting detaches
-the py4j handle promptly, and Spark's ContextCleaner
-(referenceTracking, on by default) then unpersists the checkpointed
-RDD's blocks asynchronously. The *final* labels checkpoint travels as
-a ``cache_handles`` release handle whose ``unpersist()`` does the
-same reference drop, so long-lived callers (the bench loop, the
-parity fixture) trigger reclamation after materializing. Release is
-near-prompt rather than synchronous; the frames are (node, label)
-pairs, orders of magnitude smaller than the corpus, so transiently
-overlapping generations are cheap — the trade that removes the
-version-fragile private-API block release this module used before.
+Superseded label checkpoints are released by dropping their last
+Python reference; Spark's ContextCleaner then reclaims their blocks.
+The final labels and the symmetrized edges are handed to the caller
+through ``lifecycle.hold`` (see ``lifecycle.CheckpointHandle``).
 
 At 100 TB the edge list (near-dup pairs) is orders of magnitude
 smaller than the corpus, labels are two longs per node, and every
@@ -50,52 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-class _CheckpointHandle:
-    """Release handle for a localCheckpoint'ed DataFrame, shaped like
-    a persisted frame (``.unpersist()``) so it rides the existing
-    ``cache_handles`` contract that bench.run_once / the parity
-    fixture already release after materialization. ``unpersist``
-    drops this handle's reference, forces a Python GC pass so the
-    py4j side detaches promptly, and then issues ONE advisory
-    ``System.gc()`` through the gateway so the ContextCleaner acts
-    now rather than at the next heap-pressure GC (ADVICE r9; the
-    former reach-in through the JVM query-execution internals stays
-    gone — VERDICT r8 item 4 — this is a try/except-guarded advisory
-    call, not plan or RDD surgery). Honest semantics: the
-    blocks become RECLAIMABLE (by the ContextCleaner on a later
-    driver JVM GC) only once the caller has ALSO dropped the result
-    frame, whose plan references the checkpointed RDD — release is
-    deferred, not synchronous. Bounded exposure: label frames are
-    (node, label) pairs, orders of magnitude smaller than the
-    corpus, and the harnesses that call unpersist() discard the
-    result frame in the same breath."""
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-
-    def unpersist(self) -> None:
-        import gc
-
-        df = self._df
-        self._df = None
-        if df is None:  # idempotent: second unpersist is a no-op
-            return
-        sc = df.sparkSession.sparkContext
-        df = None
-        gc.collect()  # enqueue the py4j finalizer detach for the handle
-        try:
-            # Best-effort prompt reclamation (ADVICE r9): the
-            # ContextCleaner only notices the detached checkpoint on a
-            # driver JVM GC, and a long-lived loop whose heap never
-            # pressures one could transiently accumulate label blocks.
-            # One advisory System.gc() through the gateway also
-            # flushes the queued py4j detach commands. Swallow
-            # failures — reclamation then simply stays lazy, which is
-            # the documented fallback semantics.
-            sc._jvm.System.gc()
-        except Exception:
-            pass
+from ..lifecycle import CheckpointHandle, hold
 
 
 def connected_components(
@@ -108,10 +51,8 @@ def connected_components(
     component id is the minimum node id reachable through the
     undirected pair graph.
 
-    The returned frame is localCheckpoint-backed; it carries a
-    ``cache_handles`` list whose entries' ``unpersist()`` drops the
-    checkpoint reference so the ContextCleaner reclaims its blocks
-    once the caller has materialized its result (see module doc).
+    The returned frame is localCheckpoint-backed and holds its
+    checkpoints for ``lifecycle.release`` (see module doc).
 
     Raises if the loop hasn't converged after ``max_iterations`` —
     propagation moves the min along at least one hop per round, so
@@ -200,12 +141,10 @@ def connected_components(
         new_labels = None
         sym = None
         raise
-    # Strip the probe flag; the release handles stay bound to the
-    # underlying checkpointed frames (sym included — the final labels
-    # plan no longer references it, but release symmetry is free).
+    # Strip the probe flag; the handles stay bound to the checkpointed
+    # frames themselves.
     out = labels.select("node", "component")
-    out.cache_handles = [_CheckpointHandle(labels), _CheckpointHandle(sym)]
-    return out
+    return hold(out, CheckpointHandle(labels), CheckpointHandle(sym))
 
 
 def dedup_cluster_assignments(
@@ -225,8 +164,7 @@ def dedup_cluster_assignments(
     unknown id can never become a cluster representative — without
     the guard, a component min falling outside ``docs`` would yield a
     cluster where no row has ``is_kept`` and a size that counts docs
-    only. The returned frame forwards the component checkpoint's
-    ``cache_handles`` for post-materialization release.
+    only. The returned frame holds the component checkpoints.
     """
     doc_ids = docs.select(F.col(id_col))
     bounded = pairs.join(
@@ -250,8 +188,7 @@ def dedup_cluster_assignments(
             (F.col(id_col) == F.col("cluster_id")).alias("is_kept"),
         )
     )
-    out.cache_handles = list(getattr(comp, "cache_handles", []))
-    return out
+    return hold(out, comp)
 
 
 def pagerank(
@@ -272,7 +209,7 @@ def pagerank(
     dangling-mass term. Each iteration is one equi-join on the edge
     key + one (dst) aggregate; the shuffle carries (node, scalar)
     rows, never adjacency lists, and the symmetrized edge frame is
-    checkpointed once (returned via ``cache_handles``).
+    checkpointed once and held by the result.
     """
     # Symmetrize with ONE scan of the edge frame: a union of two
     # selects would evaluate the (often expensive — e.g. an n-gram
@@ -326,5 +263,4 @@ def pagerank(
                 ).alias("pr"),
             )
         )
-    pr.cache_handles = [_CheckpointHandle(sym)]
-    return pr
+    return hold(pr, CheckpointHandle(sym))

@@ -262,7 +262,6 @@ def ivf_list_stats(spark: SparkSession, path: str, m: int = 8) -> DataFrame:
         if total
         else 0.0
     )
-    out.cache_handles = []
     return out
 
 
@@ -387,7 +386,6 @@ def search_ivf_index(
         .select("q_id", id_col, "adc_dist2")
         .orderBy("q_id", "adc_dist2", id_col)
     )
-    out.cache_handles = []
     return out
 
 
@@ -466,5 +464,4 @@ def search_ivf_index_rerank(
         .select("q_id", id_col, "dist2")
         .orderBy("q_id", "dist2", id_col)
     )
-    out.cache_handles = []
     return out

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..lifecycle import hold
+
 
 def winnow_fingerprints(
     df: DataFrame,
@@ -146,9 +148,7 @@ def winnow_match_pairs(
     The fingerprint frame feeds the df-cap aggregate AND both sides
     of the self-join, so it is persisted once (MEMORY_AND_DISK —
     spills, never OOMs) instead of re-running the gram explode +
-    window selection per consumer. Cache contract: the persisted
-    frame travels as ``result.cache_handle``; release after
-    materializing (bench/driver/parity fixtures all do).
+    window selection per consumer; the result holds it.
     """
     fps_all = (
         winnow_fingerprints(df, text_col, id_col, k, window, hash_family)
@@ -174,5 +174,4 @@ def winnow_match_pairs(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    result.cache_handle = fps_all
-    return result
+    return hold(result, fps_all)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..catalog import load_table
+from ..lifecycle import hold
 from . import register
 
 
@@ -609,8 +610,7 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out.cache_handles = list(getattr(comp, "cache_handles", []))
-    return out
+    return hold(out, comp)
 
 
 @register(

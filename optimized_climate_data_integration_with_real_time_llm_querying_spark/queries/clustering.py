@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..lifecycle import hold
 from ..operators.clustering import kmeans_assign, semantic_dedup
 from . import register
 
@@ -801,14 +802,12 @@ def ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
         m=PQ_M, k=PQ_K, n_iter=PQ_ITER, topk=10,
         train_stride=_train_stride(emb),
     )
-    handles = list(approx.cache_handles)
     out = (
         approx.select("vec_id")
         .join(exact, "vec_id", "left_semi")
         .agg(F.round(F.count(F.lit(1)) / F.lit(10.0), 6).alias("recall_at_10"))
     )
-    out.cache_handles = handles
-    return out
+    return hold(out, approx)
 
 
 BATCH_Q = 8
@@ -1025,7 +1024,6 @@ def _batch_recall_eval(emb: DataFrame) -> DataFrame:
         m=PQ_M, k=PQ_K, n_iter=PQ_ITER, topk=10,
         train_stride=_train_stride(emb),
     )
-    handles = list(approx.cache_handles)
     out = (
         approx.select("q_id", "vec_id")
         .join(F.broadcast(exact), ["q_id", "vec_id"], "left")
@@ -1037,8 +1035,7 @@ def _batch_recall_eval(emb: DataFrame) -> DataFrame:
         )
         .orderBy("q_id")
     )
-    out.cache_handles = handles
-    return out
+    return hold(out, approx)
 
 
 _EVAL_SAMPLE_SALT = "esamp"

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..lifecycle import hold
 from ..operators import text
 from ..operators.skew import salted_sum_count
 from ..plans import QuerySpec, compile_spec
@@ -151,10 +152,7 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clean, _ = dedup.decontaminate(deduped, heldout)
     out = chunk_spans(clean, chunk_tokens=64, overlap=16)
-    # Cache contract (same as minhash_near_duplicates): long-lived
-    # callers unpersist these after materializing the result.
-    out.cache_handles = [uniq, near.cache_handle]
-    return out
+    return hold(out, uniq, near)
 
 
 @register(
@@ -244,13 +242,11 @@ def curation_end_to_end_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 97 != 0)
     gated = corpus.filter(quality_features("text")["alpha_ratio"] >= 0.5)
     # uniq feeds both the decontamination shingling and the final
-    # anti-join; persist to run the dedup prefix once (see
-    # curation_end_to_end for the cache contract).
+    # anti-join; persist to run the dedup prefix once.
     uniq = dedup.drop_exact_duplicates(gated).persist()
     clean, _ = dedup.decontaminate(uniq, heldout)
     out = chunk_spans(clean, chunk_tokens=64, overlap=16)
-    out.cache_handles = [uniq]
-    return out
+    return hold(out, uniq)
 
 
 @register(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..lifecycle import hold
 from ..operators import dedup
 from ..operators.graph import dedup_cluster_assignments
 from ..operators.text import tokens
@@ -90,13 +91,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel = out.select(
         "doc_id", "cluster_id", "cluster_size", F.col("is_kept").cast("int").alias("is_kept")
     )
-    # Forward the component checkpoint's release handles so callers
-    # (bench.run_once, the parity fixture, the driver adapter) free
-    # the checkpointed blocks after materializing.
-    sel.cache_handles = list(getattr(out, "cache_handles", [])) + list(
-        getattr(pairs, "cache_handles", [])
-    )
-    return sel
+    return hold(sel, out)
 
 
 _PAIR_GRAPH_CTE = r"""
@@ -195,10 +190,7 @@ def similarity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.ngram_jaccard_pairs(d, k=3, min_jaccard=0.6, max_shingle_df=100)
     pr = pagerank(pairs, d=0.85, n_iter=3)
     out = pr.select(F.col("node").alias("doc_id"), F.col("pr").alias("pagerank"))
-    out.cache_handles = list(pr.cache_handles) + list(
-        getattr(pairs, "cache_handles", [])
-    )
-    return out
+    return hold(out, pr)
 
 
 @register(
@@ -258,10 +250,7 @@ def cluster_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cluster_size").cast("long").alias("cluster_size"),
         F.row_number().over(w).cast("int").alias("rnk"),
     ).withColumn("kept", (F.col("rnk") <= 2).cast("int"))
-    sel.cache_handles = list(getattr(out, "cache_handles", [])) + list(
-        getattr(pairs, "cache_handles", [])
-    )
-    return sel
+    return hold(sel, out)
 
 
 _WP_ROUNDS, _WP_VOCAB_K, _WP_MAX_SUB = 12, 50, 6
@@ -443,8 +432,7 @@ def wordpiece_greedy_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sg.piece_idx").alias("piece_idx"),
         F.col("sg.piece").alias("piece"),
     )
-    out.cache_handles = [words]
-    return out
+    return hold(out, words)
 
 
 @register(
@@ -1061,8 +1049,7 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sym_idx").cast("long").alias("sym_idx"),
         F.ascii(F.expr("substring(w, sym_idx, 1)")).alias("token_id"),
     )
-    out.cache_handles = [words]
-    return out
+    return hold(out, words)
 
 
 @register(
@@ -1196,8 +1183,7 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "chars_per_token"
         ),
     )
-    out.cache_handles = [words]
-    return out
+    return hold(out, words)
 
 
 @register(
@@ -1378,7 +1364,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bucket"),
         )
     )
-    out.cache_handles = list(getattr(core, "cache_handles", []))
     return out
 
 
@@ -1505,7 +1490,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup.shingles(d, k=3, distinct=False)
     # The distinct (source, hash) frame feeds the size aggregate AND
     # both sides of the self-join: persist once instead of re-running
-    # tokenize+shingle+hash per consumer (cache_handle contract).
+    # tokenize+shingle+hash per consumer; the result holds it.
     s = (
         sh.join(d.select("doc_id", "source"), "doc_id")
         .select("source", dedup.md5_hash64(F.col("shingle")).alias("h"))
@@ -1535,8 +1520,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    result.cache_handle = s
-    return result
+    return hold(result, s)
 
 
 @register(
@@ -1844,7 +1828,7 @@ def tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = d.agg(F.count(F.lit(1)).alias("nd"))
     # The term-frequency frame feeds the df aggregate AND (via w) the
     # norm aggregate and both join sides: persist the expensive
-    # tokenize+shingle+count stage once (cache_handle contract).
+    # tokenize+shingle+count stage once; the result holds it.
     tf = sh.groupBy("doc_id", "tm").agg(F.count(F.lit(1)).alias("tf")).persist()
     dft = tf.groupBy("tm").agg(F.count(F.lit(1)).alias("dft"))
     w = (
@@ -1885,8 +1869,7 @@ def tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cosine"), "id_a", "id_b")
         .limit(20)
     )
-    result.cache_handle = tf
-    return result
+    return hold(result, tf)
 
 
 _TFIDF_SIMHASH_ORACLE = r"""
@@ -2084,8 +2067,7 @@ def tfidf_simhash_candidates(
     cand = dedup.simhash_band_candidates(
         sigs, id_col="doc_id", sig_col="simhash", n_bits=n_bits, n_bands=n_bands
     )
-    cand.cache_handles = [tf, w]
-    return cand
+    return hold(cand, tf, w)
 
 
 @register(
@@ -2151,8 +2133,7 @@ def tfidf_simhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cosine"), "id_a", "id_b")
         .limit(20)
     )
-    result.cache_handles = [tf, w]
-    return result
+    return hold(result, tf, w)
 
 
 # --------------------------------------------------------------------------
@@ -2518,8 +2499,7 @@ def unigram_lm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w_idx).cast("int").alias("piece_idx"),
         "piece",
     )
-    result.cache_handles = [words, seed, v0, v1]
-    return result
+    return hold(result, words, seed, v0, v1)
 
 
 @register(

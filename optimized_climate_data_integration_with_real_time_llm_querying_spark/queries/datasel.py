@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..catalog import load_table
+from ..lifecycle import hold
 from ..operators.text import tokens
 from . import register
 
@@ -144,8 +145,7 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Four consumers (target counts, raw counts, bucket grid, scorer)
     # would each re-run the tokenize+window pass; persist the compact
-    # (doc_id, lang, bucket) frame once. Released by the bench/driver
-    # adapters via cache_handles.
+    # (doc_id, lang, bucket) frame once; the result holds it.
     bg = bg.persist()
     tgt = bg.filter(F.col("lang") == "en").groupBy("bucket").agg(
         F.count(F.lit(1)).alias("tc")
@@ -186,8 +186,7 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = scored.orderBy(F.desc("logw"), "doc_id").limit(100)
-    out.cache_handles = [bg]
-    return out
+    return hold(out, bg)
 
 
 @register(
@@ -288,8 +287,7 @@ def kneser_ney_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(-F.avg("logp"), 4).alias("kn_neg_logp"),
         )
     )
-    out.cache_handles = [c2]
-    return out
+    return hold(out, c2)
 
 
 _LR_DIMS = ["x0", "x1", "x2", "x3"]
@@ -413,14 +411,13 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(p, 4).alias("p_en"),
         (p >= 0.5).cast("int").alias("pred"),
     )
-    out.cache_handles = [feats]
-    return out
+    return hold(out, feats)
 
 
 def _train_lr(spark: SparkSession, sf_dir: str):
     """Shared training loop: persisted feature frame + the 8-round
-    GD trajectory. Returns (feats, final_weights); the CALLER owns
-    releasing feats (attach it as a cache_handle)."""
+    GD trajectory. Returns (feats, final_weights); the caller holds
+    feats on its result."""
     d = load_table(spark, sf_dir, "documents", rebalance=True).filter(
         F.trim(F.col("text")) != ""
     )
@@ -490,8 +487,7 @@ def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out.cache_handles = [feats]
-    return out
+    return hold(out, feats)
 
 
 @register(
@@ -666,8 +662,7 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("weight"),
     )
-    out.cache_handles = [bsrc, tsrc]
-    return out
+    return hold(out, bsrc, tsrc)
 
 
 @register(

@@ -385,7 +385,6 @@ def ngram_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .select("id_a", "id_b", "jaccard")
     )
-    out.cache_handles = list(getattr(pairs, "cache_handles", []))
     return out
 
 
@@ -453,7 +452,6 @@ def weighted_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .select("id_a", "id_b", "w_jaccard")
     )
-    out.cache_handles = list(getattr(pairs, "cache_handles", []))
     return out
 
 
@@ -516,7 +514,6 @@ def allpairs_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, k=3, threshold=0.6, hash_family=dedup.md5_hash64
     )
     out = core.select("id_a", "id_b", "n_common", "size_a", "size_b", "jaccard")
-    out.cache_handles = list(getattr(core, "cache_handles", []))
     return out
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..catalog import load_table
+from ..lifecycle import CheckpointHandle, hold
 from . import register
 
 
@@ -369,8 +370,4 @@ def frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("support") >= 2)
     )
     out = sup.select("a", "b", "c", "support")
-    from ..operators.graph import _CheckpointHandle
-
-    out.cache_handle = li
-    out.cache_handles = [_CheckpointHandle(l2)]
-    return out
+    return hold(out, li, CheckpointHandle(l2))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..catalog import load_table
+from ..lifecycle import CheckpointHandle, hold
 from ..operators.sampling import md5_bucket
 from . import register
 
@@ -574,8 +575,8 @@ def copurchase_edges(spark: SparkSession, sf_dir: str, min_support: int = 2):
     """Shared edge pipeline for the co-purchase graph family
     (triangles / hop distance / frequent triples): distinct
     (order, part) baskets and the support>=min_support ordered edge
-    list. Returns (baskets, edges); ``baskets`` is persisted — the
-    caller owns releasing it (attach as cache_handle)."""
+    list. Returns (baskets, edges): ``baskets`` is persisted and
+    ``edges`` checkpointed; the caller holds both on its result."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -653,11 +654,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e1.pb").alias("b"),
         F.col("e2.pb").alias("c"),
     )
-    from ..operators.graph import _CheckpointHandle
-
-    out.cache_handle = li
-    out.cache_handles = [_CheckpointHandle(e)]
-    return out
+    return hold(out, li, CheckpointHandle(e))
 
 
 @register(
@@ -1199,10 +1196,7 @@ def copurchase_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         tagged = lvl.select("node", F.lit(hop).alias("hop"))
         out = tagged if out is None else out.unionByName(tagged)
     result = out.groupBy("node").agg(F.min("hop").cast("int").alias("hop"))
-    from ..operators.graph import _CheckpointHandle
-
-    result.cache_handles = [e, li, _CheckpointHandle(e0)]
-    return result
+    return hold(result, e, li, CheckpointHandle(e0))
 
 
 @register(
@@ -1337,8 +1331,7 @@ def maintenance_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.col("i.c") - F.col("d2.c")).cast("long").alias("incr_minus_direct"),
     )
-    out.cache_handle = merged
-    return out
+    return hold(out, merged)
 
 
 @register(

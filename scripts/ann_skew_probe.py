@@ -63,6 +63,9 @@ def main() -> None:
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
         load_table,
     )
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+        release,
+    )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
         kmeans_assign,
         kmeans_assign_balanced,
@@ -87,11 +90,7 @@ def main() -> None:
             else kmeans_assign(emb, K, N_ITER, train_stride=stride)
         )
         occ_rows = cells.groupBy("cluster").count().collect()
-        for h in getattr(cells, "cache_handles", []):
-            try:
-                h.unpersist()
-            except Exception:
-                pass
+        release(cells)
         occ = {int(r["cluster"]): int(r["count"]) for r in occ_rows}
         # cell ids are not contiguous after hot-list splitting; size
         # stats come from the realized cells

@@ -50,6 +50,9 @@ def explain(df) -> str:
 
 
 def registry_plans(spark, names):
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+        release,
+    )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
         all_queries,
     )
@@ -58,12 +61,7 @@ def registry_plans(spark, names):
     for name in names:
         df = qs[name].builder(spark, SF_DIR)
         yield name, explain(df)
-        # release any persisted handles the builder attached
-        for h in getattr(df, "cache_handles", []):
-            try:
-                h.unpersist()
-            except Exception:
-                pass
+        release(df)
 
 
 @contextmanager

@@ -20,6 +20,9 @@ import duckdb
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     TABLES,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -67,11 +70,7 @@ def main() -> int:
         df = q.builder(spark, SF_DIR)
         scols = df.columns
         srows = [tuple(r) for r in df.collect()]
-        for h in getattr(df, "cache_handles", []):
-            try:
-                h.unpersist()
-            except Exception:
-                pass
+        release(df)
         if q.oracle is None:
             print(f"{n}: rows-only ({len(srows)} rows)")
             continue

@@ -58,6 +58,9 @@ def main() -> None:
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
         load_table,
     )
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+        release,
+    )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
         kmeans_assign,
         pq_assign,
@@ -83,9 +86,8 @@ def main() -> None:
     stride = _train_stride(emb)
     cells = kmeans_assign(base, k=args.n_cells, n_iter=2, train_stride=stride)
     codes = pq_assign(base, m=8, k=16, n_iter=2, train_stride=stride)
-    for fr in (cells, codes):
-        for h in fr.cache_handles:
-            h.unpersist()
+    release(cells)
+    release(codes)
     ci, pi = cells.centroids, codes.centroids
 
     tmp = tempfile.mkdtemp(prefix="ivfprobe_")

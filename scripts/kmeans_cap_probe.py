@@ -77,6 +77,9 @@ def main() -> None:
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
         load_table,
     )
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+        release,
+    )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
         kmeans_assign,
     )
@@ -104,8 +107,7 @@ def main() -> None:
         )
         rows = {r.vec_id: (r.cluster, r.dist2) for r in out.collect()}
         wall = time.monotonic() - t0
-        for h in getattr(out, "cache_handles", []):
-            h.unpersist()
+        release(out)
         return rows, wall, out.centroids
 
     def matched_churn(a: dict, b: dict) -> float:

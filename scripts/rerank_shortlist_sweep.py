@@ -78,6 +78,9 @@ def main() -> None:
     from gen_scale_data import gen_embeddings_skew
     from pyspark.sql import functions as F
 
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+        release,
+    )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
         ivf_pq_topk,
     )
@@ -144,8 +147,7 @@ def main() -> None:
                         nprobe_scale_with_split=args.corrected,
                     )
                     res = out.collect()
-                    for h in getattr(out, "cache_handles", []):
-                        h.unpersist()
+                    release(out)
                     got: dict[int, set[int]] = {}
                     for r in res:
                         got.setdefault(r.q_id, set()).add(r.vec_id)

@@ -177,6 +177,9 @@ def main() -> None:
     if unknown:
         ap.error(f"not scale-bench queries: {unknown}")
 
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+        release,
+    )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
         all_queries,
     )
@@ -290,9 +293,8 @@ def main() -> None:
             stride = _train_stride(emb)
             cells = kmeans_assign(emb, k=8, n_iter=2, train_stride=stride)
             codes = pq_assign(emb, m=8, k=16, n_iter=2, train_stride=stride)
-            for fr in (cells, codes):
-                for h in fr.cache_handles:
-                    h.unpersist()
+            release(cells)
+            release(codes)
             _frozen_idx[d] = (cells.centroids, codes.centroids)
         return emb, _frozen_idx[d]
 
@@ -415,13 +417,7 @@ def main() -> None:
                 df = builder(spark, sf_dir)
                 n = df.count()
                 dt = time.monotonic() - t0
-                for h in list(getattr(df, "cache_handles", [])) + (
-                    [df.cache_handle] if getattr(df, "cache_handle", None) is not None else []
-                ):
-                    try:
-                        h.unpersist()
-                    except Exception:
-                        pass
+                release(df)
                 if i > 0:
                     times.append(dt)
             results.setdefault(name, {})[label] = round(min(times), 3)

@@ -12,6 +12,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -37,11 +40,7 @@ def main() -> int:
             df = qs[name].builder(spark, SF_DIR)
             df.write.mode("overwrite").format("noop").save()
             times.append(round(time.perf_counter() - t0, 3))
-            for h in getattr(df, "cache_handles", []):
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
+            release(df)
         out[name] = times
         print(name, times, flush=True)
     print(json.dumps({k: min(v) for k, v in out.items()}))

@@ -30,6 +30,10 @@ import math
 import duckdb
 import pytest
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
+
 SF = "/root/testdata/sf0.01"
 SPLIT_FACTOR = 1.1
 K, N_ITER = 8, 2
@@ -156,8 +160,7 @@ def test_balanced_quantizer_matches_duckdb_replay(spark, oracle_rows):
         emb, K, N_ITER, split_factor=SPLIT_FACTOR, max_rounds=1
     )
     got = _canon([(r["vec_id"], r["cluster"], r["dist2"]) for r in out.collect()])
-    for h in out.cache_handles:
-        h.unpersist()
+    release(out)
     want = _canon(oracle_rows)
     assert len(got) == len(want) == 500
     # real splits must have happened for the test to prove anything
@@ -183,6 +186,5 @@ def test_balanced_oracle_centroid_contract(spark):
     )
     assigned = {r["cluster"] for r in out.collect()}
     cent_cells = {c for c, _, _ in out.centroids}
-    for h in out.cache_handles:
-        h.unpersist()
+    release(out)
     assert assigned <= cent_cells

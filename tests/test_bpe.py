@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators import (
     bpe,
 )
@@ -125,8 +128,7 @@ def test_registered_encode_reconstructs_text(spark, sf_small):
         ).count()
     finally:
         words.unpersist()
-        for h in getattr(out, "cache_handles", []):
-            h.unpersist()
+        release(out)
     assert n_bad == 0 and n_null == 0
 
 
@@ -144,9 +146,7 @@ def test_wordpiece_segments_reconstruct_words(spark, sf_oracle):
     q = all_queries()["wordpiece_greedy_segments"]
     df = q.builder(spark, sf_oracle)
     rows = df.collect()
-    h = getattr(df, "cache_handle", None)
-    if h is not None:
-        h.unpersist()
+    release(df)
     by_word: dict[str, list[tuple[int, str]]] = {}
     for r in rows:
         by_word.setdefault(r.word, []).append((r.piece_idx, r.piece))
@@ -182,8 +182,7 @@ def test_unigram_segments_reconstruct_and_cover(spark, sf_small):
     }
     df = all_queries()["unigram_lm_segments"].builder(spark, sf_small)
     rows = df.collect()
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
+    release(df)
     by_word = defaultdict(list)
     for r in rows:
         by_word[r.word].append((r.piece_idx, r.piece))

@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
     kmeans_assign,
     semantic_dedup,
@@ -24,17 +27,12 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.querie
 )
 
 
-def _release(df):
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
-
-
 def test_kmeans_partitions_all_vectors(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     n = emb.count()
     out = kmeans_assign(emb, k=4, n_iter=2)
     rows = out.collect()
-    _release(out)
+    release(out)
     assert len(rows) == n  # every vector assigned exactly once
     assert len({r["vec_id"] for r in rows}) == n
     assert all(0 <= r["cluster"] < 4 for r in rows)
@@ -48,10 +46,10 @@ def test_kmeans_iterations_do_not_increase_inertia(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     one = kmeans_assign(emb, k=4, n_iter=1)
     i1 = one.agg(F.sum("dist2")).collect()[0][0]
-    _release(one)
+    release(one)
     two = kmeans_assign(emb, k=4, n_iter=2)
     i2 = two.agg(F.sum("dist2")).collect()[0][0]
-    _release(two)
+    release(two)
     assert i2 <= i1 + 1e-3
 
 
@@ -59,7 +57,7 @@ def test_semantic_dedup_keeps_min_id_and_cluster_consistency(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     out = semantic_dedup(emb, k=4, n_iter=2, threshold=0.45)
     rows = out.collect()
-    _release(out)
+    release(out)
     assert len(rows) == emb.count()
     # The globally-lowest id can never be dropped (drops are always
     # the higher id of a pair).
@@ -104,7 +102,7 @@ def test_plan_shapes(spark, sf_small):
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, name
     sd = qs["semantic_dedup_prune"].builder(spark, sf_small)
     plan = sd._jdf.queryExecution().executedPlan().toString()
-    _release(sd)
+    release(sd)
     assert "CartesianProduct" not in plan
 
 
@@ -252,9 +250,7 @@ def test_power_iteration_matches_numpy_recipe(spark, sf_small):
 
     df = all_queries()["covariance_power_iteration"].builder(spark, sf_small)
     got = {r.dim: r.loading for r in df.collect()}
-    h = getattr(df, "cache_handle", None)
-    if h is not None:
-        h.unpersist()
+    release(df)
     assert set(got) == set(expected)
     for i in expected:
         assert abs(got[i] - expected[i]) < 2e-6, (i, got[i], expected[i])
@@ -365,8 +361,7 @@ def test_sampled_eval_cross_engine(spark, sf_oracle):
 
     sdf = ann_batch_recall_sampled(spark, sf_oracle, sample_mod=2)
     rows = sdf.collect()
-    for h in getattr(sdf, "cache_handles", []):
-        h.unpersist()
+    release(sdf)
     got = sorted((int(r.q_id), f"{r.recall_at_10 + 0.0:.6f}") for r in rows)
 
     con = duckdb.connect()

@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import pytest
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.graph import (
     connected_components,
     dedup_cluster_assignments,
@@ -87,8 +90,7 @@ def test_pagerank_mass_conservation_and_determinism(spark, sf_oracle):
     pairs = dedup.ngram_jaccard_pairs(d, k=3, min_jaccard=0.6, max_shingle_df=100)
     pr = pagerank(pairs, d=0.85, n_iter=3)
     rows = [(r.node, r.pr) for r in pr.collect()]
-    for h in pr.cache_handles:
-        h.unpersist()
+    release(pr)
     assert rows
     total = sum(p for _, p in rows)
     assert abs(total - 1.0) < 1e-3, total
@@ -96,6 +98,5 @@ def test_pagerank_mass_conservation_and_determinism(spark, sf_oracle):
 
     pr2 = pagerank(pairs, d=0.85, n_iter=3)
     rows2 = [(r.node, r.pr) for r in pr2.collect()]
-    for h in pr2.cache_handles:
-        h.unpersist()
+    release(pr2)
     assert sorted(rows) == sorted(rows2)

@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators import (
     dedup,
 )
@@ -37,7 +40,7 @@ def test_incremental_equals_full_restricted(spark, sf_oracle):
 
     full = dedup.minhash_near_duplicates(d, min_jaccard=0.5)
     full_rows = [(r.id_a, r.id_b, r.jaccard) for r in full.collect()]
-    full.cache_handle.unpersist()
+    release(full)
     want = sorted(
         (a, b, j) for a, b, j in full_rows if a in new_ids or b in new_ids
     )
@@ -49,8 +52,7 @@ def test_incremental_equals_full_restricted(spark, sf_oracle):
         old_index, old_docs, new_docs, min_jaccard=0.5
     )
     got = sorted((r.id_a, r.id_b, r.jaccard) for r in inc.collect())
-    for h in inc.cache_handles:
-        h.unpersist()
+    release(inc)
     assert got == want
 
 
@@ -69,15 +71,13 @@ def test_incremental_index_parquet_roundtrip(spark, sf_oracle, tmp_path):
         dedup.minhash_index(old_docs), old_docs, new_docs, min_jaccard=0.5
     )
     live = sorted((r.id_a, r.id_b, r.jaccard) for r in inc_live.collect())
-    for h in inc_live.cache_handles:
-        h.unpersist()
+    release(inc_live)
 
     inc_disk = dedup.incremental_minhash_near_duplicates(
         reloaded, old_docs, new_docs, min_jaccard=0.5
     )
     disk = sorted((r.id_a, r.id_b, r.jaccard) for r in inc_disk.collect())
-    for h in inc_disk.cache_handles:
-        h.unpersist()
+    release(inc_disk)
     assert disk == live and live
 
 
@@ -92,7 +92,6 @@ def test_incremental_old_text_cut_before_shingling(spark, sf_oracle):
         dedup.minhash_index(old_docs), old_docs, new_docs, min_jaccard=0.5
     )
     plan = inc._jdf.queryExecution().executedPlan().toString()
-    for h in inc.cache_handles:
-        h.unpersist()
+    release(inc)
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan

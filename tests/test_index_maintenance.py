@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
     codebook_churn_flows,
     ivf_pq_batch_rerank_topk,
@@ -42,18 +45,13 @@ K_COARSE, M, K_PQ = 8, 8, 16
 BASE_N = 350  # train on vec_id < 350, "ingest" the remaining 150
 
 
-def _release(df):
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
-
-
 def test_kmeans_code_frozen_roundtrip(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings", rebalance=True)
     trained = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     want = sorted(
         (int(r.vec_id), int(r.cluster), float(r.dist2)) for r in trained.collect()
     )
-    _release(trained)
+    release(trained)
     coded = kmeans_code_frozen(emb, trained.centroids)
     got = sorted(
         (int(r.vec_id), int(r.cluster), float(r.dist2)) for r in coded.collect()
@@ -63,7 +61,7 @@ def test_kmeans_code_frozen_roundtrip(spark, sf_small):
     assert coded.centroids == [
         (int(c), int(d), float(v)) for c, d, v in trained.centroids
     ]
-    assert coded.cache_handles == []
+    assert release(coded) == []  # a frozen-codebook scan persists nothing
 
 
 def test_pq_code_frozen_roundtrip(spark, sf_small):
@@ -73,7 +71,7 @@ def test_pq_code_frozen_roundtrip(spark, sf_small):
         (int(r.vec_id), int(r.sub), int(r.code), float(r.dist2))
         for r in trained.collect()
     )
-    _release(trained)
+    release(trained)
     coded = pq_code_frozen(emb, trained.centroids, m=M)
     got = sorted(
         (int(r.vec_id), int(r.sub), int(r.code), float(r.dist2))
@@ -92,20 +90,20 @@ def test_frozen_index_search_matches_trained(spark, sf_small):
     want = [
         (int(r.q_id), int(r.vec_id), float(r.adc_dist2)) for r in trained.collect()
     ]
-    _release(trained)
+    release(trained)
     cells = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     cells.collect()
     codes = pq_assign(emb, m=M, k=K_PQ, n_iter=2)
     codes.collect()
-    _release(cells)
-    _release(codes)
+    release(cells)
+    release(codes)
     frozen = ivf_pq_batch_topk(
         emb, coarse_index=cells.centroids, pq_index=codes.centroids, **kw
     )
     got = [
         (int(r.q_id), int(r.vec_id), float(r.adc_dist2)) for r in frozen.collect()
     ]
-    _release(frozen)
+    release(frozen)
     assert got == want and len(got) == 3 * 10
 
 
@@ -116,18 +114,18 @@ def test_frozen_index_rerank_forwards(spark, sf_small):
     )
     trained = ivf_pq_batch_rerank_topk(emb, **kw)
     want = [(int(r.q_id), int(r.vec_id), float(r.dist2)) for r in trained.collect()]
-    _release(trained)
+    release(trained)
     cells = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     cells.collect()
     codes = pq_assign(emb, m=M, k=K_PQ, n_iter=2)
     codes.collect()
-    _release(cells)
-    _release(codes)
+    release(cells)
+    release(codes)
     frozen = ivf_pq_batch_rerank_topk(
         emb, coarse_index=cells.centroids, pq_index=codes.centroids, **kw
     )
     got = [(int(r.q_id), int(r.vec_id), float(r.dist2)) for r in frozen.collect()]
-    _release(frozen)
+    release(frozen)
     assert got == want and len(got) == 2 * 5
 
 
@@ -142,7 +140,7 @@ def test_frozen_coding_of_ingest_batch(spark, sf_small):
     base = emb.filter(F.col("vec_id") < BASE_N)
     trained = kmeans_assign(base, k=K_COARSE, n_iter=2)
     base_want = {int(r.vec_id): (int(r.cluster), float(r.dist2)) for r in trained.collect()}
-    _release(trained)
+    release(trained)
     assert len(base_want) == BASE_N
 
     coded = kmeans_code_frozen(emb, trained.centroids)
@@ -180,8 +178,8 @@ def test_frozen_search_plan_shape(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings", rebalance=True)
     cells = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     codes = pq_assign(emb, m=M, k=K_PQ, n_iter=2)
-    for fr in (cells, codes):
-        _release(fr)
+    release(cells)
+    release(codes)
     sc = spark.sparkContext
     sc.setJobGroup("frozen-build", "index-maintenance plan pin")
     try:
@@ -213,7 +211,7 @@ def test_churn_flows_identity(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings", rebalance=True)
     trained = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     trained.collect()
-    _release(trained)
+    release(trained)
     flows = codebook_churn_flows(emb, trained.centroids, trained.centroids)
     rows = [
         (int(r.cluster_old), int(r.cluster_new), int(r.n), float(r.mean_dist2_delta))
@@ -233,7 +231,7 @@ def test_churn_flows_relabel_invariant(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings", rebalance=True)
     trained = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     trained.collect()
-    _release(trained)
+    release(trained)
     realized = sorted({c for c, _, _ in trained.centroids})
     shift = {c: realized[(i + 1) % len(realized)] for i, c in enumerate(realized)}
     permuted = [(shift[c], d, v) for c, d, v in trained.centroids]
@@ -255,10 +253,10 @@ def test_churn_flows_retrain(spark, sf_small):
     base = emb.filter(F.col("vec_id") < BASE_N)
     old = kmeans_assign(base, k=K_COARSE, n_iter=2)
     old.collect()
-    _release(old)
+    release(old)
     new = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     new.collect()
-    _release(new)
+    release(new)
     flows = codebook_churn_flows(emb, old.centroids, new.centroids)
     rows = [
         (int(r.cluster_old), int(r.cluster_new), int(r.n), float(r.mean_dist2_delta))
@@ -309,7 +307,7 @@ def test_frozen_coding_of_balanced_codebook(spark):
 
     bal = kmeans_assign_balanced(emb, k=K_COARSE, n_iter=2, split_factor=1.2)
     bal.collect()
-    _release(bal)
+    release(bal)
     realized = {c for c, _, _ in bal.centroids}
     assert len(realized) > K_COARSE  # the skew twin must actually split
 

@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
     ivf_pq_batch_rerank_topk,
     ivf_pq_batch_topk,
@@ -32,9 +35,8 @@ K_COARSE, M, K_PQ, NPROBE, TOPK = 8, 8, 16, 2, 10
 def _codebooks(emb):
     cells = kmeans_assign(emb, k=K_COARSE, n_iter=2)
     codes = pq_assign(emb, m=M, k=K_PQ, n_iter=2)
-    for fr in (cells, codes):
-        for h in fr.cache_handles:
-            h.unpersist()
+    release(cells)
+    release(codes)
     return cells.centroids, codes.centroids
 
 

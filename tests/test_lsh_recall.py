@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators import (
     dedup,
     similarity,
@@ -235,14 +238,10 @@ def test_tfidf_simhash_topk_recall_floor(spark, sf_oracle):
     qs = all_queries()
     exact = qs["tfidf_doc_similarity"].builder(spark, sf_oracle)
     exact_rows = [(r.id_a, r.id_b) for r in exact.collect()]
-    for h in getattr(exact, "cache_handles", []) + (
-        [exact.cache_handle] if getattr(exact, "cache_handle", None) is not None else []
-    ):
-        h.unpersist()
+    release(exact)
     lsh = qs["tfidf_simhash_topk"].builder(spark, sf_oracle)
     lsh_pairs = {(r.id_a, r.id_b) for r in lsh.collect()}
-    for h in getattr(lsh, "cache_handles", []):
-        h.unpersist()
+    release(lsh)
     top5 = set(exact_rows[:5])
     hit = len(top5 & lsh_pairs) / len(top5)
     assert hit >= 0.4, f"recall of exact top-5 too low: {hit} ({top5 & lsh_pairs})"
@@ -267,14 +266,12 @@ def test_simhash_band_width_knob(spark, sf_oracle):
         spark, sf_oracle, n_bits=32, n_bands=2, hash_family=F.xxhash64
     )
     n16 = c16.count()
-    for h in c16.cache_handles:
-        h.unpersist()
+    release(c16)
     c24 = tfidf_simhash_candidates(
         spark, sf_oracle, n_bits=48, n_bands=2, hash_family=F.xxhash64
     )
     n24 = c24.count()
-    for h in c24.cache_handles:
-        h.unpersist()
+    release(c24)
     assert 0 < n24 <= n16, (n16, n24)
 
     with _pytest.raises(ValueError, match="32-bit-valued"):
@@ -673,8 +670,7 @@ def test_composed_stack_recall_floor(spark):
         shortlist=200, balanced=True, query_ids=hot_ids + cold_ids,
     )
     rows = out.collect()
-    for h in getattr(out, "cache_handles", []):
-        h.unpersist()
+    release(out)
     got: dict[int, set[int]] = {}
     for r in rows:
         got.setdefault(r.q_id, set()).add(r.vec_id)
@@ -753,8 +749,7 @@ def test_composed_stack_corrected_nprobe(spark):
             nprobe_scale_with_split=corrected,
         )
         rows = out.collect()
-        for h in getattr(out, "cache_handles", []):
-            h.unpersist()
+        release(out)
         got: dict[int, set[int]] = {}
         for r in rows:
             got.setdefault(r.q_id, set()).add(r.vec_id)

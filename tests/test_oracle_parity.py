@@ -17,6 +17,10 @@ import pytest
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     TABLES,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    CheckpointHandle,
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -52,24 +56,26 @@ def _canon_rows(cols, rows):
     return sorted(tuple(_canon(r[i]) for i in order) for r in rows)
 
 
-def _release_handles(df):
-    """Mirror bench.run_once: drop per-run persisted/checkpointed
-    frames (curation DAGs, MinHash, components) so a full registry
-    sweep doesn't stack cache entries."""
-    for handle in getattr(df, "cache_handles", []):
-        handle.unpersist()
-    single = getattr(df, "cache_handle", None)
-    if single is not None:
-        single.unpersist()
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _release_and_check(spark, name, before, df):
+    """No persisted RDD may outlive the query once it is released.
+    Checkpoint blocks are exempt: the ContextCleaner frees them only
+    after a later JVM GC."""
+    if not any(isinstance(h, CheckpointHandle) for h in release(df)):
+        assert _persisted(spark) <= before, f"{name}: persisted a frame it does not hold"
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_matches_duckdb_oracle(name, spark, sf_oracle):
     q = QUERIES[name]
+    before = _persisted(spark)
     sdf = q.builder(spark, sf_oracle)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
-    _release_handles(sdf)
+    _release_and_check(spark, name, before, sdf)
 
     con = _duck_connection(sf_oracle)
     rel = con.sql(q.oracle)
@@ -92,8 +98,9 @@ def test_matches_duckdb_oracle(name, spark, sf_oracle):
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_queries_run(name, spark, sf_oracle):
     q = QUERIES[name]
+    before = _persisted(spark)
     sdf = q.builder(spark, sf_oracle)
     n = sdf.count()
-    _release_handles(sdf)
+    _release_and_check(spark, name, before, sdf)
     assert n >= 0
     assert len(sdf.columns) > 0

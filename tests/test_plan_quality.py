@@ -10,6 +10,9 @@ import re
 
 import pytest
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -172,8 +175,7 @@ def test_kmeans_assignment_stays_codegen(spark, sf_oracle):
 
     df = all_queries()["kmeans_embedding_clusters"].builder(spark, sf_oracle)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
+    release(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "lambdafunction" not in plan.lower()
@@ -311,9 +313,7 @@ def test_self_join_pipelines_reuse_persisted_frames(spark, sf_oracle):
     ):
         df = QUERIES[name].builder(spark, sf_oracle)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        handle = getattr(df, "cache_handle", None)
-        assert handle is not None, f"{name}: missing cache_handle"
-        handle.unpersist()
+        assert release(df), f"{name}: holds no persisted frame"
         assert "InMemoryTableScan" in plan, name
         assert "CartesianProduct" not in plan, name
 
@@ -381,8 +381,7 @@ def test_pq_assignment_broadcasts_codebook(spark, sf_oracle):
     for name in ("pq_codes", "pq_adc_topk"):
         df = QUERIES[name].builder(spark, sf_oracle)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        for h in getattr(df, "cache_handles", []):
-            h.unpersist()
+        release(df)
         assert "BroadcastHashJoin" in plan, name
         assert "CartesianProduct" not in plan, name
 
@@ -618,8 +617,7 @@ def test_batch_rerank_refine_stays_broadcast(spark, sf_oracle):
 
     df = all_queries()["ivf_pq_batch_rerank_topk"].builder(spark, sf_oracle)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
+    release(df)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "Python" not in plan
@@ -641,8 +639,7 @@ def test_batch_recall_eval_plan_shape(spark, sf_oracle):
 
     df = all_queries()["ann_batch_recall_at_10"].builder(spark, sf_oracle)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
+    release(df)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "Python" not in plan

@@ -10,6 +10,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
     pq_adc_topk,
     pq_assign,
@@ -21,17 +24,12 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.operat
 M, K = 8, 16
 
 
-def _release(df):
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
-
-
 def test_pq_code_structure(spark, sf_oracle):
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     n = emb.count()
     codes = pq_assign(emb, m=M, k=K, n_iter=2)
     rows = codes.collect()
-    _release(codes)
+    release(codes)
     # one row per (vector, subspace); codes within [0, K)
     assert len(rows) == n * M
     assert all(0 <= r.code < K and 0 <= r.sub < M for r in rows)
@@ -43,10 +41,10 @@ def test_pq_adc_deterministic(spark, sf_oracle):
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     a = pq_adc_topk(emb, query_id=0, m=M, k=K, topk=10)
     r1 = [(r.vec_id, r.adc_dist2) for r in a.collect()]
-    _release(a)
+    release(a)
     b = pq_adc_topk(emb, query_id=0, m=M, k=K, topk=10)
     r2 = [(r.vec_id, r.adc_dist2) for r in b.collect()]
-    _release(b)
+    release(b)
     assert r1 == r2 and len(r1) == 10
 
 
@@ -59,7 +57,7 @@ def test_pq_adc_recall_isotropic_floor(spark, sf_oracle):
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     adc = pq_adc_topk(emb, query_id=0, m=M, k=K, topk=10)
     got = {r.vec_id for r in adc.collect()}
-    _release(adc)
+    release(adc)
     qv = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
@@ -88,7 +86,7 @@ def test_pq_adc_recall_clustered(spark):
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
     adc = pq_adc_topk(emb, query_id=0, m=M, k=K, topk=10)
     got = {r.vec_id for r in adc.collect()}
-    _release(adc)
+    release(adc)
     assert all(v % 8 == 0 for v in got), "ADC strayed outside the query's cluster"
     qv = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -108,19 +106,19 @@ def test_ivf_pq_results_from_probed_cells_only(spark, sf_oracle):
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     out = ivf_pq_topk(emb, query_id=0, n_cells=8, nprobe=2, m=M, k=K, topk=10)
     hits = [(r.vec_id, r.adc_dist2) for r in out.collect()]
-    _release(out)
+    release(out)
     assert len(hits) == 10
 
     cells = kmeans_assign(emb, k=8, n_iter=2)
     cell_of = {r.vec_id: r.cluster for r in cells.collect()}
-    _release(cells)
+    release(cells)
     # nprobe=2: all hits must come from at most 2 distinct cells.
     hit_cells = {cell_of[v] for v, _ in hits}
     assert len(hit_cells) <= 2, f"hits span {len(hit_cells)} cells > nprobe"
 
     out2 = ivf_pq_topk(emb, query_id=0, n_cells=8, nprobe=2, m=M, k=K, topk=10)
     hits2 = [(r.vec_id, r.adc_dist2) for r in out2.collect()]
-    _release(out2)
+    release(out2)
     assert hits == hits2
 
 
@@ -139,7 +137,7 @@ def test_residual_pq_dominates_plain(spark, sf_oracle):
     def recall(emb, fn):
         out = fn(emb, query_id=0, n_cells=8, nprobe=2, m=M, k=K, topk=10)
         got = {r.vec_id for r in out.collect()}
-        _release(out)
+        release(out)
         qv = emb.filter(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
         )
@@ -210,7 +208,7 @@ def test_ivf_pq_batch_matches_single_query(spark, sf_oracle):
         train_stride=2,
     )
     rows = out.collect()
-    _release(out)
+    release(out)
     assert len(rows) == 30
     got = {}
     for r in rows:
@@ -222,7 +220,7 @@ def test_ivf_pq_batch_matches_single_query(spark, sf_oracle):
             train_stride=2,
         )
         want = [(r.vec_id, r.adc_dist2) for r in single.collect()]
-        _release(single)
+        release(single)
         assert got[q] == want, f"batch != single for query {q}"
 
 
@@ -243,7 +241,7 @@ def test_ivf_pq_batch_query_ids_override(spark, sf_oracle):
         emb, n_cells=8, nprobe=2, m=M, k=K, topk=10, query_ids=ids
     )
     rows = out.collect()
-    _release(out)
+    release(out)
     got = {}
     for r in rows:
         got.setdefault(r.q_id, []).append((r.vec_id, r.adc_dist2))
@@ -253,7 +251,7 @@ def test_ivf_pq_batch_query_ids_override(spark, sf_oracle):
             emb, query_id=q, n_cells=8, nprobe=2, m=M, k=K, topk=10
         )
         want = [(r.vec_id, r.adc_dist2) for r in single.collect()]
-        _release(single)
+        release(single)
         assert got[q] == want, f"query_ids batch != single for query {q}"
 
 
@@ -277,7 +275,7 @@ def test_ivf_pq_batch_partitioning_independent(spark, sf_oracle):
             frame, n_queries=3, n_cells=8, nprobe=2, m=M, k=K, topk=10
         )
         rows = [(r.q_id, r.vec_id, r.adc_dist2) for r in out.collect()]
-        _release(out)
+        release(out)
         return rows
 
     a = run(emb.repartition(1))
@@ -302,7 +300,7 @@ def test_ivf_pq_batch_rerank_matches_single_query(spark, sf_oracle):
         shortlist=50, train_stride=2,
     )
     rows = out.collect()
-    _release(out)
+    release(out)
     assert len(rows) == 30
     got = {}
     for r in rows:
@@ -314,7 +312,7 @@ def test_ivf_pq_batch_rerank_matches_single_query(spark, sf_oracle):
             shortlist=50, train_stride=2,
         )
         want = [(r.vec_id, r.dist2) for r in single.collect()]
-        _release(single)
+        release(single)
         assert got[q] == want, f"batch rerank != single for query {q}"
 
 
@@ -337,7 +335,7 @@ def test_ivf_pq_batch_rerank_partitioning_independent(spark, sf_oracle):
             shortlist=50,
         )
         rows = [(r.q_id, r.vec_id, r.dist2) for r in out.collect()]
-        _release(out)
+        release(out)
         return rows
 
     a = run(emb.repartition(1))
@@ -383,13 +381,13 @@ def test_batch_recall_eval_matches_single_query_eval(spark, sf_oracle):
     qs = all_queries()
     batch_df = qs["ann_batch_recall_at_10"].builder(spark, sf_oracle)
     rows = {r.q_id: r.recall_at_10 for r in batch_df.collect()}
-    _release(batch_df)
+    release(batch_df)
     assert sorted(rows) == list(range(8))  # the 8 lowest vec_ids
     assert all(0.0 <= v <= 1.0 and round(v * 10) == v * 10 for v in rows.values())
 
     single_df = qs["ann_recall_at_10"].builder(spark, sf_oracle)
     [single] = [r.recall_at_10 for r in single_df.collect()]
-    _release(single_df)
+    release(single_df)
     assert rows[0] == single
 
 
@@ -426,7 +424,7 @@ def test_balanced_batch_rerank_composes(spark):
         shortlist=50, balanced=True,
     )
     rows = out.collect()
-    _release(out)
+    release(out)
     assert len(rows) == 20
     got = {}
     for r in rows:
@@ -438,7 +436,7 @@ def test_balanced_batch_rerank_composes(spark):
             shortlist=50, balanced=True,
         )
         want = [(r.vec_id, r.dist2) for r in single.collect()]
-        _release(single)
+        release(single)
         assert got[q] == want, f"balanced batch rerank != single for query {q}"
 
 
@@ -477,8 +475,7 @@ def test_variance_balanced_pq_recall(spark):
     def recall(df, q):
         a = pq_adc_topk(df, query_id=q, m=M, k=K, topk=10)
         ids = {int(r.vec_id) for r in a.collect()}
-        for h in a.cache_handles:
-            h.unpersist()
+        release(a)
         d2 = ((x - x[q]) ** 2).sum(axis=1)
         d2[q] = np.inf
         exact = set(np.argsort(d2)[:10].tolist())
@@ -528,8 +525,8 @@ def test_python_round6_matches_spark_round(spark, sf_oracle):
                 for sd in sorted(vals)
             )
         )
-    _release(cells)
-    _release(codes)
+    release(cells)
+    release(codes)
     # adversarial grid: exact half-way points, negatives, tiny/huge
     raw.extend(
         [

@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators import (
     dedup,
 )
@@ -57,14 +60,12 @@ def test_streamed_index_equals_batch_index(spark, sf_oracle, tmp_path):
         streamed, old_docs, new_docs, min_jaccard=0.5
     )
     from_stream = sorted((r.id_a, r.id_b, r.jaccard) for r in inc.collect())
-    for h in inc.cache_handles:
-        h.unpersist()
+    release(inc)
     inc2 = dedup.incremental_minhash_near_duplicates(
         batch, old_docs, new_docs, min_jaccard=0.5
     )
     from_batch = sorted((r.id_a, r.id_b, r.jaccard) for r in inc2.collect())
-    for h in inc2.cache_handles:
-        h.unpersist()
+    release(inc2)
     assert from_stream == from_batch and from_stream
 
 
@@ -90,9 +91,8 @@ def test_streamed_ivf_index_equals_one_shot(spark, sf_small, tmp_path):
     )
     cells = kmeans_assign(emb, k=8, n_iter=2)
     codes = pq_assign(emb, m=8, k=16, n_iter=2)
-    for fr in (cells, codes):
-        for h in fr.cache_handles:
-            h.unpersist()
+    release(cells)
+    release(codes)
     ci, pi = cells.centroids, codes.centroids
 
     drops = str(tmp_path / "vec_drops")

@@ -32,6 +32,9 @@ from pyspark.sql import functions as F
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.catalog import (
     load_table,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
     _train_sample_pred,
     ivf_pq_rerank_topk,
@@ -51,11 +54,6 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.querie
     N_ITER,
     TRAIN_CAP,
 )
-
-
-def _release(df):
-    for h in getattr(df, "cache_handles", []):
-        h.unpersist()
 
 
 def test_stride1_emits_historical_sql():
@@ -119,7 +117,7 @@ def test_engaged_sampled_training_cross_engine(spark, sf_oracle):
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     out = kmeans_assign(emb, k=K, n_iter=N_ITER, train_stride=2)
     got = sorted((r.vec_id, r.cluster, r.dist2) for r in out.collect())
-    _release(out)
+    release(out)
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS "
@@ -150,7 +148,7 @@ def test_engaged_sampled_pq_training_cross_engine(spark, sf_oracle):
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     out = pq_assign(emb, m=8, k=16, n_iter=2, train_stride=2)
     got = sorted((r.vec_id, r.sub, r.code, r.dist2) for r in out.collect())
-    _release(out)
+    release(out)
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS "
@@ -186,7 +184,7 @@ def test_semantic_dedup_capped_training_cross_engine(spark, sf_oracle):
         emb, k=K, n_iter=N_ITER, threshold=SEMDEDUP_THRESHOLD, train_stride=2
     )
     got = sorted((r.vec_id, r.cluster, r.is_kept) for r in out.collect())
-    _release(out)
+    release(out)
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS "
@@ -226,7 +224,7 @@ def test_sampled_final_assignment_covers_every_vector(spark, sf_oracle):
     n = emb.count()
     out = kmeans_assign(emb, k=K, n_iter=N_ITER, train_stride=4)
     rows = out.collect()
-    _release(out)
+    release(out)
     assert len(rows) == n
     assert len({r.vec_id for r in rows}) == n
 
@@ -280,7 +278,7 @@ def test_capped_training_recall_floor_clustered(spark):
         emb, query_id=0, n_cells=8, nprobe=2, m=8, k=16, topk=10, train_stride=4
     )
     got = {r.vec_id for r in out.collect()}
-    _release(out)
+    release(out)
     assert all(v % 8 == 0 for v in got), "capped training broke routing"
     assert len(got & exact) / 10 >= 0.5
     rr = ivf_pq_rerank_topk(
@@ -295,5 +293,5 @@ def test_capped_training_recall_floor_clustered(spark):
         train_stride=4,
     )
     got_rr = {r.vec_id for r in rr.collect()}
-    _release(rr)
+    release(rr)
     assert len(got_rr & exact) / 10 >= 0.9

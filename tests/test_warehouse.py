@@ -12,6 +12,9 @@ import re
 from collections import Counter, defaultdict
 from datetime import timedelta
 
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.lifecycle import (
+    release,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -571,9 +574,7 @@ def test_triples_and_hop_reuse_edges(spark, sf_oracle):
     for name in ("frequent_triples", "copurchase_hop_distance"):
         df = QUERIES[name].builder(spark, sf_oracle)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        h = getattr(df, "cache_handle", None)
-        if h is not None:
-            h.unpersist()
+        release(df)
         assert "CartesianProduct" not in plan, name
 
 
