@@ -12,11 +12,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, not the host's count), so leaving the variable unset
+    never oversubscribes the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, at most 16g: the driver JVM is the
+    whole local-mode engine, and a heap larger than the host invites
+    the kernel's OOM killer instead of Spark's own spill."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(app_name: str = "ocdi-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    Settings chosen for 100 TB-scale habits that also behave on
-    local[32]:
+    Settings chosen for 100 TB-scale habits that also behave in local
+    mode. ``cpus`` defaults to ``default_cpus()``; the driver heap to
+    ``SPARK_DRIVER_MEMORY``, else to half of physical memory (at most
+    16g).
 
     - AQE on: runtime coalescing of small post-shuffle partitions,
       skew-join splitting, and dynamic join-strategy switching.
@@ -29,7 +46,7 @@ def get_spark(app_name: str = "ocdi-spark", cpus: int | None = None) -> SparkSes
       parity with DuckDB oracle comparisons.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -49,7 +66,7 @@ def get_spark(app_name: str = "ocdi-spark", cpus: int | None = None) -> SparkSes
         # lock-free and identical for the data handled here.
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

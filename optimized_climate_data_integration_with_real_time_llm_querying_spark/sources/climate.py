@@ -12,18 +12,30 @@ are stable; a production deployment would replace ``build_*`` with
 the real CSV/Excel/NetCDF ingest (see ``.ingest`` module) — every
 schema and transform stays the same.
 
-The built-in tables use no Python-side ``createDataFrame``: their small
-inputs (disaster types, cities, metrics, countries, gases, the
-dimension tables) go through ``local_relation``, one inline ``VALUES``
-query that plans as a JVM ``LocalTableScan``. A ``createDataFrame(list)``
-plans as ``Scan ExistingRDD`` over pickled rows, so every query over
-these tables would start Python workers to unpickle them again; ``ask()``
-re-executes its domain table on every question.
+``ask()`` re-executes its domain table on every question, so the four
+domain builders are shaped for the per-question fixed cost, which
+dominates for answers of a few rows:
+
+- Each starts from a one-partition key range (``spark.range(0, n, 1,
+  numPartitions=1)``: disaster types, city x metric, country x
+  substance, FEMA rows), picks its key columns by index from literal
+  arrays and explodes the time axis per key. A one-partition
+  ``Range`` reports ``SinglePartition``, which satisfies the
+  distribution an aggregate, sort or window requires, so a question's
+  plan has no ``Exchange`` and runs as one job of one task.
+- No join: a cross join of the key relations plans as broadcast
+  nested-loop joins, each broadcast its own Spark job. Without one,
+  Catalyst pushes a key filter (country, gas, city, metric, type) below
+  the ``Generate``, so only the matching keys are exploded and hashed.
+- No ``createDataFrame``: it plans as ``Scan ExistingRDD`` over pickled
+  rows, which starts Python workers to unpickle them on every query.
+  The dimension tables and the gazetteer are ``local_relation``s
+  instead, one inline ``VALUES`` query that plans as ``LocalTableScan``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -161,12 +173,23 @@ def _lcg(col, lo: float, hi: float):
     return lo + u * (hi - lo)
 
 
+def _pick(values, index: str) -> Column:
+    """``values[index]`` over a literal array written as one SQL
+    expression: one parse on the driver, where an ``F.lit`` per value
+    costs a JVM round trip each. Floats are written as double literals
+    (their repr round-trips), everything else as a string literal."""
+    items = ", ".join(f"{v!r}D" if isinstance(v, float) else _sql_string(v) for v in values)
+    return F.expr(f"array({items})[{index}]")
+
+
 def build_disasters_yearly(spark: SparkSession) -> DataFrame:
     """Long form of NOAA `disaster_records` (45 years x 7 types):
-    (year, disaster_type, count, cost)."""
-    years = spark.range(1980, 2025).select(F.col("id").cast("int").alias("year"))
-    types = local_relation(spark, [(t,) for t in DISASTER_TYPES], "disaster_type string")
-    base = years.crossJoin(types)
+    (year, disaster_type, count, cost). One key per disaster type,
+    exploded over the years."""
+    keys = spark.range(0, len(DISASTER_TYPES), 1, numPartitions=1).select(
+        _pick(DISASTER_TYPES, "id").alias("disaster_type")
+    )
+    base = keys.select("disaster_type", F.explode(F.sequence(F.lit(1980), F.lit(2024))).alias("year"))
     seed = F.concat(F.col("year").cast("string"), F.lit("|"), F.col("disaster_type"))
     return base.select(
         "year",
@@ -219,13 +242,14 @@ def build_fema_assistance(spark: SparkSession, n_rows: int = 6000) -> DataFrame:
     """FEMA/HUD `disaster_dollar_db` shape: one row per disaster event
     (year, event, incident_number, dates, state, incident_type, ihp/pa
     dollar columns). Dates are real DateType — the reference stores
-    M/D/YYYY strings (FIXTURES.md §2); parsing happens at ingest."""
-    rows = spark.range(n_rows).select(F.col("id").alias("i"))
+    M/D/YYYY strings (FIXTURES.md §2); parsing happens at ingest. One
+    key per row, so nothing is exploded."""
+    rows = spark.range(0, n_rows, 1, numPartitions=1).select(F.col("id").alias("i"))
     states = list(US_STATES.values())
     types = FEMA_INCIDENT_TYPES
     year = (2003 + F.col("i") % 22).cast("int")
-    state = F.array(*[F.lit(s) for s in states])[(F.abs(F.xxhash64(F.col("i"))) % len(states)).cast("int")]
-    itype = F.array(*[F.lit(t) for t in types])[(F.abs(F.xxhash64(F.col("i") + 7)) % len(types)).cast("int")]
+    state = _pick(states, f"int(abs(xxhash64(i)) % {len(states)})")
+    itype = _pick(types, f"int(abs(xxhash64(i + 7)) % {len(types)})")
     start = F.make_date(year, (F.abs(F.xxhash64(F.col("i") + 3)) % 12 + 1).cast("int"),
                         (F.abs(F.xxhash64(F.col("i") + 5)) % 28 + 1).cast("int"))
     return rows.select(
@@ -250,30 +274,35 @@ def build_era5_monthly(spark: SparkSession, years: tuple[int, int] = (2019, 2022
     (country, city, date, metric, family, unit, value).
 
     The reference's 14 `{country}_df{0,1}` tables collapse here; the
-    per-metric-family split survives as the `family` column."""
-    city_rows = [
-        (c, city) for c, cities in ERA5_CITIES.items() for city in cities
-    ]
-    cities = local_relation(spark, city_rows, "country string, city string")
-    months = spark.sql(
-        f"SELECT explode(sequence(to_date('{years[0]}-01-01'), "
-        f"to_date('{years[1]}-12-01'), interval 1 month)) AS date"
+    per-metric-family split survives as the `family` column. One key
+    per (city, metric), exploded over the months."""
+    cities = [(c, city) for c, cs in ERA5_CITIES.items() for city in cs]
+    metrics = list(ERA5_METRICS)
+    city_ix = f"id div {len(metrics)}"
+    metric_ix = f"id % {len(metrics)}"
+    keys = spark.range(0, len(cities) * len(metrics), 1, numPartitions=1).select(
+        _pick([c for c, _ in cities], city_ix).alias("country"),
+        _pick([city for _, city in cities], city_ix).alias("city"),
+        _pick([CITY_COORDS[city][0] for _, city in cities], city_ix).alias("latitude"),
+        _pick([CITY_COORDS[city][1] for _, city in cities], city_ix).alias("longitude"),
+        _pick(metrics, metric_ix).alias("metric"),
+        _pick([fam for fam, _ in ERA5_METRICS.values()], metric_ix).alias("family"),
+        _pick([unit for _, unit in ERA5_METRICS.values()], metric_ix).alias("unit"),
     )
-    metrics = local_relation(
-        spark,
-        [(m, fam, unit) for m, (fam, unit) in ERA5_METRICS.items()],
-        "metric string, family string, unit string",
+    base = keys.select(
+        "*",
+        F.expr(
+            f"explode(sequence(to_date('{years[0]}-01-01'), "
+            f"to_date('{years[1]}-12-01'), interval 1 month)) AS date"
+        ),
     )
-    base = cities.crossJoin(months).crossJoin(metrics)
     seed = F.concat_ws("|", "city", F.col("date").cast("string"), "metric")
-    lat = F.create_map(*[x for c, (la, lo) in CITY_COORDS.items() for x in (F.lit(c), F.lit(la))])
-    lon = F.create_map(*[x for c, (la, lo) in CITY_COORDS.items() for x in (F.lit(c), F.lit(lo))])
     return base.select(
         "country",
         "city",
         "date",
-        lat[F.col("city")].alias("latitude"),
-        lon[F.col("city")].alias("longitude"),
+        "latitude",
+        "longitude",
         "metric",
         "family",
         "unit",
@@ -297,18 +326,24 @@ def build_emissions(spark: SparkSession) -> DataFrame:
     (gas, ipcc_annex, country_code, country, substance, year, value).
 
     The reference's 4 per-gas databases and 54 per-year REAL columns
-    (FIXTURES.md §3) become two ordinary columns."""
-    country_rows = [(name, code) for name, code in GHG_COUNTRIES.items()]
-    countries = local_relation(spark, country_rows, "country string, country_code string")
+    (FIXTURES.md §3) become two ordinary columns. One key per (country,
+    substance), exploded over its reporting years."""
+    countries = list(GHG_COUNTRIES)
     gas_substances = (
         [("CO2", "CO2"), ("CH4", "CH4"), ("N2O", "N2O")]
         + [("F-gas", s) for s in FGAS_SUBSTANCES]
     )
-    gases = local_relation(spark, gas_substances, "gas string, substance string")
-    years = spark.range(1970, 2024).select(F.col("id").cast("int").alias("year"))
-    base = countries.crossJoin(gases).crossJoin(years)
+    country_ix = f"id div {len(gas_substances)}"
+    gas_ix = f"id % {len(gas_substances)}"
+    keys = spark.range(0, len(countries) * len(gas_substances), 1, numPartitions=1).select(
+        _pick(countries, country_ix).alias("country"),
+        _pick([GHG_COUNTRIES[c] for c in countries], country_ix).alias("country_code"),
+        _pick([g for g, _ in gas_substances], gas_ix).alias("gas"),
+        _pick([s for _, s in gas_substances], gas_ix).alias("substance"),
+    )
     # F-gas reporting starts 1990 in the reference DB.
-    base = base.filter(~((F.col("gas") == "F-gas") & (F.col("year") < 1990)))
+    first_year = F.when(F.col("gas") == "F-gas", 1990).otherwise(1970)
+    base = keys.select("*", F.explode(F.sequence(first_year, F.lit(2023))).alias("year"))
     seed = F.concat_ws("|", "country_code", "substance", F.col("year").cast("string"))
     return base.select(
         "gas",

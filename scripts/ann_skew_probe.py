@@ -39,7 +39,7 @@ NPROBE = 2
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dirs", nargs="+", required=True)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--queries", type=int, default=32, help="query sample size")
     ap.add_argument(
         "--balanced",

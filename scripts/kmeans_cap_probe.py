@@ -44,9 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", default=".scale/sf10")
-    ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--k", type=int, default=8)
     ap.add_argument("--n-iter", type=int, default=2)
     ap.add_argument(

@@ -153,7 +153,7 @@ SCALE_10 = ("10", ".scale/sf10", 100.0)
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument(
         "--three",
         action="store_true",
@@ -187,6 +187,7 @@ def main() -> None:
         tfidf_simhash_candidates,
     )
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.session import (
+        default_cpus,
         get_spark,
     )
 
@@ -396,6 +397,7 @@ def main() -> None:
         # KNOB_QUERIES note).
         "ivf_index_search": lambda s, d: _ivf_index_search(s, d),
     }
+    args.cpus = args.cpus or default_cpus()
     spark = get_spark("scale-bench", cpus=args.cpus)
     qs = all_queries()
     scales = SCALES + ([SCALE_10] if args.three else [])
