@@ -1,31 +1,43 @@
-"""Embedding clustering + semantic dedup (SemDeDup-style).
+"""Vector quantizers, the ANN searches built on them, and SemDeDup.
 
-Two operators a pretraining-data pipeline runs over its embedding
-table (the reference has no embedding operators at all — net-new
-LLM-pipeline capability, same family as ``operators/similarity.py``):
+One quantizer core serves every operator here. Product quantization
+(Jégou et al., TPAMI 2011) splits each vector into ``m`` contiguous
+subspaces and runs k-means in all of them at once; k-means is the
+``m = 1`` case, renamed to (id, cluster, dist2) rows with
+(cluster, dim, cval) centroids. The core has one of each piece:
 
-- :func:`kmeans_assign` — distributed Lloyd's k-means, made fully
-  DETERMINISTIC so it sits under the cross-engine DuckDB oracle:
-  seeds are the k lowest-id vectors (no RNG), distances and centroids
-  are rounded to a fixed grid each iteration, and argmin ties break
-  on the lowest cluster id. The centroid set (k x dim doubles) lives
-  on the driver between iterations — the same shape MLlib uses —
-  while every per-vector computation is a distributed join+aggregate.
-- :func:`semantic_dedup` — SemDeDup (Abbas et al. 2023,
-  arXiv:2303.09540): k-means first, then exact pairwise cosine ONLY
-  within each cluster, dropping the higher id of any pair above the
-  threshold. The clustering bounds the quadratic: k scales with
-  corpus size to hold cluster size ~constant, so the pair stage costs
-  O(n * cluster_size) instead of O(n^2).
+- :func:`_explode`, the (id, sub, sdim, val) long form every plan
+  reads;
+- :func:`_pq_code`, the coding plan: a broadcast codebook join, the
+  squared L2 per (vector, subspace, codeword) rounded to 6 dp, and the
+  nearest codeword with ties to the lowest code. Lloyd iterations,
+  final assignments and the frozen coders all evaluate it, so coding a
+  corpus against its own trained codebook reproduces the training
+  assignment row for row;
+- two Lloyd loops with one trajectory: :func:`_pq_lloyd` runs in
+  Spark over a persisted training view, :func:`_pq_lloyd_driver` on
+  the driver over a bounded training sample collected once;
+- :func:`_d2`, the driver's squared L2 on the 6-dp grid, shared by the
+  driver loop, the IVF cell probe, the residual cell replay and the
+  ADC lookup table.
 
-Scale notes: the assignment join broadcasts k x dim centroid cells
-and shuffles one (vec_id, cluster) scalar row per vector per cluster
-after map-side partial aggregation; the exploded vector frame is
-persisted once and reused by every iteration (handed to the caller
-with ``lifecycle.hold``). No HOF lambdas in the hot path — the
-explode/join/groupBy shape is fully codegen'd (see
-``similarity.exploded_pairwise_cosine`` for the measured 3-8x HOF
-penalty this avoids).
+Everything is deterministic, so the DuckDB oracle
+(``queries/clustering``) replays the full trajectory: seeds are the
+k lowest ids (no RNG), every distance and every centroid component is
+rounded to 6 dp each iteration, argmin ties break on the lowest code,
+and a code that loses all members disappears. Codebooks are
+driver-held lists (k x dim cells, the shape MLlib keeps); every
+per-vector computation is a distributed join and aggregate. The
+explode/join/groupBy shape is fully codegen'd, with no higher-order
+lambdas (``similarity.exploded_pairwise_cosine`` measures the 3-8x
+penalty those cost).
+
+:func:`semantic_dedup` is SemDeDup (Abbas et al. 2023,
+arXiv:2303.09540): k-means first, then exact pairwise cosine only
+within each cluster, dropping the higher id of any pair above the
+threshold. The clustering bounds the quadratic: k scales with corpus
+size to hold cluster size about constant, so the pair stage costs
+O(n * cluster_size) instead of O(n^2).
 """
 
 from __future__ import annotations
@@ -35,13 +47,38 @@ from pyspark.sql import functions as F
 
 from ..lifecycle import hold, release
 from .similarity import exploded_pairwise_cosine
+from .trend import round6
 
 
-def _exploded(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-    """(id, dim, val) long form; val accumulated in double."""
-    return df.select(
-        F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "val")
-    ).select(F.col(id_col), "dim", F.col("val").cast("double").alias("val"))
+def _explode(
+    df: DataFrame, vec_col: str, id_col: str, d_sub: int | None = None
+) -> DataFrame:
+    """(id, sub, sdim, val): one row per vector component, subspace
+    ``sub`` holding dims [sub * d_sub, (sub + 1) * d_sub), val widened
+    to double. ``d_sub=None`` keeps the whole vector as subspace 0
+    (sdim is the dim), the k-means view, which needs no dimension
+    probe."""
+    e = df.select(F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "val"))
+    if d_sub is None:
+        sub, sdim = F.lit(0), F.col("dim")
+    else:
+        sub = (F.col("dim") / d_sub).cast("int")
+        sdim = (F.col("dim") % d_sub).cast("int")
+    return e.select(
+        F.col(id_col),
+        sub.alias("sub"),
+        sdim.alias("sdim"),
+        F.col("val").cast("double").alias("val"),
+    )
+
+
+def _subspace_dim(df: DataFrame, vec_col: str, m: int) -> int:
+    """d_sub = dim / m, from one probed row; raises unless m divides
+    dim."""
+    dim = int(df.select(F.size(vec_col)).first()[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    return dim // m
 
 
 def _train_sample_pred(id_col: str, stride: int):
@@ -67,50 +104,257 @@ def _train_sample_pred(id_col: str, stride: int):
     return F.pmod(F.conv(hexpart, 16, 10).cast("long"), F.lit(int(stride))) == 0
 
 
-def _round6(x: float) -> float:
-    """Driver-side twin of Spark's ``F.round(col, 6)`` on DOUBLE:
-    Catalyst's ``Round`` evaluates ``BigDecimal(double).setScale(6,
-    HALF_UP)``, and Scala's ``BigDecimal(double)`` goes through
-    ``Double.toString`` — the shortest round-trip decimal form — so
-    the Python twin is ``Decimal(repr(x))`` (repr is also the
-    shortest round-trip form) quantized HALF_UP on the 6-dp grid.
-    Bit-equality with the distributed plan is pinned over real
-    probe/LUT sums plus an adversarial half-way grid in
-    tests/test_pq.py::test_python_round6_matches_spark_round."""
-    from decimal import ROUND_HALF_UP, Decimal
+def _collect_rows(
+    frame: DataFrame, vec_col: str, id_col: str
+) -> list[tuple[int, list[float]]]:
+    """(id, vector) rows of ``frame`` on the driver, sorted by id. The
+    float -> double widening on collect is exact, as the plans'
+    ``cast("double")`` is; a null vector comes back empty, as its
+    explode is."""
+    rows = frame.select(F.col(id_col), F.col(vec_col)).collect()
+    return sorted((int(r[0]), [float(v) for v in r[1] or ()]) for r in rows)
 
-    return float(
-        Decimal(repr(float(x))).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP
+
+def _query_vecs(
+    df: DataFrame,
+    query_ids: list[int] | None,
+    n_queries: int,
+    vec_col: str,
+    id_col: str,
+) -> dict[int, list[float]]:
+    """A search's one query collect: {id: vector} for ``query_ids``,
+    or else for the ``n_queries`` lowest ids. Probes and lookup tables
+    are then computed on the driver from codebooks it already holds,
+    and become broadcast-sized local relations instead of plans that
+    re-scan the corpus for a few rows."""
+    frame = (
+        df.filter(F.col(id_col).isin([int(q) for q in query_ids]))
+        if query_ids is not None
+        else df.orderBy(id_col).limit(n_queries)
+    )
+    qmap = dict(_collect_rows(frame, vec_col, id_col))
+    if not qmap:
+        # Fail with the cause, and before any training persists.
+        raise ValueError(
+            f"no query rows resolved (query_ids={query_ids!r}, n_queries={n_queries})"
         )
+    return qmap
+
+
+def _pq_code(
+    frame: DataFrame, codebook: list[tuple[int, int, int, float]], id_col: str
+) -> DataFrame:
+    """The coding plan: every (vector, subspace) of ``frame`` ((id, sub,
+    sdim, val) rows) coded against ``codebook`` ((code, sub, sdim,
+    cval) rows) as (id, sub, code, dist2), with the codebook attached
+    as ``.centroids``. The codebook is a broadcast local relation;
+    distances are summed per (id, sub, code) and rounded to 6 dp, and
+    ``min(struct(dist2, code))`` picks the nearest code, ties to the
+    lowest."""
+    codebook = [(int(c), int(s), int(sd), float(v)) for c, s, sd, v in codebook]
+    cent = frame.sparkSession.createDataFrame(
+        codebook, "code int, sub int, sdim int, cval double"
+    )
+    diff = F.col("val") - F.col("cval")
+    # The shuffle the per-(id, sub) minimum needs anyway partitions by
+    # id alone: HashPartitioning(id) satisfies that grouping and every
+    # consumer's join on id (Lloyd updates, candidate filters), so none
+    # of them shuffles the codes again.
+    out = (
+        frame.join(F.broadcast(cent), ["sub", "sdim"])
+        .groupBy(id_col, "sub", "code")
+        .agg(F.round(F.sum(diff * diff), 6).alias("dist2"))
+        .repartition(id_col)
+        .groupBy(id_col, "sub")
+        .agg(F.min(F.struct("dist2", "code")).alias("mn"))
+        .select(
+            id_col,
+            "sub",
+            F.col("mn.code").alias("code"),
+            F.col("mn.dist2").alias("dist2"),
+        )
+    )
+    out.centroids = codebook
+    return out
+
+
+def _d2(x: list[float], c: list[float]) -> float:
+    """The coding plan's distance on the driver: squared L2 summed in
+    ascending dim order and rounded like Spark's ``round(_, 6)``."""
+    s = 0.0
+    for a, b in zip(x, c):
+        diff = a - b
+        s += diff * diff
+    return round6(s)
+
+
+def _cells(
+    codebook: list[tuple[int, int, int, float]],
+) -> dict[int, dict[int, list[float]]]:
+    """Codebook rows (code, sub, sdim, cval) -> {sub: {code: subvector}}."""
+    out: dict[int, dict[int, list[float]]] = {}
+    for code, sub, _sdim, cval in sorted(codebook):
+        out.setdefault(int(sub), {}).setdefault(int(code), []).append(float(cval))
+    return out
+
+
+def _coarse_cells(
+    centroids: list[tuple[int, int, float]],
+) -> dict[int, list[float]]:
+    """k-means centroid rows (cluster, dim, cval) -> {cluster: vector}."""
+    return _cells(_codebook(centroids)).get(0, {})
+
+
+def _nearest(cells: dict[int, list[float]], x: list[float]) -> tuple[float, int]:
+    """(dist2, code) of the codeword nearest ``x``. Tuples compare like
+    the coding plan's ``min(struct(dist2, code))``, so ties go to the
+    lowest code."""
+    return min((_d2(x, cv), c) for c, cv in cells.items())
+
+
+def _split(vec: list[float], m: int) -> list[list[float]]:
+    """``vec`` as ``m`` contiguous subvectors."""
+    d_sub = len(vec) // m
+    return [vec[s * d_sub:(s + 1) * d_sub] for s in range(m)]
+
+
+def _seed_codebook(
+    rows: list[tuple[int, list[float]]], m: int
+) -> list[tuple[int, int, int, float]]:
+    """Seeds from (id, vector) rows sorted by id: codeword i of every
+    subspace is row i's subvector on the 6-dp grid."""
+    return [
+        (code, sub, sdim, round6(v))
+        for code, (_id, vec) in enumerate(rows)
+        for sub, part in enumerate(_split(vec, m))
+        for sdim, v in enumerate(part)
+    ]
+
+
+def _pq_lloyd_driver(
+    sample: list[tuple[int, list[float]]], k: int, n_iter: int, m: int
+) -> list[tuple[int, int, int, float]]:
+    """:func:`_pq_lloyd`'s trajectory on the driver, over a bounded
+    training sample (rows sorted by id; raw vectors, or residuals for
+    IVF residual PQ). This is the FAISS training shape: quantizers
+    train on a capped in-memory sample, never the corpus. The sample is
+    bounded by construction (stride = ceil(n / TRAIN_CAP)), so one
+    collect of it replaces the seed collect, the training-view persist
+    and one driver-blocking collect per iteration.
+
+    Same contract as the Spark loop: seeds are the k lowest ids, every
+    distance and centroid component is on the 6-dp grid, ties go to the
+    lowest code, and a code that loses all members in a subspace
+    disappears from that subspace only. Sums run in ascending (id, dim)
+    order; the engines agree through the 6-dp rounding, which the
+    parity suite re-checks cell by cell. An empty sample gives an empty
+    codebook, as the Spark loop does. Returns (code, sub, sdim, cval)
+    rows sorted."""
+    cells = _cells(_seed_codebook(sample[:k], m))
+    for _ in range(n_iter):
+        sums: dict[tuple[int, int], list[float]] = {}
+        counts: dict[tuple[int, int], int] = {}
+        for _id, vec in sample:  # ascending id
+            for sub, x in enumerate(_split(vec, m)):
+                key = (_nearest(cells[sub], x)[1], sub)
+                acc = sums.get(key)
+                if acc is None:
+                    sums[key] = list(x)
+                    counts[key] = 1
+                else:
+                    for j, v in enumerate(x):
+                        acc[j] += v
+                    counts[key] += 1
+        cells = {}
+        for (code, sub), acc in sums.items():
+            n = counts[(code, sub)]
+            cells.setdefault(sub, {})[code] = [round6(s / n) for s in acc]
+    return sorted(
+        (code, sub, sdim, v)
+        for sub, codes in cells.items()
+        for code, cv in codes.items()
+        for sdim, v in enumerate(cv)
     )
 
 
-def _collect_query_vec(
-    df: DataFrame, query_id: int, vec_col: str, id_col: str
-) -> list[float]:
-    """The one-row query-vector collect behind the driver-side
-    probe/LUT computation (round-17, guide §1/§2: the codebooks these
-    tables are computed FROM are already driver-held k x dim lists —
-    shipping the single query row to the driver too turns the former
-    scan+join+aggregate probe/LUT sub-plans into broadcast-sized
-    LOCAL relations, removing several stages per search). float ->
-    double widening on collect is exact, matching the plan's
-    ``.cast("double")``."""
-    row = df.filter(F.col(id_col) == query_id).select(F.col(vec_col)).first()
-    if row is None:
-        raise ValueError(f"query id {query_id} not found in {id_col}")
-    return [float(v) for v in row[0]]
+def _pq_lloyd(
+    e: DataFrame,
+    et: DataFrame,
+    id_col: str,
+    k: int,
+    n_iter: int,
+    init: list[tuple[int, int, int, float]] | None = None,
+) -> DataFrame:
+    """The Lloyd loop in Spark: ``et`` is the persisted training view of
+    ``e`` ((id, sub, sdim, val) rows). Seeds are ``init`` or else the k
+    lowest ids in ``et``; each iteration codes ``et`` with
+    :func:`_pq_code` and averages each codeword's members on the 6-dp
+    grid, one collect per iteration. Returns the coding of all of
+    ``e`` under the final codebook. On failure ``et`` is released
+    here."""
+    from pyspark.sql import Window as W
+
+    def collect_codebook(frame: DataFrame) -> list[tuple[int, int, int, float]]:
+        return sorted(
+            (int(r[0]), int(r[1]), int(r[2]), float(r[3])) for r in frame.collect()
+        )
+
+    try:
+        codebook = init
+        if codebook is None:
+            seeds = (
+                et.select(F.col(id_col)).distinct().orderBy(id_col).limit(k)
+                .withColumn(
+                    "code", (F.row_number().over(W.orderBy(id_col)) - 1).cast("int")
+                )
+            )
+            codebook = collect_codebook(
+                seeds.join(et, id_col).select("code", "sub", "sdim", F.round("val", 6))
+            )
+        for _ in range(n_iter):
+            codebook = collect_codebook(
+                _pq_code(et, codebook, id_col)
+                .join(et, [id_col, "sub"])
+                .groupBy("code", "sub", "sdim")
+                .agg(F.round(F.avg("val"), 6))
+            )
+        return _pq_code(e, codebook, id_col)
+    except BaseException:
+        et.unpersist()
+        raise
 
 
-def _cells_by_cluster(
-    centroids: list[tuple[int, int, float]],
-) -> dict[int, dict[int, float]]:
-    """Driver-held (cluster, dim, cval) rows -> {cluster: {dim: cval}}."""
-    out: dict[int, dict[int, float]] = {}
-    for c, d, v in centroids:
-        out.setdefault(int(c), {})[int(d)] = float(v)
-    return out
+def _quantize(
+    e: DataFrame,
+    k: int,
+    n_iter: int,
+    id_col: str,
+    train_stride: int,
+    m: int = 1,
+    sample: list[tuple[int, list[float]]] | None = None,
+    init: list[tuple[int, int, int, float]] | None = None,
+) -> DataFrame:
+    """Train a codebook and code every row of ``e`` with it: (id, sub,
+    code, dist2) with the codebook as ``.centroids``.
+
+    With ``sample`` (the training rows, collected and sorted by id) the
+    trajectory runs on the driver. Otherwise it runs in Spark over the
+    training view: ``e``'s md5 hash sample at ``train_stride`` > 1,
+    else all of ``e``. The view is the only input the iterations read
+    more than once, so it alone is persisted (the final coding reads
+    the corpus once), and it is hash-partitioned by id first:
+    HashPartitioning(id) satisfies every per-iteration group and join
+    on (id, ...), so one shuffle at cache build replaces three per
+    iteration. The partition count follows the session's parallelism.
+    The result holds the view."""
+    if sample is not None:
+        return _pq_code(e, _pq_lloyd_driver(sample, k, n_iter, m), id_col)
+    et = (
+        (e.filter(_train_sample_pred(id_col, train_stride)) if train_stride > 1 else e)
+        .repartition(e.sparkSession.sparkContext.defaultParallelism, id_col)
+        .persist()
+    )
+    return hold(_pq_lloyd(e, et, id_col, k, n_iter, init), et)
 
 
 def _probe_clusters(
@@ -118,199 +362,45 @@ def _probe_clusters(
     qvec: list[float],
     nprobe: int,
 ) -> list[int]:
-    """The IVF cell probe on the driver: squared L2 from the query to
-    every coarse centroid (ascending-dim summation, :func:`_round6`
-    grid — the same arithmetic the former distributed sub-plan and
-    the DuckDB oracle compute), nearest ``nprobe`` cells by
-    (d2, cluster). k x dim driver flops — trivially bounded."""
-    by_c = _cells_by_cluster(centroids)
-    scored = []
-    for c in sorted(by_c):
-        s = 0.0
-        for d in sorted(by_c[c]):
-            diff = qvec[d] - by_c[c][d]
-            s += diff * diff
-        scored.append((_round6(s), c))
-    scored.sort()
+    """The IVF cell probe on the driver: the ``nprobe`` coarse cells
+    nearest the query by (dist2, cluster). k x dim flops."""
+    scored = sorted((_d2(qvec, cv), c) for c, cv in _coarse_cells(centroids).items())
     return [c for _, c in scored[:nprobe]]
 
 
-def _nearest_cluster(by_c: dict[int, dict[int, float]], vec: list[float]) -> int:
-    """Driver-side twin of the final-assignment argmin: squared L2 on
-    the :func:`_round6` grid (ascending-dim summation), nearest cell
-    by (dist2, cluster) — the ``F.min(F.struct("dist2", "cluster"))``
-    tie-break. Used by the bounded-sample training paths to replay the
-    coarse assignment of TRAINING rows only; the corpus assignment
-    stays distributed."""
-    best_c = best_d = None
-    for c in sorted(by_c):
-        cv = by_c[c]
-        s = 0.0
-        for d in sorted(cv):
-            diff = vec[d] - cv[d]
-            s += diff * diff
-        d2 = _round6(s)
-        if best_d is None or d2 < best_d:
-            best_c, best_d = c, d2
-    return best_c
-
-
-def _kmeans_lloyd_driver(
-    sample: list[tuple[int, list[float]]], k: int, n_iter: int
-) -> list[tuple[int, int, float]]:
-    """Driver-side twin of :func:`kmeans_assign`'s Lloyd TRAJECTORY
-    over the bounded (``train_stride``) hash sample — the FAISS
-    training shape: quantizers train on a capped in-memory sample
-    (``max_points_per_centroid``), never the corpus. The sample is
-    bounded BY CONSTRUCTION (stride = ceil(n / TRAIN_CAP)), so holding
-    it on the driver is k x dim-class traffic, same as the centroids
-    the distributed loop already collected per iteration — while the
-    3 driver-blocking jobs per training (seed collect + one collect
-    per Lloyd iteration) collapse into ONE bounded collect
-    (guide §1.2: fix the number of passes first; §2.4: remove stages
-    whose inputs are already driver-sized).
-
-    Same determinism contract as the distributed loop: seeds = the k
-    lowest sampled ids (cluster ids 0..k-1 in id order), every
-    distance and centroid component on the :func:`_round6` grid
-    (Spark's F.round twin, pinned bit-exact in tests/test_pq.py),
-    argmin ties to the lowest cluster, empty clusters disappear.
-    Sums run in ascending (id, dim) order — a fixed order, exactly as
-    DuckDB's replay fixes its own; the engines already agree through
-    the 6-dp rounding (the oracle contract this whole family rests
-    on), and cell-exact parity at every SF re-verifies it.
-
-    ``sample`` must be sorted by id. Returns (cluster, dim, cval)
-    rows, the :func:`kmeans_assign` ``centroids`` shape."""
-    cent: dict[int, list[float]] = {
-        c: [_round6(v) for v in vec] for c, (_id, vec) in enumerate(sample[:k])
-    }
-    for _ in range(n_iter):
-        sums: dict[int, list[float]] = {}
-        counts: dict[int, int] = {}
-        for _id, vec in sample:  # ascending id
-            best_c = best_d = None
-            for c in sorted(cent):
-                cv = cent[c]
-                s = 0.0
-                for d, v in enumerate(vec):
-                    diff = v - cv[d]
-                    s += diff * diff
-                d2 = _round6(s)
-                if best_d is None or d2 < best_d:
-                    best_c, best_d = c, d2
-            acc = sums.get(best_c)
-            if acc is None:
-                sums[best_c] = list(vec)
-                counts[best_c] = 1
-            else:
-                for d, v in enumerate(vec):
-                    acc[d] += v
-                counts[best_c] += 1
-        cent = {
-            c: [_round6(s / counts[c]) for s in sums[c]] for c in sums
-        }
-    return [
-        (c, d, cent[c][d]) for c in sorted(cent) for d in range(len(cent[c]))
-    ]
-
-
-def _pq_lloyd_driver(
-    sample: list[tuple[int, list[float]]], k: int, n_iter: int, m: int
-) -> list[tuple[int, int, int, float]]:
-    """Driver-side twin of :func:`_pq_lloyd`'s multi-subspace Lloyd
-    TRAJECTORY over the bounded training sample (see
-    :func:`_kmeans_lloyd_driver` for the contract and why). ``sample``
-    is sorted (id, full-vector) rows — raw vectors for plain PQ,
-    residuals for IVF residual PQ. Per-subspace code sets evolve
-    independently (a code can lose all members in one subspace and
-    survive in another, exactly as the distributed (code, sub) groups
-    do). Returns (code, sub, sdim, cval) rows, the ``centroids``
-    codebook shape."""
-    dim = len(sample[0][1])
-    d_sub = dim // m
-    cent: dict[tuple[int, int], list[float]] = {}
-    for code, (_id, vec) in enumerate(sample[:k]):
-        for sub in range(m):
-            cent[(code, sub)] = [
-                _round6(vec[sub * d_sub + sd]) for sd in range(d_sub)
-            ]
-    for _ in range(n_iter):
-        codes_by_sub: dict[int, list[int]] = {}
-        for code, sub in cent:
-            codes_by_sub.setdefault(sub, []).append(code)
-        for sub in codes_by_sub:
-            codes_by_sub[sub].sort()
-        sums: dict[tuple[int, int], list[float]] = {}
-        counts: dict[tuple[int, int], int] = {}
-        for _id, vec in sample:  # ascending id
-            for sub, codes in codes_by_sub.items():
-                base = sub * d_sub
-                best_code = best_d = None
-                for code in codes:
-                    cv = cent[(code, sub)]
-                    s = 0.0
-                    for sd in range(d_sub):
-                        diff = vec[base + sd] - cv[sd]
-                        s += diff * diff
-                    d2 = _round6(s)
-                    if best_d is None or d2 < best_d:
-                        best_code, best_d = code, d2
-                key = (best_code, sub)
-                acc = sums.get(key)
-                if acc is None:
-                    sums[key] = [vec[base + sd] for sd in range(d_sub)]
-                    counts[key] = 1
-                else:
-                    for sd in range(d_sub):
-                        acc[sd] += vec[base + sd]
-                    counts[key] += 1
-        cent = {
-            key: [_round6(s / counts[key]) for s in sums[key]] for key in sums
-        }
-    return [
-        (code, sub, sd, cent[(code, sub)][sd])
-        for code, sub in sorted(cent)
-        for sd in range(d_sub)
-    ]
-
-
-def _collect_train_sample(
-    df: DataFrame, vec_col: str, id_col: str, train_stride: int
-) -> list[tuple[int, list[float]]]:
-    """The one bounded collect behind the driver-side trainings: the
-    md5-stride hash sample's (id, vector) rows, sorted by id. The
-    filter is the SAME :func:`_train_sample_pred` the distributed
-    training view used, so the sampled id set is byte-identical;
-    float -> double widening on collect is exact."""
-    rows = (
-        df.filter(_train_sample_pred(id_col, train_stride))
-        .select(F.col(id_col), F.col(vec_col))
-        .collect()
-    )
-    return sorted((int(r[0]), [float(v) for v in r[1]]) for r in rows)
-
-
 def _adc_lut_rows(
-    codebook: list[tuple[int, int, int, float]],
-    qvec: list[float],
-    d_sub: int,
+    codebook: list[tuple[int, int, int, float]], qvec: list[float]
 ) -> list[tuple[int, int, float]]:
-    """The (m x k)-entry ADC lookup table on the driver:
-    lut[sub][code] = ||q_sub - centroid[sub][code]||^2 on the
-    :func:`_round6` grid (ascending-sdim summation). Returns
-    (sub, code, lut_d) rows for a broadcast-sized local relation."""
-    cells: dict[tuple[int, int], dict[int, float]] = {}
-    for code, sub, sdim, cval in codebook:
-        cells.setdefault((int(sub), int(code)), {})[int(sdim)] = float(cval)
+    """The (m x k)-entry ADC lookup table on the driver, as (sub, code,
+    lut_d) rows: lut[sub][code] = ||q_sub - centroid[sub][code]||^2."""
     rows = []
-    for (sub, code) in sorted(cells):
-        s = 0.0
-        for sdim in sorted(cells[(sub, code)]):
-            diff = qvec[sub * d_sub + sdim] - cells[(sub, code)][sdim]
-            s += diff * diff
-        rows.append((sub, code, _round6(s)))
+    for sub, codes in sorted(_cells(codebook).items()):
+        for code, cv in sorted(codes.items()):
+            lo = sub * len(cv)
+            rows.append((sub, code, _d2(qvec[lo:lo + len(cv)], cv)))
     return rows
+
+
+def _lut_frame(spark, codebook, qvec: list[float]) -> DataFrame:
+    """The ADC lookup table as a broadcast-sized local relation."""
+    return spark.createDataFrame(
+        _adc_lut_rows(codebook, qvec), "sub int, code int, lut_d double"
+    )
+
+
+def _codebook(
+    centroids: list[tuple[int, int, float]],
+) -> list[tuple[int, int, int, float]]:
+    """k-means centroids (cluster, dim, cval) as a one-subspace codebook."""
+    return [(int(c), 0, int(d), float(v)) for c, d, v in centroids]
+
+
+def _as_kmeans(coded: DataFrame, id_col: str) -> DataFrame:
+    """The k-means view of a one-subspace coding: (id, cluster, dist2)
+    with (cluster, dim, cval) ``centroids``."""
+    out = coded.select(id_col, F.col("code").alias("cluster"), "dist2")
+    out.centroids = [(c, sdim, v) for c, _sub, sdim, v in coded.centroids]
+    return out
 
 
 def kmeans_assign(
@@ -325,7 +415,9 @@ def kmeans_assign(
 ) -> DataFrame:
     """Deterministic k-means: returns (id, cluster, dist2) — the
     assignment of every vector to its nearest centroid after
-    ``n_iter`` Lloyd iterations, with the squared L2 distance.
+    ``n_iter`` Lloyd iterations, with the squared L2 distance. It is
+    one-subspace product quantization (:func:`_quantize` with m = 1),
+    renamed.
 
     Determinism contract (what makes the DuckDB oracle possible):
     seeds = the ``k`` lowest-id vectors, cluster ids 0..k-1 in id
@@ -340,163 +432,49 @@ def kmeans_assign(
     iteration see only the ~1/stride of rows whose md5-bucket is 0
     mod stride (:func:`_train_sample_pred` — a HASH sample, so id
     order/source structure cannot bias it), while the FINAL
-    assignment still covers every vector. At corpus scale this turns
-    the per-iteration scan + shuffle from O(corpus) into
-    O(corpus / stride) with the same k x dim driver traffic; the
+    assignment still covers every vector. That sample is bounded, so
+    its trajectory runs on the driver from one collect. The
     deterministic hash (not Bernoulli RNG) is what keeps the
-    trajectory DuckDB-replayable. ``train_stride=1`` is exactly the
-    historical full-corpus training.
+    trajectory DuckDB-replayable. ``train_stride=1`` trains on the
+    whole corpus in Spark.
 
-    ``init_centroids`` WARM-STARTS Lloyd from an explicit
-    (cluster, dim, cval) codebook instead of the lowest-id seeds —
-    the refine move for capped training of the clustering-OUTPUT
-    family: train cheaply on the hash sample, then run ONE full-data
-    iteration from that codebook (the cap probe's measured remedy for
-    assignment churn at near-tied optima; scripts/kmeans_cap_probe.py
-    --warm-start). Deterministic given the codebook; registry entries
-    never pass it (plans stay byte-stable).
+    ``seed_ids`` replaces the lowest-id seeds with the given rows (the
+    hot-list splitter seeds the second centroid away from the cell's
+    dense core so it can bisect it). ``init_centroids`` WARM-STARTS
+    Lloyd from an explicit (cluster, dim, cval) codebook instead — the
+    refine move for capped training of the clustering-OUTPUT family:
+    train cheaply on the hash sample, then run ONE full-data iteration
+    from that codebook (the cap probe's measured remedy for assignment
+    churn at near-tied optima; scripts/kmeans_cap_probe.py
+    --warm-start). Both are deterministic given their input, run in
+    Spark, and are never passed by registry entries.
 
-    The returned frame holds the persisted training view.
+    Seeds come from ``df``'s rows, so a row whose vector is empty takes
+    a cluster id that then holds no centroid, as in the oracle's seed
+    set. The returned frame holds the persisted training view; with a
+    driver-side trajectory it also carries the collected sample as
+    ``train_sample``, which the residual-PQ search reuses.
     """
-    from pyspark.sql import Window as W
-
-    spark = df.sparkSession
-    e = _exploded(df, vec_col, id_col)
-
-    def assign_final(
-        cent_rows: list[tuple[int, int, float]], frame: DataFrame | None = None
-    ) -> DataFrame:
-        cent = spark.createDataFrame(
-            cent_rows, "cluster int, dim int, cval double"
+    sample = init = None
+    if init_centroids is not None:
+        init = _codebook(init_centroids)
+    elif seed_ids is None and train_stride > 1:
+        sample = _collect_rows(
+            df.filter(_train_sample_pred(id_col, train_stride)), vec_col, id_col
         )
-        dist = (
-            (frame if frame is not None else e).join(F.broadcast(cent), "dim")
-            .groupBy(id_col, "cluster")
-            .agg(
-                F.round(
-                    F.sum((F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))),
-                    6,
-                ).alias("dist2")
-            )
-        )
-        # min(struct) = lexicographic (dist2, cluster): nearest
-        # centroid, ties to the lowest cluster id — deterministic.
-        return dist.groupBy(id_col).agg(
-            F.min(F.struct("dist2", "cluster")).alias("m")
-        ).select(id_col, F.col("m.cluster").alias("cluster"), F.col("m.dist2").alias("dist2"))
-
-    # Round-18 (guide §1.2/§2.4): with a bounded training sample the
-    # whole Lloyd TRAJECTORY runs on the driver from ONE collect of
-    # the sample — the FAISS training shape (quantizers train on a
-    # capped in-memory sample) — replacing the seed collect + one
-    # driver-blocking collect per iteration + the training-view
-    # persist. The corpus-scale FINAL assignment stays distributed
-    # and byte-identical (same assign_final expression). Engages only
-    # when the sample is bounded by construction (train_stride > 1)
-    # and the trajectory is the default one (no explicit seeds or
-    # warm-start); trajectory equivalence is pinned by the DuckDB
-    # parity suite at every SF plus tests/test_train_cap.py.
-    if train_stride > 1 and init_centroids is None and seed_ids is None:
-        sample = _collect_train_sample(df, vec_col, id_col, train_stride)
-        centroids = _kmeans_lloyd_driver(sample, k, n_iter)
-        out = assign_final(centroids)
-        out.centroids = centroids
-        # The residual-PQ path re-reads the same hash sample; expose
-        # it so one collect serves both trainings.
-        out.train_sample = sample
-        return out
-
-    # Training view: a deterministic hash-sample of the exploded
-    # frame. Round-17: persist the TRAINING view, not the full
-    # exploded frame — the Lloyd iterations are the only multi-read
-    # consumers (the final assignment is a single pass), so the
-    # cached footprint shrinks from the full dim-times-row explosion
-    # to O(corpus * dim / stride) while every repeated read still
-    # hits memory (guide §5: cache only what is reused). The view is
-    # hash-partitioned by id BEFORE the persist: every Lloyd step
-    # groups or joins on (id, ...), and HashPartitioning(id) satisfies
-    # all of those ClusteredDistributions, so the per-iteration
-    # exchanges (groupBy(id, cluster), groupBy(id), the id-join back
-    # to the training rows) all disappear from the plan — one shuffle
-    # at cache build replaces 3 shuffles per iteration (guide §2.4:
-    # share one exchange across operations keyed the same way).
-    # Partition count follows the session's parallelism, never a
-    # constant, so the same code sizes itself on a cluster.
-    et = (
-        e.filter(_train_sample_pred(id_col, train_stride))
-        if train_stride > 1
-        else e
-    ).repartition(spark.sparkContext.defaultParallelism, id_col).persist()
-
-    assign = assign_final
-
-    # The per-iteration collect()s can fail mid-run (task loss, OOM);
-    # release the persisted exploded frame on ANY exit that won't hand
-    # it to the caller via hold — mirroring the finally-based
-    # hygiene in graph.connected_components.
-    try:
-        # Seed centroids = the k lowest-id vectors, rounded through
-        # Spark's F.round (HALF_UP, matching DuckDB ROUND) — NOT
-        # Python's round(), whose banker's rounding could diverge at
-        # .5 ulp. ``seed_ids`` overrides the default for callers with
-        # a better deterministic pick (the hot-list splitter seeds
-        # the second centroid at the cell's farthest member so it can
-        # bisect a dense core); the oracle-able registry paths never
-        # pass it.
-        if init_centroids is not None:
-            centroids = [
-                (int(c), int(d), float(v)) for c, d, v in init_centroids
-            ]
-        else:
-            base = df.select(F.col(id_col), F.col(vec_col))
-            if seed_ids is not None:
-                base = base.filter(F.col(id_col).isin([int(s) for s in seed_ids]))
-            elif train_stride > 1:
-                # Seeds come from the training sample (the k lowest
-                # sampled ids) so the whole trajectory is sample-local.
-                base = base.filter(_train_sample_pred(id_col, train_stride))
-            seeded = (
-                base.orderBy(id_col)
-                .limit(k)
-                .withColumn(
-                    "cluster", (F.row_number().over(W.orderBy(id_col)) - 1).cast("int")
-                )
-            )
-            centroids = [
-                (int(r["cluster"]), int(r["dim"]), float(r["cval"]))
-                for r in (
-                    seeded.select(
-                        "cluster", F.posexplode(F.col(vec_col)).alias("dim", "val")
-                    )
-                    .select(
-                        "cluster",
-                        "dim",
-                        F.round(F.col("val").cast("double"), 6).alias("cval"),
-                    )
-                    .collect()
-                )
-            ]
-
-        for _ in range(n_iter):
-            a = assign(centroids, et)
-            centroids = [
-                (int(r["cluster"]), int(r["dim"]), float(r["cval"]))
-                for r in (
-                    a.join(et, id_col)
-                    .groupBy("cluster", "dim")
-                    .agg(F.round(F.avg("val"), 6).alias("cval"))
-                    .collect()
-                )
-            ]
-
-        out = assign(centroids)
-    except BaseException:
-        et.unpersist()
-        raise
-    # Final (cluster, dim, cval) rows — the coarse quantizer IVF-style
-    # searches probe against (driver-held k x dim cells).
-    out.centroids = centroids
-    return hold(out, et)
+    else:
+        base = df
+        if seed_ids is not None:
+            base = df.filter(F.col(id_col).isin([int(s) for s in seed_ids]))
+        seeds = _collect_rows(base.orderBy(id_col).limit(k), vec_col, id_col)
+        init = _seed_codebook(seeds, 1)
+    coded = _quantize(
+        _explode(df, vec_col, id_col), k, n_iter, id_col, train_stride,
+        sample=sample, init=init,
+    )
+    out = _as_kmeans(coded, id_col)
+    out.train_sample = sample
+    return hold(out, coded)
 
 
 def kmeans_assign_balanced(
@@ -637,150 +615,28 @@ def pq_assign(
     ``result.centroids`` (list of (code, sub, sdim, cval) rows,
     m x k x d_sub cells driver-held, the MLlib-centroid shape).
 
-    All m subspace k-means run as ONE distributed Lloyd pipeline:
-    the exploded frame keys by (sub, sdim) and every
-    assignment/update step carries the subspace in its groupBy, so
-    per-iteration cost is one join + two aggregates total — not per
-    subspace — and the shuffle rows are (id, sub, code) scalars.
-    Same determinism contract as :func:`kmeans_assign` (lowest-id
-    seeds per subspace, 6-dp rounding grid, lowest-code tie-break),
-    so the full training trajectory is DuckDB-recomputable.
+    All m subspace k-means run as ONE Lloyd pipeline: the exploded
+    frame keys by (sub, sdim) and every assignment/update step carries
+    the subspace in its groupBy, so per-iteration cost is one join +
+    two aggregates total — not per subspace — and the shuffle rows are
+    (id, sub, code) scalars. Same determinism contract as
+    :func:`kmeans_assign` (lowest-id seeds per subspace, 6-dp grid,
+    lowest-code tie-break), so the full training trajectory is
+    DuckDB-recomputable. ``train_stride`` > 1 trains on the md5 hash
+    sample on the driver, as :func:`kmeans_assign` does.
 
     The returned frame holds its persisted training view.
     """
-    spark = df.sparkSession
-    # (sub, sdim) long form: dim // d_sub, dim % d_sub
-    first = df.select(F.size(vec_col).alias("d")).first()
-    dim = int(first["d"])
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    d_sub = dim // m
-    e = df.select(
-        F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "val")
-    ).select(
-        F.col(id_col),
-        (F.col("dim") / d_sub).cast("int").alias("sub"),
-        (F.col("dim") % d_sub).cast("int").alias("sdim"),
-        F.col("val").cast("double").alias("val"),
-    )
-    # Round-17 (guide §5 + §2.4, mirroring kmeans_assign): persist the
-    # TRAINING view only — the Lloyd iterations are the only
-    # multi-read consumers; the final coding pass reads the corpus
-    # once — and hash-partition it by id first so every per-iteration
-    # group/join on (id, ...) runs exchange-free.
-    # Round-18 (guide §1.2/§2.4, mirroring kmeans_assign): a bounded
-    # training sample puts the whole multi-subspace Lloyd trajectory
-    # on the driver from ONE collect — no training-view persist, no
-    # per-iteration driver-blocking collects; the corpus coding pass
-    # stays distributed and byte-identical (_pq_code).
+    d_sub = _subspace_dim(df, vec_col, m)
+    sample = None
     if train_stride > 1:
-        sample = _collect_train_sample(df, vec_col, id_col, train_stride)
-        centroids = _pq_lloyd_driver(sample, k, n_iter, m)
-        out = _pq_code(e, centroids, id_col, spark)
-        out.centroids = centroids
-        return out
-    et = (
-        e.repartition(spark.sparkContext.defaultParallelism, id_col).persist()
-    )
-    out, centroids = _pq_lloyd(e, et, id_col, k, n_iter, spark)
-    out.centroids = centroids
-    return hold(out, et)
-
-
-def _pq_code(
-    frame: DataFrame,
-    cent_rows: list[tuple[int, int, int, float]],
-    id_col: str,
-    spark,
-) -> DataFrame:
-    """One distributed PQ assignment pass of ``frame`` ((id, sub,
-    sdim, val) long form) against a codebook: the exact expression
-    :func:`_pq_lloyd`'s per-iteration/final assignment evaluates —
-    broadcast codebook join, 6-dp grid, lowest-code tie-break."""
-    cent = spark.createDataFrame(
-        cent_rows, "code int, sub int, sdim int, cval double"
-    )
-    dist = (
-        frame.join(F.broadcast(cent), ["sub", "sdim"])
-        .groupBy(id_col, "sub", "code")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))
-                ),
-                6,
-            ).alias("dist2")
+        sample = _collect_rows(
+            df.filter(_train_sample_pred(id_col, train_stride)), vec_col, id_col
         )
+    return _quantize(
+        _explode(df, vec_col, id_col, d_sub), k, n_iter, id_col, train_stride,
+        m, sample=sample,
     )
-    return (
-        dist.groupBy(id_col, "sub")
-        .agg(F.min(F.struct("dist2", "code")).alias("mn"))
-        .select(
-            id_col,
-            "sub",
-            F.col("mn.code").alias("code"),
-            F.col("mn.dist2").alias("dist2"),
-        )
-    )
-
-
-def _pq_lloyd(
-    e: DataFrame,
-    et: DataFrame,
-    id_col: str,
-    k: int,
-    n_iter: int,
-    spark,
-) -> tuple[DataFrame, list[tuple[int, int, int, float]]]:
-    """The shared multi-subspace Lloyd core: ``e`` is the full
-    (id, sub, sdim, val) frame (raw subvectors for plain PQ, residual
-    subvectors for IVF residual PQ) and ``et`` the PERSISTED training
-    view of it (the md5-bucket hash sample, hash-partitioned by id —
-    see :func:`pq_assign`). Seeds = the k lowest ids in ``et``; same
-    6-dp grid and lowest-code tie-break as :func:`kmeans_assign`.
-    Returns (final assignment over ``e``, codebook rows). On failure
-    the training persist is released here."""
-    from pyspark.sql import Window as W
-
-    def assign(
-        cent_rows: list[tuple[int, int, int, float]],
-        frame: DataFrame | None = None,
-    ) -> DataFrame:
-        return _pq_code(frame if frame is not None else e, cent_rows, id_col, spark)
-
-    try:
-        seeded = (
-            et.select(F.col(id_col))
-            .distinct()
-            .orderBy(id_col)
-            .limit(k)
-            .withColumn(
-                "code", (F.row_number().over(W.orderBy(id_col)) - 1).cast("int")
-            )
-        )
-        centroids = [
-            (int(r["code"]), int(r["sub"]), int(r["sdim"]), float(r["cval"]))
-            for r in (
-                seeded.join(et, id_col)
-                .select("code", "sub", "sdim", F.round("val", 6).alias("cval"))
-                .collect()
-            )
-        ]
-        for _ in range(n_iter):
-            a = assign(centroids, et)
-            centroids = [
-                (int(r["code"]), int(r["sub"]), int(r["sdim"]), float(r["cval"]))
-                for r in (
-                    a.join(et, [id_col, "sub"])
-                    .groupBy("code", "sub", "sdim")
-                    .agg(F.round(F.avg("val"), 6).alias("cval"))
-                    .collect()
-                )
-            ]
-        out = assign(centroids)
-    except BaseException:
-        et.unpersist()
-        raise
-    return out, centroids
 
 
 def pq_adc_topk(
@@ -809,8 +665,9 @@ def pq_adc_topk(
     given the PQ training, so exact-oracle-able; its RECALL vs exact
     search is a separate measured floor (tests/test_pq.py).
     """
+    qvec = _query_vecs(df, [query_id], 1, vec_col, id_col)[query_id]
     codes = pq_assign(df, m, k, n_iter, vec_col, id_col, train_stride)
-    lut = _adc_lut(df, codes.centroids, query_id, m, vec_col, id_col)
+    lut = _lut_frame(df.sparkSession, codes.centroids, qvec)
     out = (
         codes.join(F.broadcast(lut), ["sub", "code"])
         .groupBy(id_col)
@@ -820,34 +677,6 @@ def pq_adc_topk(
         .limit(topk)
     )
     return hold(out, codes)
-
-
-def _adc_lut(
-    df: DataFrame,
-    centroids: list[tuple[int, int, int, float]],
-    query_id: int,
-    m: int,
-    vec_col: str,
-    id_col: str,
-    qvec: list[float] | None = None,
-) -> DataFrame:
-    """The (m x k)-entry ADC lookup table for one query:
-    lut[sub][code] = ||q_sub - centroid[sub][code]||^2, 6-dp grid.
-    Round-17: computed ON THE DRIVER (:func:`_adc_lut_rows` — the
-    codebook is already a driver-held list; only the one query row is
-    collected) and returned as a broadcast-sized LOCAL relation,
-    replacing the former scan + join + aggregate sub-plan (guide §2.4:
-    remove stages whose inputs are already driver-sized). ``qvec``
-    lets a caller that already collected the query vector skip the
-    second one-row job."""
-    spark = df.sparkSession
-    if qvec is None:
-        qvec = _collect_query_vec(df, query_id, vec_col, id_col)
-    d_sub = len(qvec) // m
-    return spark.createDataFrame(
-        _adc_lut_rows(centroids, qvec, d_sub),
-        "sub int, code int, lut_d double",
-    )
 
 
 def _train_cells_and_codes(
@@ -890,6 +719,42 @@ def _train_cells_and_codes(
     return done[0], done[1]
 
 
+def _ivf_pq_search(
+    df, query_id, qvec, n_cells, nprobe, m, k, n_iter, topk, vec_col, id_col,
+    balanced, train_stride,
+) -> DataFrame:
+    """:func:`ivf_pq_topk` for a query vector already on the driver."""
+    # balanced=True swaps in the hot-list-splitting quantizer
+    # (kmeans_assign_balanced) — same (id, cluster) + centroids
+    # contract, so the probe/semi-join pipeline is identical; pair it
+    # with a proportionally larger nprobe to hold scan share
+    # constant. The oracled registry path keeps the plain quantizer.
+    cells, codes = _train_cells_and_codes(
+        kmeans_assign_balanced if balanced else kmeans_assign,
+        df, n_cells, m, k, n_iter, vec_col, id_col, train_stride,
+    )
+    # The probed-cell set is a literal IN-list filter on the
+    # assignment, computed from the driver-held centroids.
+    probed = _probe_clusters(cells.centroids, qvec, nprobe)
+    cand = (
+        cells.filter(F.col("cluster").isin([int(c) for c in probed]))
+        .filter(F.col(id_col) != query_id)
+        .select(id_col)
+    )
+    lut = _lut_frame(df.sparkSession, codes.centroids, qvec)
+    # Semi-join the codes to the probed cells BEFORE scoring: at
+    # corpus scale only nprobe/n_cells of the rows ever touch the LUT.
+    out = (
+        codes.join(cand, id_col, "left_semi")
+        .join(F.broadcast(lut), ["sub", "code"])
+        .groupBy(id_col)
+        .agg(F.round(F.sum("lut_d"), 6).alias("adc_dist2"))
+        .orderBy("adc_dist2", id_col)
+        .limit(topk)
+    )
+    return hold(out, cells, codes)
+
+
 def ivf_pq_topk(
     df: DataFrame,
     query_id: int = 0,
@@ -914,46 +779,45 @@ def ivf_pq_topk(
     rows, and each touched row costs m LUT adds, never a float
     vector: both the row-count and the per-row dimensions are cut.
 
-    Plan shape: cell probe is a broadcast-centroid join collapsing to
-    n_cells scalar rows; candidates are a left-semi join on the cell
-    id; ADC is a broadcast-LUT equi-join on (sub, code). Everything
-    is deterministic given the (separately oracled) k-means and PQ
+    Plan shape: the cell probe and the LUT are computed on the driver
+    from the one collected query row and the driver-held codebooks;
+    candidates are an IN-list filter on the cell id; ADC is a
+    broadcast-LUT equi-join on (sub, code). Everything is
+    deterministic given the (separately oracled) k-means and PQ
     trainings, so the full two-level search replays exactly in
     DuckDB; recall floors live in tests/test_pq.py.
     """
-    # balanced=True swaps in the hot-list-splitting quantizer
-    # (kmeans_assign_balanced) — same (id, cluster) + centroids
-    # contract, so the probe/semi-join pipeline is identical; pair it
-    # with a proportionally larger nprobe to hold scan share
-    # constant. The oracled registry path keeps the plain quantizer.
-    cells, codes = _train_cells_and_codes(
-        kmeans_assign_balanced if balanced else kmeans_assign,
-        df, n_cells, m, k, n_iter, vec_col, id_col, train_stride,
+    qvec = _query_vecs(df, [query_id], 1, vec_col, id_col)[query_id]
+    return _ivf_pq_search(
+        df, query_id, qvec, n_cells, nprobe, m, k, n_iter, topk, vec_col,
+        id_col, balanced, train_stride,
     )
-    # Round-17: the cell probe runs ON THE DRIVER (guide §2.4) — the
-    # trained centroids are already a driver-held k x dim list, so
-    # only the one query row is collected; the probed-cell set becomes
-    # a literal IN-list filter on the assignment frame instead of the
-    # former centroid-scan + join + aggregate + top-k sub-plan.
-    qvec = _collect_query_vec(df, query_id, vec_col, id_col)
-    probed = _probe_clusters(cells.centroids, qvec, nprobe)
-    cand = (
-        cells.filter(F.col("cluster").isin([int(c) for c in probed]))
-        .filter(F.col(id_col) != query_id)
-        .select(id_col)
+
+
+def _exact_dist2(
+    df: DataFrame,
+    pairs: DataFrame,
+    qmap: dict[int, list[float]],
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The exact re-rank stage: (q_id, id, dist2), the squared L2 on the
+    6-dp grid from each query in ``qmap`` to the candidate ids
+    ``pairs`` ((q_id, id) rows) names. The broadcast pairs filter the
+    exploded corpus, so only candidates' vectors are scored; the query
+    matrix joins as a broadcast local relation of (q_id, dim) scalars."""
+    q = df.sparkSession.createDataFrame(
+        [(qid, d, v) for qid in sorted(qmap) for d, v in enumerate(qmap[qid])],
+        "q_id long, sdim int, qval double",
     )
-    lut = _adc_lut(df, codes.centroids, query_id, m, vec_col, id_col, qvec=qvec)
-    # Semi-join the codes to the probed cells BEFORE scoring: at
-    # corpus scale only nprobe/n_cells of the rows ever touch the LUT.
-    out = (
-        codes.join(cand, id_col, "left_semi")
-        .join(F.broadcast(lut), ["sub", "code"])
-        .groupBy(id_col)
-        .agg(F.round(F.sum("lut_d"), 6).alias("adc_dist2"))
-        .orderBy("adc_dist2", id_col)
-        .limit(topk)
+    diff = F.col("val") - F.col("qval")
+    return (
+        _explode(df, vec_col, id_col)
+        .join(F.broadcast(pairs), id_col)
+        .join(F.broadcast(q), ["q_id", "sdim"])
+        .groupBy("q_id", id_col)
+        .agg(F.round(F.sum(diff * diff), 6).alias("dist2"))
     )
-    return hold(out, cells, codes)
 
 
 def ivf_pq_rerank_topk(
@@ -984,32 +848,20 @@ def ivf_pq_rerank_topk(
     cells does not recover it (it is quantization distortion, not a
     probe miss; tests/test_lsh_recall.py pins this). The re-rank
     recovers it at a bounded cost: exactly ``shortlist`` full
-    vectors are ever read — a semi-join of the (id-only) shortlist
-    against the corpus, then one broadcast-query distance per row —
-    so at 100 TB the exact stage touches 50 rows, not the corpus.
+    vectors are ever read — a broadcast of the (id-only) shortlist
+    filtering the corpus, then one broadcast-query distance per row —
+    so at 100 TB the exact stage touches 50 rows, not the corpus. The
+    query row is collected once and serves both stages.
     """
-    short = ivf_pq_topk(
-        df, query_id, n_cells, nprobe, m, k, n_iter, shortlist, vec_col, id_col,
-        balanced=balanced, train_stride=train_stride,
+    qvec = _query_vecs(df, [query_id], 1, vec_col, id_col)[query_id]
+    short = _ivf_pq_search(
+        df, query_id, qvec, n_cells, nprobe, m, k, n_iter, shortlist, vec_col,
+        id_col, balanced, train_stride,
     )
-    e = _exploded(df, vec_col, id_col)
-    # Round-17: the broadcast query frame is a LOCAL relation built
-    # from the one collected query row (guide §2.4 — the former
-    # filter+posexplode sub-plan re-scanned the corpus for one row).
-    qvec = _collect_query_vec(df, query_id, vec_col, id_col)
-    q = df.sparkSession.createDataFrame(
-        list(enumerate(qvec)), "dim int, qval double"
-    )
+    pairs = short.select(F.lit(query_id).cast("long").alias("q_id"), id_col)
     out = (
-        e.join(short.select(id_col), id_col, "left_semi")
-        .join(F.broadcast(q), "dim")
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.sum((F.col("val") - F.col("qval")) * (F.col("val") - F.col("qval"))),
-                6,
-            ).alias("dist2")
-        )
+        _exact_dist2(df, pairs, {query_id: qvec}, vec_col, id_col)
+        .select(id_col, "dist2")
         .orderBy("dist2", id_col)
         .limit(topk)
     )
@@ -1032,11 +884,10 @@ def kmeans_code_frozen(
     a scheduled, churn-audited event (the capped-vs-full churn
     findings in BASELINE.md price exactly that decision).
 
-    Same distance expression, 6-dp grid, and lowest-cluster
-    tie-break as :func:`kmeans_assign`'s final assignment, so coding
-    a corpus against its OWN trained centroids reproduces the
-    training assignment row-for-row
-    (tests/test_index_maintenance.py). For a
+    It is :func:`_pq_code` with one subspace — the plan
+    :func:`kmeans_assign`'s final assignment runs — so coding a
+    corpus against its OWN trained centroids reproduces the training
+    assignment row-for-row (tests/test_index_maintenance.py). For a
     :func:`kmeans_assign_balanced` codebook the semantics are still
     FAISS add() — every vector lands on its true nearest FINAL cell
     (pinned by brute force) — but that flat assignment may differ
@@ -1048,32 +899,9 @@ def kmeans_code_frozen(
     with ``centroids`` re-attached (the frozen list, unchanged);
     single-scan plan, nothing persisted.
     """
-    spark = df.sparkSession
-    cent = spark.createDataFrame(
-        [(int(c), int(d), float(v)) for c, d, v in centroids],
-        "cluster int, dim int, cval double",
+    return _as_kmeans(
+        _pq_code(_explode(df, vec_col, id_col), _codebook(centroids), id_col), id_col
     )
-    e = (
-        df.select(F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "val"))
-        .select(F.col(id_col), "dim", F.col("val").cast("double").alias("val"))
-    )
-    dist = (
-        e.join(F.broadcast(cent), "dim")
-        .groupBy(id_col, "cluster")
-        .agg(
-            F.round(
-                F.sum((F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))),
-                6,
-            ).alias("dist2")
-        )
-    )
-    out = (
-        dist.groupBy(id_col)
-        .agg(F.min(F.struct("dist2", "cluster")).alias("m"))
-        .select(id_col, F.col("m.cluster").alias("cluster"), F.col("m.dist2").alias("dist2"))
-    )
-    out.centroids = [(int(c), int(d), float(v)) for c, d, v in centroids]
-    return out
 
 
 def pq_code_frozen(
@@ -1085,54 +913,14 @@ def pq_code_frozen(
 ) -> DataFrame:
     """PQ-code vectors against a FROZEN codebook — the PQ half of
     FAISS ``IndexIVFPQ.add()`` (see :func:`kmeans_code_frozen`).
-    One coding scan: broadcast m x k x d_sub codebook cells, one
+    One coding scan (:func:`_pq_code`, the plan training's final
+    assignment runs): broadcast m x k x d_sub codebook cells, one
     join + two aggregates, shuffle rows are (id, sub, code) scalars.
-    Same distance expression, 6-dp grid, and lowest-code tie-break
-    as :func:`_pq_lloyd`'s final assignment, so coding a corpus
-    against its own trained codebook reproduces the training
-    assignment row-for-row. Returns (id, sub, code, dist2) with
-    ``centroids`` re-attached; nothing persisted."""
-    spark = df.sparkSession
-    first = df.select(F.size(vec_col).alias("d")).first()
-    dim = int(first["d"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    d_sub = dim // m
-    cent = spark.createDataFrame(
-        [(int(c), int(s), int(sd), float(v)) for c, s, sd, v in centroids],
-        "code int, sub int, sdim int, cval double",
-    )
-    e = (
-        df.select(F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "val"))
-        .select(
-            F.col(id_col),
-            (F.col("dim") / d_sub).cast("int").alias("sub"),
-            (F.col("dim") % d_sub).cast("int").alias("sdim"),
-            F.col("val").cast("double").alias("val"),
-        )
-    )
-    dist = (
-        e.join(F.broadcast(cent), ["sub", "sdim"])
-        .groupBy(id_col, "sub", "code")
-        .agg(
-            F.round(
-                F.sum((F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval"))),
-                6,
-            ).alias("dist2")
-        )
-    )
-    out = (
-        dist.groupBy(id_col, "sub")
-        .agg(F.min(F.struct("dist2", "code")).alias("mn"))
-        .select(
-            F.col(id_col),
-            "sub",
-            F.col("mn.code").alias("code"),
-            F.col("mn.dist2").alias("dist2"),
-        )
-    )
-    out.centroids = [(int(c), int(s), int(sd), float(v)) for c, s, sd, v in centroids]
-    return out
+    Coding a corpus against its own trained codebook reproduces the
+    training assignment row-for-row. Returns (id, sub, code, dist2)
+    with ``centroids`` re-attached; nothing persisted."""
+    d_sub = _subspace_dim(df, vec_col, m)
+    return _pq_code(_explode(df, vec_col, id_col, d_sub), centroids, id_col)
 
 
 def variance_balanced_permutation(
@@ -1287,8 +1075,7 @@ def matched_churn_from_flows(
 
 
 def effective_nprobe(nprobe: int, n_cells: int, realized_cells: int) -> int:
-    """The split-ratio nprobe correction for balanced IVF (round-17
-    encoding of the round-16 sweep finding, VERDICT r16 ask #5):
+    """The split-ratio nprobe correction for balanced IVF:
     hot-list splitting turns ``n_cells`` requested cells into
     ``realized_cells`` smaller ones, so a FIXED nprobe covers a
     smaller share of a hot MODE — measured on the skew twin, the
@@ -1308,6 +1095,7 @@ def effective_nprobe(nprobe: int, n_cells: int, realized_cells: int) -> int:
     import math
 
     return max(nprobe, nprobe * math.ceil(realized_cells / n_cells))
+
 
 
 def ivf_pq_batch_topk(
@@ -1350,7 +1138,7 @@ def ivf_pq_batch_topk(
     plans stay byte-stable) applies :func:`effective_nprobe` when
     ``balanced=True``: nprobe is scaled by the realized split ratio
     (realized_cells / n_cells, ceil) so probe coverage of a hot mode
-    stays constant after hot-list splitting — the round-16 sweep's
+    stays constant after hot-list splitting — the nprobe sweep's
     low-nprobe dilution finding, floor-pinned in
     tests/test_lsh_recall.py::test_composed_stack_corrected_nprobe.
     The correction is a driver-side integer derived from the
@@ -1373,44 +1161,40 @@ def ivf_pq_batch_topk(
     ``n_iter`` govern training only and are ignored for a half whose
     index is frozen.
 
-    Scale shape: probes and LUTs stay broadcast-sized (Q x n_cells
-    scalar rows, Q x m x k LUT rows); candidates are a shuffle join
-    of the code table against the (q_id, id) probe fan-out (scalars,
-    fan-out <= Q x nprobe / n_cells per row). The per-query top-k is
-    TWO-PHASE — a partial top-k inside each scan partition
-    (row_number over (q_id, spark_partition_id()), a bounded
+    Scale shape: the query matrix is collected once (Q bounded rows;
+    FAISS's search(xq, k) holds it in memory too), and probes and LUTs
+    are computed from it on the driver, so they stay broadcast-sized
+    (Q x nprobe probe rows, Q x m x k LUT rows); candidates are a
+    shuffle join of the code table against the (q_id, id) probe
+    fan-out (scalars, fan-out <= Q x nprobe / n_cells per row). The
+    per-query top-k is TWO-PHASE — a partial top-k inside each scan
+    partition (row_number over (q_id, spark_partition_id()), a bounded
     superset that contains the true top-k under ANY partitioning)
     then the final rank over <= Q x partitions x topk survivors — so
     no single task ever sorts a whole query's candidate set (the
     batched twin of the TakeOrderedAndProject heap the single-query
     ORDER BY + LIMIT plan gets for free).
     """
+    qmap = _query_vecs(df, query_ids, n_queries, vec_col, id_col)
+    return _ivf_pq_batch_search(
+        df, qmap, n_cells, nprobe, m, k, n_iter, topk, vec_col, id_col,
+        balanced, train_stride, nprobe_scale_with_split, coarse_index, pq_index,
+    )
+
+
+def _ivf_pq_batch_search(
+    df, qmap, n_cells, nprobe, m, k, n_iter, topk, vec_col, id_col, balanced,
+    train_stride, nprobe_scale_with_split, coarse_index, pq_index,
+) -> DataFrame:
+    """:func:`ivf_pq_batch_topk` for a query matrix already on the
+    driver."""
     from pyspark.sql import Window as W
 
     spark = df.sparkSession
-    # The query matrix is collected once (Q bounded rows; FAISS's
-    # search(xq, k) holds it in memory too). Per-query probes and LUTs
-    # are then computed on the driver from the driver-held codebooks
-    # (:func:`_probe_clusters`, :func:`_adc_lut_rows`) and become
-    # broadcast-sized local relations: Q x nprobe probe rows and
-    # Q x m x k LUT rows.
-    qrows = (
-        df.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-        if query_ids is not None
-        else df.orderBy(id_col).limit(n_queries)
-    ).select(F.col(id_col), F.col(vec_col)).collect()
-    qmap = {int(r[0]): [float(v) for v in r[1]] for r in qrows}
-    if not qmap:
-        # Fail with the cause, and before training persists anything.
-        raise ValueError(
-            "ivf_pq_batch_topk: no query rows resolved "
-            f"(query_ids={query_ids!r}, n_queries={n_queries})"
-        )
     # balanced=True swaps in the hot-list-splitting quantizer — same
     # (id, cluster) + centroids contract, so the probe/candidate
-    # pipeline is identical (the single-query entries' composition,
-    # now available to the batch call path; registry defaults keep
-    # the plain quantizer so plans stay byte-stable).
+    # pipeline is identical (registry defaults keep the plain
+    # quantizer so plans stay byte-stable).
     assign = kmeans_assign_balanced if balanced else kmeans_assign
     if coarse_index is None and pq_index is None:
         cells, codes = _train_cells_and_codes(
@@ -1432,7 +1216,6 @@ def ivf_pq_batch_topk(
         realized = len({c for c, _, _ in cells.centroids})
         nprobe = effective_nprobe(nprobe, n_cells, realized)
 
-    d_sub = len(next(iter(qmap.values()))) // m
     probe_rows = [
         (q, int(c))
         for q in sorted(qmap)
@@ -1449,7 +1232,7 @@ def ivf_pq_batch_topk(
     lut_rows = [
         (q, sub, code, lut_d)
         for q in sorted(qmap)
-        for sub, code, lut_d in _adc_lut_rows(codes.centroids, qmap[q], d_sub)
+        for sub, code, lut_d in _adc_lut_rows(codes.centroids, qmap[q])
     ]
     lut = spark.createDataFrame(
         lut_rows, "q_id long, sub int, code int, lut_d double"
@@ -1512,9 +1295,9 @@ def ivf_pq_batch_rerank_topk(
     against the query matrix and each query's true top-k is taken.
     This is the call path where the skew remedy applies to batched
     search: PQ distortion on hot clusters is recovered per query at a
-    bounded exact cost (the round-13/14 shortlist-knee finding —
-    hot queries are distortion-limited and recover under re-rank;
-    cold tails are probe-limited and need nprobe, not shortlist).
+    bounded exact cost (the shortlist-knee sweep: hot queries are
+    distortion-limited and recover under re-rank; cold tails are
+    probe-limited and need nprobe, not shortlist).
 
     Returns (q_id, vec_id, dist2) ordered by (q_id, dist2, vec_id);
     per-query rows are EXACTLY ivf_pq_rerank_topk(query_id=q)
@@ -1526,13 +1309,14 @@ def ivf_pq_batch_rerank_topk(
     remedy stack.
 
     Scale shape: the exact stage's input is bounded by construction —
-    Q x shortlist id pairs (broadcast) semi-filter the exploded
-    corpus, the query matrix joins as Q x dim broadcast scalars, and
-    the per-query rank windows over at most Q x shortlist surviving
-    rows REGARDLESS of corpus size (no two-phase top-k needed here:
-    unlike the ADC candidate set, the re-rank input cannot grow with
-    the corpus), so the final output is partitioning-independent
-    (pinned in tests/test_pq.py alongside the batch-search pin).
+    Q x shortlist id pairs (broadcast) filter the exploded corpus, the
+    query matrix (collected once, shared with the shortlist search)
+    joins as Q x dim broadcast scalars, and the per-query rank windows
+    over at most Q x shortlist surviving rows REGARDLESS of corpus
+    size (no two-phase top-k needed here: unlike the ADC candidate
+    set, the re-rank input cannot grow with the corpus), so the final
+    output is partitioning-independent (pinned in tests/test_pq.py
+    alongside the batch-search pin).
 
     ``nprobe_scale_with_split`` forwards to the underlying batch
     search (see :func:`ivf_pq_batch_topk`): when ``balanced=True``,
@@ -1549,44 +1333,12 @@ def ivf_pq_batch_rerank_topk(
     """
     from pyspark.sql import Window as W
 
-    short = ivf_pq_batch_topk(
-        df, n_queries=n_queries, n_cells=n_cells, nprobe=nprobe, m=m,
-        k=k, n_iter=n_iter, topk=shortlist, vec_col=vec_col,
-        id_col=id_col, balanced=balanced, train_stride=train_stride,
-        query_ids=query_ids,
-        nprobe_scale_with_split=nprobe_scale_with_split,
-        coarse_index=coarse_index, pq_index=pq_index,
+    qmap = _query_vecs(df, query_ids, n_queries, vec_col, id_col)
+    short = _ivf_pq_batch_search(
+        df, qmap, n_cells, nprobe, m, k, n_iter, shortlist, vec_col, id_col,
+        balanced, train_stride, nprobe_scale_with_split, coarse_index, pq_index,
     )
-    pairs = short.select("q_id", id_col)
-    # Round-17: the exact stage's query matrix is a LOCAL relation
-    # built from the collected query rows (guide §2.4 — the former
-    # filter/TakeOrdered + posexplode sub-plan re-scanned the corpus
-    # for Q bounded rows).
-    qrows = (
-        df.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-        if query_ids is not None
-        else df.orderBy(id_col).limit(n_queries)
-    ).select(F.col(id_col), F.col(vec_col)).collect()
-    qset = df.sparkSession.createDataFrame(
-        [
-            (int(r[0]), d, float(v))
-            for r in sorted(qrows, key=lambda r: int(r[0]))
-            for d, v in enumerate(r[1])
-        ],
-        "q_id long, dim int, qval double",
-    )
-    e = _exploded(df, vec_col, id_col)
-    scored = (
-        e.join(F.broadcast(pairs), id_col)
-        .join(F.broadcast(qset), ["q_id", "dim"])
-        .groupBy("q_id", id_col)
-        .agg(
-            F.round(
-                F.sum((F.col("val") - F.col("qval")) * (F.col("val") - F.col("qval"))),
-                6,
-            ).alias("dist2")
-        )
-    )
+    scored = _exact_dist2(df, short.select("q_id", id_col), qmap, vec_col, id_col)
     out = (
         scored.withColumn(
             "rk",
@@ -1629,7 +1381,7 @@ def ivf_residual_pq_topk(
     two-level residual pipeline replays in DuckDB. Plan shape: one
     extra broadcast join (coarse centroids into the exploded frame)
     over :func:`ivf_pq_topk`; LUTs stay (nprobe x m x k) broadcast
-    rows.
+    rows, computed on the driver like the probe.
     """
     # balanced=True swaps in the hot-list-splitting coarse quantizer —
     # the composition matters MORE here than for plain IVF-PQ: the
@@ -1640,84 +1392,51 @@ def ivf_residual_pq_topk(
     # so the per-cell LUT pipeline below is identical; registry
     # defaults keep the plain quantizer (plans stay byte-stable).
     assign = kmeans_assign_balanced if balanced else kmeans_assign
+    qvec = _query_vecs(df, [query_id], 1, vec_col, id_col)[query_id]
     cells = assign(
         df, n_cells, n_iter, vec_col=vec_col, id_col=id_col,
         train_stride=train_stride,
     )
     spark = df.sparkSession
-    cent = spark.createDataFrame(cells.centroids, "cluster int, dim int, cval double")
-    # Query vector collected once (one-row pushed-filter job); it also
-    # supplies the dimensionality, replacing the former first() probe.
-    qvec = _collect_query_vec(df, query_id, vec_col, id_col)
     d_sub = len(qvec) // m
-
+    by_c = _coarse_cells(cells.centroids)
+    cent = spark.createDataFrame(
+        [(c, d // d_sub, d % d_sub, v) for c, d, v in cells.centroids],
+        "cluster int, sub int, sdim int, cval double",
+    )
     # Residual subvectors: v - centroid(cell(v)), exact IEEE (cval is
     # the same 6-dp double on both engines; no extra rounding needed).
-    # Round-17 cache layout (guide §5): persist the (id, cluster)
-    # ASSIGNMENT (3 scalars per vector — it is read by the residual
-    # derivation AND the final scoring join) and the residual TRAINING
-    # view (bounded by the stride sample, hash-partitioned by id so
-    # the Lloyd iterations run exchange-free), instead of the full
-    # corpus x dim residual explosion the previous layout cached; the
-    # final coding pass re-derives residuals once from the cached
-    # assignment.
-    # Round-18 (ADVICE r17): both consumers read only (id, cluster) —
-    # dist2 stays out of the persisted footprint.
+    # The (id, cluster) assignment is persisted because the residual
+    # derivation and the final scoring join both read it; residuals
+    # are re-derived from it rather than cached corpus x dim.
     cells_asg = cells.select(id_col, "cluster").persist()
-    e_full = _exploded(df, vec_col, id_col)
     res = (
-        e_full.join(cells_asg, id_col)
-        .join(F.broadcast(cent), ["cluster", "dim"])
-        .select(
-            F.col(id_col),
-            (F.col("dim") / d_sub).cast("int").alias("sub"),
-            (F.col("dim") % d_sub).cast("int").alias("sdim"),
-            (F.col("val") - F.col("cval")).alias("val"),
-        )
+        _explode(df, vec_col, id_col, d_sub)
+        .join(cells_asg, id_col)
+        .join(F.broadcast(cent), ["cluster", "sub", "sdim"])
+        .select(id_col, "sub", "sdim", (F.col("val") - F.col("cval")).alias("val"))
     )
-    train_sample = getattr(cells, "train_sample", None)
-    if train_sample is not None:
-        # Round-18 (guide §1.2/§2.4): the residual TRAINING sample is
-        # the same md5-stride id set the coarse training collected —
-        # derive each sampled row's residual ON THE DRIVER (assign to
-        # its nearest final coarse cell via the pinned _round6 argmin
-        # twin, subtract the 6-dp centroid: the identical exact-IEEE
-        # subtraction the distributed plan computes) and run the
-        # residual-PQ Lloyd trajectory there too. Replaces the
-        # residual training-view persist + 3 more driver-blocking
-        # collects; the corpus coding pass stays distributed.
-        by_c = _cells_by_cluster(cells.centroids)
-        res_sample = []
-        for sid, vec in train_sample:  # ascending id
-            cv = by_c[_nearest_cluster(by_c, vec)]
-            res_sample.append((sid, [vec[d] - cv[d] for d in range(len(vec))]))
-        codebook = _pq_lloyd_driver(res_sample, k, n_iter, m)
-        codes = _pq_code(res, codebook, id_col, spark)
-        rt = None
-    else:
-        rt = (
-            res.filter(_train_sample_pred(id_col, train_stride))
-            if train_stride > 1
-            else res
-        ).repartition(spark.sparkContext.defaultParallelism, id_col).persist()
-        codes, codebook = _pq_lloyd(res, rt, id_col, k, n_iter, spark)
+    # A coarse training that ran on the driver hands over its sample:
+    # each sampled row's residual is derived there too (its nearest
+    # final cell by the same argmin, the same exact subtraction), so
+    # the residual codebook trains from that one collect.
+    sample = None
+    if getattr(cells, "train_sample", None) is not None:
+        sample = []
+        for sid, vec in cells.train_sample:  # ascending id
+            cv = by_c[_nearest(by_c, vec)[1]]
+            sample.append((sid, [a - b for a, b in zip(vec, cv)]))
+    codes = _quantize(res, k, n_iter, id_col, train_stride, m, sample=sample)
 
-    # Round-17: probe + per-probed-cell residual LUTs ON THE DRIVER
-    # (guide §2.4) — both codebooks are already driver-held lists, so
-    # only the one query row is collected; the (nprobe x m x k)-row
-    # LUT becomes a broadcast-sized local relation, replacing the
-    # former centroid-scan + two-join + aggregate sub-plan. Per-cell
-    # query residual q - c_cell is the same exact-IEEE subtraction the
-    # plan computed.
-    probed = _probe_clusters(cells.centroids, qvec, nprobe)
-    by_c = _cells_by_cluster(cells.centroids)
-    lut_rows = []
-    for c in probed:
-        qr_vec = [qvec[d] - by_c[c][d] for d in range(len(qvec))]
-        lut_rows.extend(
-            (c, sub, code, lut_d)
-            for sub, code, lut_d in _adc_lut_rows(codebook, qr_vec, d_sub)
+    # Probe, then one residual LUT per probed cell from the query's
+    # residual q - c_cell (the same exact subtraction).
+    lut_rows = [
+        (c, sub, code, lut_d)
+        for c in _probe_clusters(cells.centroids, qvec, nprobe)
+        for sub, code, lut_d in _adc_lut_rows(
+            codes.centroids, [a - b for a, b in zip(qvec, by_c[c])]
         )
+    ]
     lut = spark.createDataFrame(
         lut_rows, "cluster int, sub int, code int, lut_d double"
     )
@@ -1730,7 +1449,7 @@ def ivf_residual_pq_topk(
         .orderBy("adc_dist2", id_col)
         .limit(topk)
     )
-    return hold(out, cells, cells_asg, rt)
+    return hold(out, cells, cells_asg, codes)
 
 
 def semantic_dedup(
@@ -1752,13 +1471,13 @@ def semantic_dedup(
     bargain. Cosines run through the codegen'd posexplode twin, and
     the drop set is tiny (broadcast anti-join shape).
 
-    ``train_stride`` (round 15) offers the TRAIN_CAP bounded-sample
+    ``train_stride`` offers the TRAIN_CAP bounded-sample
     training to this clustering-OUTPUT operator behind a flag: the
     Lloyd iterations read only the md5-bucket hash sample while the
     final assignment and the pair stage still cover every vector —
     at 100 TB the per-iteration training scan was the operator's one
     remaining corpus-proportional stage besides the required final
-    pass. Default 1 keeps the historical full-corpus training (the
+    pass. Default 1 keeps full-corpus training (the
     registry entry's byte-stable plan); the capped trajectory stays
     DuckDB-replayable (tests/test_train_cap.py pins the stride-2
     SemDeDup replay), and the output-quality cost at 100x is
@@ -1768,7 +1487,7 @@ def semantic_dedup(
     """
     assign = kmeans_assign(df, k, n_iter, vec_col, id_col,
                            train_stride=train_stride)
-    # Round-17 (guide §5): the final assignment feeds BOTH pair-join
+    # The final assignment feeds BOTH pair-join
     # sides and the output join — persist the compact (id, cluster)
     # frame once instead of re-running the assignment scan per branch.
     asg = assign.select(id_col, "cluster").persist()

@@ -24,16 +24,18 @@ _SIX_DP = Decimal("1e-6")
 _WIDE = Context(prec=400)
 
 
-def round6(x: float | None) -> float | None:
-    """Spark's ``round(x, 6)`` for a double: HALF_UP on the shortest
-    decimal representation (``BigDecimal.valueOf``), NaN, infinities
-    and null passed through. Python's ``round()`` is banker's rounding
-    on the binary value and differs on ties. ``+ 0.0`` because a
-    BigDecimal has no negative zero, so Spark returns 0.0 for -0.0 and
-    for negatives that round to zero."""
+def round6(x: float | None, places: int = 6) -> float | None:
+    """Spark's ``round(x, places)`` for a double (6 dp unless given):
+    HALF_UP on the shortest decimal representation
+    (``BigDecimal.valueOf``), NaN, infinities and null passed through.
+    Python's ``round()`` is banker's rounding on the binary value and
+    differs on ties. ``+ 0.0`` because a BigDecimal has no negative
+    zero, so Spark returns 0.0 for -0.0 and for negatives that round to
+    zero. This is the package's one Python twin of Spark's ``round``."""
     if x is None or not math.isfinite(x):
         return x
-    return float(Decimal(repr(x)).quantize(_SIX_DP, ROUND_HALF_UP, _WIDE)) + 0.0
+    grid = _SIX_DP if places == 6 else Decimal(1).scaleb(-places)
+    return float(Decimal(repr(x)).quantize(grid, ROUND_HALF_UP, _WIDE)) + 0.0
 
 
 def holt_linear_state(

@@ -1263,37 +1263,23 @@ def ivf_residual_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def covariance_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
-    from decimal import ROUND_HALF_UP, Decimal
 
     from ..operators.similarity import embedding_covariance as cov_op
+    from ..operators.trend import round6
 
-    # Round-17 (guide §1.2/§5): the corpus appears ONLY through the
-    # d x d covariance — every iteration touches 64 x 64 scalars, the
-    # same driver-held-codebook size the kmeans/PQ family already
-    # collects. The former shape ran each power step as an eager
-    # localCheckpoint job plus broadcast-subquery stages (6+ driver
-    # round-trips over 4,096 rows); now ONE distributed job computes
-    # the (exact-integer) covariance, and the three power steps run
-    # on the driver with IDENTICAL arithmetic: the mat-vec is exact
-    # int64 (no accumulation-order dependence — the property the
-    # oracle already relies on), the renorm divide and the final
-    # normalize are the same IEEE-double ops, and the two HALF_UP
-    # roundings replay F.round via Decimal(repr(x)) exactly
-    # (pinned for the 6-dp grid in tests/test_pq.py::
-    # test_python_round6_matches_spark_round).
+    # The corpus appears ONLY through the d x d covariance, so one
+    # distributed job computes it (exact integers) and the three power
+    # steps run on the driver over 64 x 64 scalars with the oracle's
+    # arithmetic: the mat-vec is exact int64 (no accumulation-order
+    # dependence), the renorm divide and the final normalize are the
+    # same IEEE-double ops, and both HALF_UP roundings are
+    # ``trend.round6``, Spark's ``round`` bit for bit.
     emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
     upper = cov_op(emb).select(
         "dim_i",
         "dim_j",
         F.round(F.col("cov") * 1e6).cast("long").alias("cint"),
     )
-
-    def _round_half_up(x: float, places: int) -> float:
-        return float(
-            Decimal(repr(float(x))).quantize(
-                Decimal(1).scaleb(-places), rounding=ROUND_HALF_UP
-            )
-        )
 
     cmat: dict[tuple[int, int], int] = {}
     dims: set[int] = set()
@@ -1313,13 +1299,13 @@ def covariance_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         wmax = max(abs(v) for v in w.values())
         q = {
-            i: int(_round_half_up(float(w[i]) * 1e6 / float(wmax), 0))
+            i: int(round6(float(w[i]) * 1e6 / float(wmax), 0))
             for i in order
         }
     nrm = math.sqrt(float(sum(v * v for v in q.values())))
     top = min(order, key=lambda j: (-abs(q[j]), j))
     flip = 1.0 if q[top] >= 0 else -1.0
     rows = [
-        (j, _round_half_up(q[j] * flip / nrm, 6) + 0.0) for j in order
+        (j, round6(q[j] * flip / nrm)) for j in order
     ]
     return spark.createDataFrame(rows, "dim int, loading double")

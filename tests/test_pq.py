@@ -490,30 +490,34 @@ def test_variance_balanced_pq_recall(spark):
 
 
 def test_python_round6_matches_spark_round(spark, sf_oracle):
-    """The round-17 optimization computes probe/LUT cells on the
-    driver (clustering._round6) instead of through a distributed
-    F.round plan; this pins the two roundings bit-identical over
-    (a) every probe/LUT sum actually produced by registry-parameter
-    trainings on the real corpus and (b) an adversarial grid of
-    half-way points, so the driver-side arithmetic can never drift
-    off the oracle's HALF_UP 6-dp grid."""
+    """Probe/LUT cells, Lloyd seeds and means are computed on the
+    driver (operators.trend.round6) instead of through a distributed
+    F.round plan; this pins the two roundings bit-identical, sign of
+    zero included, over (a) every probe/LUT sum actually produced by
+    registry-parameter trainings on the real corpus and (b) an
+    adversarial grid of half-way points, so the driver-side arithmetic
+    can never drift off the oracle's HALF_UP 6-dp grid."""
+    import math
+
     from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.clustering import (
-        _cells_by_cluster,
-        _collect_query_vec,
-        _round6,
+        _coarse_cells,
+        _query_vecs,
         kmeans_assign,
         pq_assign,
+    )
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.trend import (
+        round6,
     )
 
     emb = load_table(spark, sf_oracle, "embeddings", rebalance=True)
     cells = kmeans_assign(emb, k=8, n_iter=2)
     codes = pq_assign(emb, m=M, k=K, n_iter=2)
-    qvec = _collect_query_vec(emb, 0, "embedding", "vec_id")
+    qvec = _query_vecs(emb, [0], 1, "embedding", "vec_id")[0]
     # every probe sum (unrounded) + every LUT sum (unrounded)
     raw: list[float] = []
-    by_c = _cells_by_cluster(cells.centroids)
+    by_c = _coarse_cells(cells.centroids)
     for c in sorted(by_c):
-        raw.append(sum((qvec[d] - by_c[c][d]) ** 2 for d in sorted(by_c[c])))
+        raw.append(sum((qvec[d] - v) ** 2 for d, v in enumerate(by_c[c])))
     d_sub = len(qvec) // M
     lut_cells: dict[tuple[int, int], dict[int, float]] = {}
     for code, sub, sdim, cval in codes.centroids:
@@ -537,5 +541,8 @@ def test_python_round6_matches_spark_round(spark, sf_oracle):
     )
     sdf = spark.createDataFrame([(float(v),) for v in raw], "x double")
     spark_rounded = [r[0] for r in sdf.select(F.round("x", 6)).collect()]
-    py_rounded = [_round6(v) for v in raw]
+    py_rounded = [round6(v) for v in raw]
     assert spark_rounded == py_rounded
+    assert [math.copysign(1.0, v) for v in spark_rounded] == [
+        math.copysign(1.0, v) for v in py_rounded
+    ]
