@@ -9,9 +9,9 @@ entity matching, and an LLM answer synthesizer. Here those become:
 - ``resolve``    — U1/U5-U10: dict lookups for tiny vocabularies,
   broadcast-dimension fuzzy joins (levenshtein) where the entity
   space is data;
-- ``classify``   — U3 metric vs list question router;
 - ``answer``     — U12 grounded prompt + external LLM call
   (driver-side, injectable transport, template fallback);
 - ``pipeline``   — question -> QuerySpec -> one DataFrame plan ->
-  grounded answer.
+  grounded answer; it also routes U3 (metric vs list question) inside
+  its FEMA spec builder.
 """

@@ -105,20 +105,6 @@ def resolve_entities(
     )
 
 
-def resolve_one(raw_value: str, dim: DataFrame, name_col: str = "name", cutoff: float = CITY_CUTOFF) -> str | None:
-    """Single-value convenience over resolve_entities for the
-    interactive path. Driver-side difflib against the (small,
-    cacheable) dimension values — the per-question shape."""
-    names = [r[0] for r in dim.select(name_col).distinct().collect()]
-    for n in names:
-        if n.lower() == raw_value.lower():
-            return n
-    matches = difflib.get_close_matches(raw_value.lower(), [n.lower() for n in names], n=1, cutoff=cutoff)
-    if not matches:
-        return None
-    return next(n for n in names if n.lower() == matches[0])
-
-
 # Historical / alternate city names -> gazetteer canonical form
 # (public knowledge; the offline stand-in for what Nominatim's alias
 # database would resolve).

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lifecycle import hold
-from .text import normalize_text, tokens
+from .text import normalize_text, tokens, word_grams
 
 
 # --------------------------------------------------------------------------
@@ -66,67 +66,48 @@ def shingles(
     id_col: str = "doc_id",
     k: int = 3,
     distinct: bool = True,
+    hash_family=None,
 ) -> DataFrame:
     """(id, shingle) pairs: k-word shingles per document (distinct by
     default — pass distinct=False for consumers where duplicates are
-    harmless, e.g. MinHash mins, to skip the dedup shuffle).
-
-    Built as arrays_zip over k shifted slices of the per-document
-    token array (round 17, guide §2.4): a MAP-SIDE expression — the
-    former posexplode + lead() window shuffled and sorted every
-    corpus token by doc_id before a single shingle existed. (The
-    historical HOF measurement that motivated the window shape was
-    about per-element LAMBDA functions — transform() — which Spark
-    evaluates interpreted; slice/arrays_zip are ordinary expressions
-    and the k-gram row multiset is identical.)
+    harmless, e.g. MinHash mins, to skip the dedup shuffle). The grams
+    are the map-side :func:`~.text.word_grams`.
 
     A doc with < k tokens contributes its whole token string as a
     single shingle so short docs still participate.
+
+    ``hash_family`` None keeps the shingle strings (the k words joined
+    by single spaces). ``F.xxhash64`` hashes the k gram columns at the
+    source, so no shingle string is built and every downstream
+    distinct, join and aggregate moves 8-byte longs; equal k-grams hash
+    equal, so Jaccard arithmetic is unchanged up to negligible 64-bit
+    collisions. Any other family (:func:`md5_hash64`, the
+    DuckDB-recomputable twin) hashes the shingle string, which is what
+    an oracle can recompute.
     """
     toks = tokens(text_col)
-    cnt = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    zipped = F.arrays_zip(
-        *[F.slice(toks, F.lit(i + 1), cnt).alias(f"t{i}") for i in range(k)]
-    )
-    long_docs = df.select(F.col(id_col), F.explode(zipped).alias("g")).select(
-        F.col(id_col),
-        F.concat_ws(" ", *[F.col(f"g.t{i}") for i in range(k)]).alias("shingle"),
-    )
-    short_docs = df.select(F.col(id_col), F.concat_ws(" ", toks).alias("shingle")).filter(
+    gram = [F.col(f"g.t{i}") for i in range(k)]
+    whole = F.concat_ws(" ", toks)
+    if hash_family is F.xxhash64:
+        gram, whole = F.xxhash64(*gram), F.xxhash64(whole)
+    else:
+        gram = F.concat_ws(" ", *gram)
+    long_docs = df.select(
+        F.col(id_col), F.explode(word_grams(toks, k)).alias("g")
+    ).select(F.col(id_col), gram.alias("shingle"))
+    short_docs = df.select(F.col(id_col), whole.alias("shingle")).filter(
         (F.size(toks) < k) & (F.size(toks) > 0)
     )
-    out = long_docs.unionAll(short_docs).filter(F.col("shingle") != "")
-    return out.distinct() if distinct else out
-
-
-def hashed_shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    distinct: bool = True,
-) -> DataFrame:
-    """(id, shingle: long) — k-word shingles hashed to 64 bits at the
-    source: xxhash64 over the k gram columns directly, so the shingle
-    string is never materialized, the optional distinct dedups 8-byte
-    longs instead of strings, and every downstream join/aggregate
-    shuffles longs. Same map-side arrays_zip shape as
-    :func:`shingles`; equal word-k-grams hash equal, so Jaccard
-    arithmetic is unchanged (modulo negligible 64-bit collisions).
-    """
-    toks = tokens(text_col)
-    cnt = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    zipped = F.arrays_zip(
-        *[F.slice(toks, F.lit(i + 1), cnt).alias(f"t{i}") for i in range(k)]
-    )
-    long_docs = df.select(F.col(id_col), F.explode(zipped).alias("g")).select(
-        F.col(id_col),
-        F.xxhash64(*[F.col(f"g.t{i}") for i in range(k)]).alias("shingle"),
-    )
-    short_docs = df.select(
-        F.col(id_col), F.xxhash64(F.concat_ws(" ", toks)).alias("shingle")
-    ).filter((F.size(toks) < k) & (F.size(toks) > 0))
     out = long_docs.unionAll(short_docs)
+    if hash_family is not F.xxhash64:
+        # Only the string forms drop an empty shingle (a k=1 gram of the
+        # empty token split() leaves after a leading tab); the
+        # pre-hashed form keeps it, so its values stay what they were.
+        out = out.filter(F.col("shingle") != "")
+        if hash_family is not None:
+            out = out.select(
+                F.col(id_col), hash_family(F.col("shingle")).alias("shingle")
+            )
     return out.distinct() if distinct else out
 
 
@@ -152,7 +133,7 @@ def ngram_jaccard_pairs(
     strings (a 64-bit collision merging two shingles needs ~2^32
     distinct shingles per doc pair to matter — negligible).
     """
-    sh = hashed_shingles(df, text_col, id_col, k)
+    sh = shingles(df, text_col, id_col, k, hash_family=F.xxhash64)
     if max_shingle_df is not None:
         rare = (
             sh.groupBy("shingle")
@@ -250,16 +231,12 @@ def allpairs_jaccard_pairs(
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     t = float(threshold)
-    if hash_family is F.xxhash64:
-        sh = hashed_shingles(df, text_col, id_col, k, distinct=False)
-    else:
-        sh = shingles(df, text_col, id_col, k, distinct=False).select(
-            F.col(id_col), hash_family(F.col("shingle")).alias("shingle")
-        )
     # Distinct AFTER hashing: a (vanishingly rare) in-doc hash
     # collision then shrinks the set identically to how an oracle
     # recomputing distinct hashed shingles sees it.
-    sh = sh.distinct()
+    sh = shingles(
+        df, text_col, id_col, k, distinct=False, hash_family=hash_family
+    ).distinct()
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
     w_pos = W.partitionBy(id_col).orderBy("df_count", "shingle")
     positioned = sh.join(dfreq, "shingle").select(
@@ -359,14 +336,7 @@ def weighted_jaccard_pairs(
     recomputable twin, the tfidf_doc_similarity precedent) both join
     on 8-byte keys; ``None`` keeps raw shingle strings.
     """
-    if hash_family is F.xxhash64:
-        sh = hashed_shingles(df, text_col, id_col, k, distinct=False)
-    elif hash_family is None:
-        sh = shingles(df, text_col, id_col, k, distinct=False)
-    else:
-        sh = shingles(df, text_col, id_col, k, distinct=False).select(
-            F.col(id_col), hash_family(F.col("shingle")).alias("shingle")
-        )
+    sh = shingles(df, text_col, id_col, k, distinct=False, hash_family=hash_family)
     counts = sh.groupBy(id_col, "shingle").agg(F.count(F.lit(1)).alias("c"))
     if max_shingle_df is not None:
         rare = (
@@ -502,8 +472,12 @@ def decontaminate(
     5-word strings; the contaminated-id set is tiny and broadcasts.
     Returns (clean, contaminated_ids).
     """
-    c_sh = hashed_shingles(corpus, text_col, id_col, k)
-    t_sh = hashed_shingles(test_set, text_col, id_col, k).select("shingle").distinct()
+    c_sh = shingles(corpus, text_col, id_col, k, hash_family=F.xxhash64)
+    t_sh = (
+        shingles(test_set, text_col, id_col, k, hash_family=F.xxhash64)
+        .select("shingle")
+        .distinct()
+    )
     contaminated = (
         c_sh.join(t_sh, "shingle")
         .groupBy(id_col)
@@ -532,6 +506,14 @@ def md5_hash64(*cols) -> "F.Column":
     return F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
 
 
+def _minhash_shingles(df, text_col, id_col, k, hash_family) -> DataFrame:
+    """Non-distinct shingles for a MinHash ``hash_family``: pre-hashed
+    longs under xxhash64; under any other family the strings, which
+    the family hashes per seed exactly as an oracle recomputes them."""
+    pre = F.xxhash64 if hash_family is F.xxhash64 else None
+    return shingles(df, text_col, id_col, k, distinct=False, hash_family=pre)
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -553,8 +535,7 @@ def minhash_signatures(
     over 8-byte keys; the md5 family keeps string shingles so the
     oracle can recompute them.
     """
-    sh_fn = hashed_shingles if hash_family is F.xxhash64 else shingles
-    sh = sh_fn(df, text_col, id_col, k, distinct=False)
+    sh = _minhash_shingles(df, text_col, id_col, k, hash_family)
     aggs = [
         F.min(hash_family(F.lit(j), F.col("shingle"))).alias(f"mh_{j}")
         for j in range(num_hashes)
@@ -672,8 +653,7 @@ def minhash_near_duplicates(
     operate on longs — the persisted frame holds ~8 bytes per
     distinct shingle instead of a multi-word string.
     """
-    sh_fn = hashed_shingles if hash_family is F.xxhash64 else shingles
-    sh = sh_fn(df, text_col, id_col, k, distinct=False)
+    sh = _minhash_shingles(df, text_col, id_col, k, hash_family)
     aggs = [
         F.min(hash_family(F.lit(j), F.col("shingle"))).alias(f"mh_{j}")
         for j in range(num_hashes)
@@ -759,11 +739,10 @@ def incremental_minhash_near_duplicates(
     The result holds the persisted new-batch combined aggregate and
     candidate frames.
     """
-    sh_fn = hashed_shingles if hash_family is F.xxhash64 else shingles
     # One shingling pass over the NEW batch feeds both its signatures
     # and its verify-stage shingle sets (the minhash_near_duplicates
     # combined-aggregate shape).
-    new_sh = sh_fn(new_docs, text_col, id_col, k, distinct=False)
+    new_sh = _minhash_shingles(new_docs, text_col, id_col, k, hash_family)
     aggs = [
         F.min(hash_family(F.lit(j), F.col("shingle"))).alias(f"mh_{j}")
         for j in range(num_hashes)
@@ -823,7 +802,7 @@ def incremental_minhash_near_duplicates(
     ).distinct()
     old_touched = old_docs.join(touched, id_col, "left_semi")
     old_sets = (
-        sh_fn(old_touched, text_col, id_col, k, distinct=False)
+        _minhash_shingles(old_touched, text_col, id_col, k, hash_family)
         .groupBy(id_col)
         .agg(F.collect_set("shingle").alias("shingle_set"))
     )
@@ -879,8 +858,7 @@ def minhash_jaccard_estimates(
 
     The result holds the persisted combined aggregate.
     """
-    sh_fn = hashed_shingles if hash_family is F.xxhash64 else shingles
-    sh = sh_fn(df, text_col, id_col, k, distinct=False)
+    sh = _minhash_shingles(df, text_col, id_col, k, hash_family)
     aggs = [
         F.min(hash_family(F.lit(j), F.col("shingle"))).alias(f"mh_{j}")
         for j in range(num_hashes)
@@ -924,6 +902,39 @@ def minhash_jaccard_estimates(
 # Exact substring duplication (Lee et al. 2022, arXiv:2107.06499 shape)
 # --------------------------------------------------------------------------
 
+def _char_grams(
+    df: DataFrame, text_col: str, id_col: str, k: int, hash_family
+) -> DataFrame:
+    """(id, p, k_eff, gh): the hashed char ``k``-gram at every 1-based
+    start ``p`` of each document (``k_eff`` = k). A non-empty document
+    shorter than ``k`` is one gram of its whole text (``p`` 1,
+    ``k_eff`` its length); an empty one has none. Each gram is hashed
+    at the source, so 8-byte keys shuffle, never k-char strings."""
+    n = F.length(text_col)
+    long_g = (
+        df.filter(n >= k)
+        .select(
+            F.col(id_col),
+            F.explode(F.sequence(F.lit(1), n - (k - 1))).alias("p"),
+            F.lit(k).alias("k_eff"),
+            F.col(text_col),
+        )
+        .select(
+            F.col(id_col),
+            F.col("p"),
+            F.col("k_eff"),
+            hash_family(F.expr(f"substring({text_col}, p, {k})")).alias("gh"),
+        )
+    )
+    short_g = df.filter((n > 0) & (n < k)).select(
+        F.col(id_col),
+        F.lit(1).alias("p"),
+        n.alias("k_eff"),
+        hash_family(F.col(text_col)).alias("gh"),
+    )
+    return long_g.unionAll(short_g)
+
+
 def char_ngram_dup_profile(
     df: DataFrame,
     text_col: str = "text",
@@ -949,29 +960,17 @@ def char_ngram_dup_profile(
     (both engines then see identical 32-bit gram keys, so even hash
     collisions agree).
     """
-    n = F.length(text_col)
-    long_g = (
-        df.filter(n >= k)
-        .select(
-            F.col(id_col),
-            F.col(text_col),
-            F.explode(F.sequence(F.lit(1), n - (k - 1))).alias("p"),
-        )
-        .select(
-            F.col(id_col),
-            hash_family(F.expr(f"substring({text_col}, p, {k})")).alias("gh"),
-        )
+    # Persisted: the gram frame feeds the dup-set aggregate AND the
+    # per-doc profile join, and left lazy the stride-1 hash-per-position
+    # pass (the operator's dominant compute) would run twice. Only
+    # (id, gh) is kept, and MEMORY_AND_DISK (the default) spills the
+    # 8-byte keys at corpus scale, still far cheaper than a second
+    # hashing pass over every character position.
+    g = (
+        _char_grams(df, text_col, id_col, k, hash_family)
+        .select(id_col, "gh")
+        .persist()
     )
-    short_g = df.filter((n > 0) & (n < k)).select(
-        F.col(id_col), hash_family(F.col(text_col)).alias("gh")
-    )
-    # Persisted (round 17, guide §5): the gram frame feeds the
-    # dup-set aggregate AND the per-doc profile join — left lazy, the
-    # stride-1 md5-per-position pass (the operator's dominant compute)
-    # ran twice. MEMORY_AND_DISK default: at corpus scale the cached
-    # 8-byte keys spill to local disk, still far cheaper than a second
-    # full hashing pass over every character position.
-    g = long_g.unionAll(short_g).persist()
     dup = (
         g.groupBy("gh")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))
@@ -1208,29 +1207,7 @@ def remove_duplicate_spans(
     """
     from pyspark.sql import Window as W
 
-    n = F.length(text_col)
-    long_g = (
-        df.filter(n >= k)
-        .select(
-            F.col(id_col),
-            F.explode(F.sequence(F.lit(1), n - (k - 1))).alias("p"),
-            F.lit(k).alias("k_eff"),
-            F.col(text_col),
-        )
-        .select(
-            F.col(id_col),
-            F.col("p"),
-            F.col("k_eff"),
-            hash_family(F.expr(f"substring({text_col}, p, {k})")).alias("gh"),
-        )
-    )
-    short_g = df.filter((n > 0) & (n < k)).select(
-        F.col(id_col),
-        F.lit(1).alias("p"),
-        n.alias("k_eff"),
-        hash_family(F.col(text_col)).alias("gh"),
-    )
-    g = long_g.unionAll(short_g)
+    g = _char_grams(df, text_col, id_col, k, hash_family)
     dup = (
         g.groupBy("gh")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))

@@ -14,10 +14,12 @@ always positive):
     s(d, q) = sum over t in q of
               idf(t) * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl/avgdl))
 
-Scale shape: one token explode, two aggregates (per-doc length,
-per-term document frequency), and the scoring join broadcasts the
-tiny per-term idf and the 1-row corpus stats — only (doc, term, tf)
-scalars shuffle; nothing quadratic, no UDFs.
+Scale shape: one token explode (the caller's, so a query that also
+reads the tokens for other scores explodes them once), two
+aggregates (per-doc length, per-term document frequency), and the
+scoring join broadcasts the tiny per-term idf and the 1-row corpus
+stats — only (doc, term, tf) scalars shuffle; nothing quadratic, no
+UDFs.
 """
 
 from __future__ import annotations
@@ -25,20 +27,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens
 
 
 def bm25_scores(
-    df: DataFrame,
+    tok: DataFrame,
     terms: list[str],
-    text_col: str = "text",
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """(id, bm25) for every document matching >= 1 query term; the
-    score is rounded to 4 dp (oracle-stable)."""
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
+    """(id, bm25) for every document matching >= 1 query term, from
+    the corpus's (id, token) rows, one per token occurrence (explode
+    :func:`~.text.tokens`); a document with no tokens does not count
+    in N or avgdl. The score is rounded to 4 dp (oracle-stable)."""
     dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")

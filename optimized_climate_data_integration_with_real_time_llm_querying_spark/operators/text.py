@@ -22,6 +22,21 @@ def tokens(col: Column | str) -> Column:
     return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, _WS))
 
 
+def word_grams(toks: Column, k: int) -> Column:
+    """Every adjacent word ``k``-gram of a token array, in order, as an
+    array of structs ``(t0, ..., t{k-1})``: gram i is ``toks[i:i+k]``.
+    An array shorter than ``k`` has none.
+
+    Built as ``arrays_zip`` over ``k`` shifted slices, so exploding it
+    is a map-side step. A ``lead()`` window over token positions would
+    shuffle and sort every corpus token by document first, and a
+    ``transform`` lambda runs interpreted per element."""
+    n = F.greatest(F.size(toks) - (k - 1), F.lit(0))
+    return F.arrays_zip(
+        *[F.slice(toks, F.lit(i + 1), n).alias(f"t{i}") for i in range(k)]
+    )
+
+
 def token_count(col: Column | str) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))
@@ -178,7 +193,6 @@ def fingerprint(col: Column | str) -> Column:
 def pmi_bigrams(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     min_count: int = 10,
     top: int = 30,
 ) -> DataFrame:
@@ -189,31 +203,26 @@ def pmi_bigrams(
     low-frequency tail before ranking; output is the ``top`` pairs by
     PMI, tie-broken lexicographically.
 
-    Plan shape: ONE tokenize+explode pass feeds both the bigram frame
-    (lead() over the per-doc position window) and the unigram counts;
-    the two scalar totals broadcast via 1-row cross joins; the final
-    rank is TakeOrderedAndProject. Shuffles move (word[, word]) count
-    rows — vocabulary-sized, not corpus-sized — after map-side
-    partial aggregation, so the heavy frames never leave their
-    partitions unaggregated. The PMI arithmetic is written as one
-    fixed double expression (cast-first, left-associated) so external
-    oracles replay it bit-for-bit up to the final ln ulp.
+    Plan shape: the bigrams (:func:`word_grams`) and the tokens are
+    exploded map-side from one scan, with no per-document window; the
+    two scalar totals broadcast via 1-row cross joins; the final rank
+    is TakeOrderedAndProject. Shuffles move (word[, word]) count rows —
+    vocabulary-sized, not corpus-sized — after map-side partial
+    aggregation, so the heavy frames never leave their partitions
+    unaggregated. The PMI arithmetic is written as one fixed double
+    expression (cast-first, left-associated) so external oracles
+    replay it bit-for-bit up to the final ln ulp.
     """
-    from pyspark.sql import Window as W
-
     toks = tokens(F.lower(F.col(text_col)))
-    tok_rows = df.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
-    w = W.partitionBy(id_col).orderBy("pos")
-    big = (
-        tok_rows.select(
-            F.col("tok").alias("w1"), F.lead("tok", 1).over(w).alias("w2")
-        )
-        .filter(F.col("w2").isNotNull())
+    big = df.select(F.explode(word_grams(toks, 2)).alias("g")).select(
+        F.col("g.t0").alias("w1"), F.col("g.t1").alias("w2")
     )
     c_xy = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
     n_bi = big.agg(F.count(F.lit(1)).alias("n_bi"))
-    uni = tok_rows.groupBy(F.col("tok").alias("w")).agg(
-        F.count(F.lit(1)).alias("c")
+    uni = (
+        df.select(F.explode(toks).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
     n_tok = uni.agg(F.sum("c").alias("n_tok"))
     cx = uni.select(F.col("w").alias("w1"), F.col("c").alias("c_x"))
@@ -327,9 +336,9 @@ def repetition_stats(
     map. Docs shorter than k tokens count their whole token string as
     one k-gram (frac 1.0), matching :func:`~..operators.dedup.shingles`.
     """
-    from .dedup import hashed_shingles
+    from .dedup import shingles
 
-    sh = hashed_shingles(df, text_col, id_col, k, distinct=False)
+    sh = shingles(df, text_col, id_col, k, distinct=False, hash_family=F.xxhash64)
     counts = sh.groupBy(id_col, "shingle").agg(F.count(F.lit(1)).alias("c"))
     return counts.groupBy(id_col).agg(
         F.sum("c").alias("n_kgrams"),

@@ -17,7 +17,7 @@ from ..catalog import load_table
 from ..lifecycle import hold
 from ..operators import dedup
 from ..operators.graph import dedup_cluster_assignments
-from ..operators.text import tokens
+from ..operators.text import tokens, word_grams
 from . import register
 
 
@@ -367,15 +367,14 @@ def wordpiece_greedy_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = weights.orderBy(F.desc("w"), "sub").limit(_WP_VOCAB_K).select("sub")
     chars = weights.filter(F.length("sub") == 1).select("sub")
     vocab = top.unionByName(chars).distinct().withColumn("l", F.length("sub"))
-    # Round-17 rewrite (guide §1.2/§2.4): the vocabulary is bounded by
-    # construction (_WP_VOCAB_K pieces + the corpus alphabet), so the
-    # 12-round greedy longest-match unrolls as PURE COLUMN EXPRESSIONS
-    # over the distinct-word frame with the vocabulary as a map
-    # literal {sub: length}: zero joins, zero shuffles, one pass. The
-    # previous shape re-joined per round AND each round's output
-    # branch lazily replayed every earlier round (1+2+..+12 = 78
-    # join+aggregate evaluations in one plan), which made plan size —
-    # not data — the wall cost. Match semantics are identical: a
+    # The vocabulary is bounded by construction (_WP_VOCAB_K pieces +
+    # the corpus alphabet), so the 12-round greedy longest-match
+    # unrolls as PURE COLUMN EXPRESSIONS over the distinct-word frame
+    # with the vocabulary as a map literal {sub: length}: zero joins,
+    # zero shuffles, one pass. A join per round would make each
+    # round's branch lazily replay every earlier round (1+2+..+12 = 78
+    # join+aggregate evaluations in one plan), so plan size — not
+    # data — would be the wall cost. Match semantics are identical: a
     # candidate piece at (pos, l) counts only when
     # substring(word, pos, l) equals a vocab entry OF LENGTH l (the
     # former equi-join condition), and the per-round winner is
@@ -1015,10 +1014,10 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bpe
 
     d = load_table(spark, sf_dir, "documents", rebalance=True)
-    # Round-17 (guide §2.3): learn over the DISTINCT-word frame with a
-    # multiplicity column — SUM(cnt) pair counts are integer-identical
-    # to COUNT(*) over corpus tokens, but the 12 induction rounds scan
-    # and re-replace |vocabulary| rows instead of |corpus| rows.
+    # Learn over the DISTINCT-word frame with a multiplicity column:
+    # SUM(cnt) pair counts are integer-identical to COUNT(*) over corpus
+    # tokens, but the 12 induction rounds scan and re-replace
+    # |vocabulary| rows instead of |corpus| rows.
     words = (
         d.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
@@ -1156,8 +1155,9 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bpe
 
     d = load_table(spark, sf_dir, "documents", rebalance=True)
-    # Round-17 (guide §2.3): distinct-word learning — see
-    # bpe_encode_docs; the merge list is integer-identical.
+    # Distinct-word learning, as in bpe_encode_docs: the merge list is
+    # integer-identical and each round scans the vocabulary, not the
+    # corpus.
     words = (
         d.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
@@ -1224,10 +1224,10 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the whole corpus, then score each doc by its mean negative "
     "log-prob — fluent text scores low, shuffled/junk text high "
     "(bigrams catch what unigrams can't: word-order violations). "
-    "Plan: one posexplode + lead() per doc for bigrams, two count "
-    "aggregates for the model, scoring re-joins the doc bigrams to "
-    "the model on (w1, w2) — at 100 TB the bigram model shuffles as "
-    "8-byte-ish pairs and the per-doc score is a two-phase agg; "
+    "Plan: one map-side explode of each doc's adjacent-token bigrams, "
+    "pre-aggregated per (doc, bigram), two count aggregates for the "
+    "model, scoring re-joins the doc bigrams to the model on (w1, w2) "
+    "— at 100 TB the bigram model shuffles as 8-byte-ish pairs and the per-doc score is a two-phase agg; "
     "everything codegen'd, no UDFs.",
 )
 def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,28 +1240,17 @@ def _bigram_doc_scores(d: DataFrame) -> DataFrame:
     scoring core shared by bigram_logprob_scores and the CCNet bucket
     query (same plan, same 4-dp rounding).
 
-    Round-17 (guide §2.3/§2.4): bigrams come from arrays_zip over the
-    per-document token array (map-side; the former lead() window
-    shuffled every corpus token by doc_id, and its lazy frame was
-    replayed by three consumers in one plan), pre-aggregated to
-    per-document distinct-bigram counts ``m`` — the model counts
-    become SUM(m) (integer-identical) and the per-doc mean the
+    The map-side bigrams (:func:`word_grams`) are pre-aggregated to
+    per-document distinct-bigram counts ``m``, which the three
+    consumers (two model counts, the scoring join) share: the model
+    counts become SUM(m) (integer-identical) and the per-doc mean the
     weighted form -SUM(m*logp)/SUM(m) == -AVG(logp) over rows, so
     every shuffle carries distinct (doc, bigram) keys, never raw
     corpus bigrams."""
     ta = tokens("text")
-    nzip = F.greatest(F.size(ta) - 1, F.lit(0))
     bgd = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(ta, F.lit(1), nzip).alias("w1"),
-                    F.slice(ta, F.lit(2), nzip).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        d.select("doc_id", F.explode(word_grams(ta, 2)).alias("p"))
+        .select("doc_id", F.col("p.t0").alias("w1"), F.col("p.t1").alias("w2"))
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("m"))
     )
@@ -2369,19 +2358,17 @@ def unigram_lm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     def viterbi(vocab: DataFrame) -> DataFrame:
         """Returns seg frame (word, cnt, start, piece).
 
-        Round-17 rewrite (guide §1.2 "fix the distributed algorithm
-        first", §2.4): the DP is bounded per word — _UNI_MAXW
+        The DP is bounded per word — _UNI_MAXW
         positions, _UNI_MAXP lookbacks — and the vocabulary is
         bounded by construction (_UNI_TOPK pieces + the corpus
         alphabet), so the whole Viterbi unrolls as PURE COLUMN
         EXPRESSIONS over the persisted distinct-word frame with the
         vocabulary as a broadcast map literal: zero joins, zero
-        shuffles, zero per-step actions. The previous shape ran an
-        eager single-task localCheckpoint per DP position and per
-        backtrack step — 32 driver-blocking jobs per EM round, which
-        dominated the query wall-clock at every scale (the frames
-        are vocabulary-sized). Arithmetic is IDENTICAL: the lw
-        values come from the SAME Spark plan (collected, not
+        shuffles, zero per-step actions. An eager localCheckpoint per
+        DP position and per backtrack step would cost 32
+        driver-blocking jobs per EM round, more than the
+        vocabulary-sized frames themselves. Arithmetic is IDENTICAL:
+        the lw values come from the SAME Spark plan (collected, not
         recomputed), scores are the same left-to-right chains of
         <= _UNI_MAXW additions of 6-dp-rounded lw terms, and the
         argmax tie-break (score DESC, bp DESC) is array_max over
@@ -2547,20 +2534,9 @@ def unigram_lm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents", rebalance=True)
-    t = d.select("doc_id", tokens("text").alias("t")).filter(F.size("t") >= 3)
     grams = (
-        t.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.size("t") - 3)).alias("i"),
-            "t",
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", F.col("t")[F.col("i")], F.col("t")[F.col("i") + 1],
-                F.col("t")[F.col("i") + 2]
-            ).alias("gram"),
-        )
+        d.select("doc_id", F.explode(word_grams(tokens("text"), 3)).alias("g"))
+        .select("doc_id", F.concat_ws(" ", "g.t0", "g.t1", "g.t2").alias("gram"))
         .filter(F.col("gram") != "")
         .distinct()
     )

@@ -33,32 +33,15 @@ from pyspark.sql import Window as W
 
 from ..catalog import load_table
 from ..lifecycle import hold
-from ..operators.text import tokens
+from ..operators.text import tokens, word_grams
 from . import register
 
 
 def _doc_bigrams(d: DataFrame) -> DataFrame:
-    """(doc_id, lang, w1, w2) for every adjacent token pair.
-
-    Round-17 (guide §2.4): adjacent pairs come from arrays_zip over
-    the per-document token array — a map-side expression producing
-    exactly the rows the former lead()-over-(doc_id, pos) window did,
-    without shuffling every corpus token by doc_id first."""
-    ta = tokens("text")
-    nzip = F.greatest(F.size(ta) - 1, F.lit(0))
-    return (
-        d.select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(ta, F.lit(1), nzip).alias("w1"),
-                    F.slice(ta, F.lit(2), nzip).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", "lang", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
+    """(doc_id, lang, w1, w2) for every adjacent token pair."""
+    return d.select(
+        "doc_id", "lang", F.explode(word_grams(tokens("text"), 2)).alias("p")
+    ).select("doc_id", "lang", F.col("p.t0").alias("w1"), F.col("p.t1").alias("w2"))
 
 
 @register(
@@ -116,8 +99,9 @@ def _doc_bigrams(d: DataFrame) -> DataFrame:
     "rank so the kept set is FP-order-independent. Scale: the "
     "feature-model table is 1,024 rows broadcast to the scorers — "
     "corpus-size-independent by construction (that is DSIR's whole "
-    "point); one posexplode+lead pass makes features, one broadcast "
-    "join + group-agg scores them.",
+    "point); one map-side explode of each doc's adjacent-token "
+    "bigrams makes features, one broadcast join + group-agg scores "
+    "them.",
 )
 def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents", rebalance=True).filter(
@@ -558,19 +542,13 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents", rebalance=True).filter(
         F.trim(F.col("text")) != ""
     )
-    # Round-17 (guide §2.3 "aggregate before you shuffle" + §5):
-    # everything downstream depends only on (source, token) and
+    # Everything downstream depends only on (source, token) and
     # (source, w1, w2) COUNTS, so the corpus collapses to those two
-    # vocabulary-sized frames in map-side passes before any join or
-    # persist. Bigrams come from arrays_zip over the per-document
-    # token array — adjacent pairs within each document, exactly the
-    # former lead()-over-(doc_id, pos) window, minus its corpus-wide
-    # shuffle — and the per-source NLL means become weighted means
-    # over distinct grams (-SUM(m*ln)/SUM(m) == -AVG(ln) over rows).
-    # The former shape persisted the corpus token AND bigram frames
-    # and shuffled the bigrams twice against their own count tables;
-    # the new caches and shuffles are all vocabulary-sized at any
-    # corpus scale.
+    # vocabulary-sized frames in map-side passes (aggregate before the
+    # shuffle) before any join or persist, and the per-source NLL means
+    # become weighted means over distinct grams (-SUM(m*ln)/SUM(m) ==
+    # -AVG(ln) over rows). Persisting or joining the corpus-sized token
+    # and bigram frames instead would cache and shuffle per token.
     ta = tokens("text")
     tsrc = (
         d.select("source", F.explode(ta).alias("token"))
@@ -578,18 +556,9 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("m"))
         .persist()
     )
-    nzip = F.greatest(F.size(ta) - 1, F.lit(0))
     bsrc = (
-        d.select(
-            "source",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(ta, F.lit(1), nzip).alias("w1"),
-                    F.slice(ta, F.lit(2), nzip).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .select("source", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        d.select("source", F.explode(word_grams(ta, 2)).alias("p"))
+        .select("source", F.col("p.t0").alias("w1"), F.col("p.t1").alias("w2"))
         .groupBy("source", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("m"))
         .persist()

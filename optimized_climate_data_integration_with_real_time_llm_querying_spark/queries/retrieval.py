@@ -22,8 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.dedup import hashed_shingles
+from ..operators.dedup import shingles
 from ..operators.retrieval import bm25_scores
+from ..operators.text import tokens
 from . import register
 
 BM25_TERMS = ["spark", "window", "join", "vector"]
@@ -72,8 +73,9 @@ _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_TERMS)
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents", rebalance=True)
+    tok = d.select("doc_id", F.explode(tokens("text")).alias("token"))
     return (
-        bm25_scores(d, BM25_TERMS)
+        bm25_scores(tok, BM25_TERMS)
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(20)
     )
@@ -135,9 +137,9 @@ def contamination_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents", rebalance=True)
     heldout = d.filter(F.col("doc_id") % 97 == 0)
     corpus = d.filter(F.col("doc_id") % 97 != 0)
-    c_sh = hashed_shingles(corpus, k=5)
+    c_sh = shingles(corpus, k=5, hash_family=F.xxhash64)
     t_sh = (
-        hashed_shingles(heldout, k=5)
+        shingles(heldout, k=5, hash_family=F.xxhash64)
         .select("shingle")
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -236,8 +238,6 @@ def contamination_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ..operators.text import tokens
-
     d = load_table(spark, sf_dir, "documents", rebalance=True).filter(
         F.trim(F.col("text")) != ""
     )
@@ -248,7 +248,7 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctf = qt.groupBy("token").agg(F.count(F.lit(1)).alias("ctf"))
     tf = qt.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     cand = tf.select("doc_id").distinct()
-    bm25 = bm25_scores(d, BM25_TERMS)
+    bm25 = bm25_scores(toks, BM25_TERMS)
     ql = (
         cand.crossJoin(F.broadcast(ctf))
         .join(tf, ["doc_id", "token"], "left")
@@ -363,11 +363,9 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def retrieval_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ..operators.text import tokens
-
     d = load_table(spark, sf_dir, "documents", rebalance=True)
-    scores = bm25_scores(d, BM25_TERMS)
     tok = d.select("doc_id", F.explode(tokens("text")).alias("token"))
+    scores = bm25_scores(tok, BM25_TERMS)
     rel = (
         tok.filter(F.col("token").isin(BM25_TERMS))
         .groupBy("doc_id")
@@ -462,11 +460,9 @@ def retrieval_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
 def retrieval_mrr_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ..operators.text import tokens
-
     d = load_table(spark, sf_dir, "documents", rebalance=True)
-    scores = bm25_scores(d, BM25_TERMS)
     tok = d.select("doc_id", F.explode(tokens("text")).alias("token"))
+    scores = bm25_scores(tok, BM25_TERMS)
     rel = (
         tok.filter(F.col("token").isin(BM25_TERMS))
         .groupBy("doc_id")

@@ -22,6 +22,9 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.operat
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.retrieval import (
     bm25_scores,
 )
+from optimized_climate_data_integration_with_real_time_llm_querying_spark.operators.text import (
+    tokens,
+)
 from optimized_climate_data_integration_with_real_time_llm_querying_spark.queries import (
     all_queries,
 )
@@ -75,7 +78,8 @@ def test_bm25_scores_match_single_doc_hand_computation(spark, sf_small):
         [(1, "x x y"), (2, "y z"), (3, "z z z z")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r["bm25"] for r in bm25_scores(df, ["x"]).collect()}
+    tok = df.select("doc_id", F.explode(tokens("text")).alias("token"))
+    out = {r["doc_id"]: r["bm25"] for r in bm25_scores(tok, ["x"]).collect()}
     assert set(out) == {1}
     n_docs, dfc, tf, dl, avgdl = 3, 1, 2, 3, 3.0
     idf = math.log(1 + (n_docs - dfc + 0.5) / (dfc + 0.5))

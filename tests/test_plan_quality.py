@@ -584,6 +584,15 @@ def test_ngram_novelty_no_global_window(spark, sf_oracle):
     assert "partial_min" in plan or "partial" in plan
 
 
+def test_pmi_collocations_no_window(spark, sf_oracle):
+    # Bigrams are exploded map-side from the token array; a lead()
+    # over token positions would shuffle and sort every corpus token
+    # by document.
+    plan = plan_of(spark, sf_oracle, "pmi_collocations")
+    assert "Window" not in plan
+    assert "Generate" in plan
+
+
 def test_diurnal_anomaly_broadcasts_climatology(spark, sf_oracle):
     # Round-12: the |types| x 24 climatology must broadcast into the
     # event stream (never a sort-merge join) and both aggregates must

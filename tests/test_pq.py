@@ -21,6 +21,8 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.operat
     cosine_topk,
 )
 
+from conftest import collect_released
+
 M, K = 8, 16
 
 
@@ -178,11 +180,11 @@ def test_ivf_pq_rerank_beats_adc_on_registry_data(spark, sf_small):
         for r in qs["embedding_cosine_topk"].builder(spark, sf_small).collect()
     }
     adc = {
-        r["vec_id"] for r in qs["ivf_pq_topk"].builder(spark, sf_small).collect()
+        r["vec_id"] for r in collect_released(qs["ivf_pq_topk"].builder(spark, sf_small))
     }
     rr = {
         r["vec_id"]
-        for r in qs["ivf_pq_rerank_topk"].builder(spark, sf_small).collect()
+        for r in collect_released(qs["ivf_pq_rerank_topk"].builder(spark, sf_small))
     }
     r_adc = len(exact & adc) / len(exact)
     r_rr = len(exact & rr) / len(exact)

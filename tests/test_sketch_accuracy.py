@@ -9,6 +9,8 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.querie
     all_queries,
 )
 
+from conftest import collect_released
+
 QS = all_queries()
 
 
@@ -74,7 +76,7 @@ def test_minhash_estimator_error_bound(spark, sf_small):
     (~0.36) catches a broken estimator while never flaking. Also pin
     the mean error well below one sigma — the aggregate signal a
     subtly mis-seeded permutation family would break."""
-    rows = QS["minhash_estimate_vs_exact"].builder(spark, sf_small).collect()
+    rows = collect_released(QS["minhash_estimate_vs_exact"].builder(spark, sf_small))
     assert rows, "LSH produced no candidate pairs at sf_small"
     errs = [r["abs_err"] for r in rows]
     assert max(errs) <= 0.36, max(errs)

@@ -13,7 +13,7 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.querie
     all_queries,
 )
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, collect_released
 
 QS = all_queries()
 
@@ -51,7 +51,7 @@ def test_cms_never_underestimates(spark):
 
 
 def test_dsir_selects_raw_docs_in_weight_order(spark):
-    rows = QS["dsir_select"].builder(spark, SF_ORACLE).collect()
+    rows = collect_released(QS["dsir_select"].builder(spark, SF_ORACLE))
     assert len(rows) == 100
     assert all(r.lang != "en" for r in rows)
     ws = [r.logw for r in rows]

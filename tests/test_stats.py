@@ -12,6 +12,8 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.querie
     all_queries,
 )
 
+from conftest import collect_released
+
 QUERIES = all_queries()
 
 
@@ -130,7 +132,7 @@ def test_frequent_triples_brute_force(spark, sf_small):
             expected[(a, b, c)] = s
     got = {
         (r.a, r.b, r.c): r.support
-        for r in QUERIES["frequent_triples"].builder(spark, sf_small).collect()
+        for r in collect_released(QUERIES["frequent_triples"].builder(spark, sf_small))
     }
     assert got == expected
     # Antimonotonicity: every frequent triple's sub-pairs are frequent.

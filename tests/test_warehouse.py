@@ -19,6 +19,8 @@ from optimized_climate_data_integration_with_real_time_llm_querying_spark.querie
     all_queries,
 )
 
+from conftest import collect_released
+
 QUERIES = all_queries()
 
 
@@ -270,7 +272,9 @@ def test_triangles_brute_force(spark, sf_small):
     }
     got = {
         (r.a, r.b, r.c)
-        for r in QUERIES["copurchase_triangles"].builder(spark, sf_small).collect()
+        for r in collect_released(
+            QUERIES["copurchase_triangles"].builder(spark, sf_small)
+        )
     }
     assert got == expected
     for a, b, c in got:
@@ -456,14 +460,16 @@ def test_hop_distance_brute_force(spark, sf_small):
             dist[n] = hop
     got = {
         r.node: r.hop
-        for r in QUERIES["copurchase_hop_distance"].builder(spark, sf_small).collect()
+        for r in collect_released(
+            QUERIES["copurchase_hop_distance"].builder(spark, sf_small)
+        )
     }
     assert got == dist
     assert got[src] == 0
 
 
 def test_maintenance_end_to_end_reconciles(spark, sf_small):
-    rows = QUERIES["maintenance_end_to_end"].builder(spark, sf_small).collect()
+    rows = collect_released(QUERIES["maintenance_end_to_end"].builder(spark, sf_small))
     assert rows and len(rows) == 10
     for r in rows:
         assert r.incr_minus_direct == 0, r
