@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.trend import round6
-from ..plans import QuerySpec, compile_spec
+from ..plans import QuerySpec, apply_filters, compile_spec
 from ..sources import climate
 import difflib
 
@@ -45,20 +45,6 @@ _SUBSCRIPT_DIGITS = str.maketrans("₀₁₂₃₄₅₆₇₈₉", "0123456789"
 
 def _normalize_question(question: str) -> str:
     return question.translate(_SUBSCRIPT_DIGITS)
-
-
-def _apply_eq_filters(df: DataFrame, filters: dict, ci=frozenset()) -> DataFrame:
-    """Apply a QuerySpec's equality/IN filters (the trend planner
-    reuses the plain spec builders' filters without compiling the
-    whole spec). Comparison tuples don't occur in trend domains."""
-    for col, val in filters.items():
-        c = F.lower(F.col(col)) if col in ci else F.col(col)
-        if isinstance(val, list):
-            vals = [v.lower() for v in val] if col in ci else val
-            df = df.filter(c.isin(vals))
-        else:
-            df = df.filter(c == (val.lower() if col in ci else val))
-    return df
 
 
 def _collect_series(df: DataFrame) -> list:
@@ -128,8 +114,8 @@ TREND_RE = re.compile(
     r"shrinking|on the rise)\b"
 )
 
-# Corpus-eval intent (VERDICT r10 item 6): "how good is retrieval on
-# this corpus?" routes to the engine's nDCG@10 eval
+# Corpus-eval intent: "how good is retrieval on this corpus?" carries
+# no climate cue, so it routes to the engine's nDCG@10 eval
 # (queries/retrieval.retrieval_ndcg_at_10 — the same builder the
 # driver hash-checks) instead of falling off the climate router. Only
 # active when the engine was built with a corpus_dir; the climate
@@ -140,10 +126,10 @@ EVAL_RE = re.compile(
     r"evaluate (the )?(retrieval|search|ranking))\b"
 )
 
-# Climate-anomaly intent (round 12): "was 2020 warmer than usual in
-# Dhaka?" — the departure-from-climatology question every climate
-# tool fields (the reference's ERA5 preprocessing computes exactly
-# this monthly-climatology subtraction). ERA5-domain only: the other
+# Climate-anomaly intent: "was 2020 warmer than usual in Dhaka?" —
+# the departure-from-climatology question every climate tool fields
+# (the reference's ERA5 preprocessing computes exactly this
+# monthly-climatology subtraction). ERA5-domain only: the other
 # domains' grains are events/flows, not physical series.
 ANOMALY_RE = re.compile(
     r"\b(anomal\w+|departure from (normal|average|the climatology)|"
@@ -152,10 +138,11 @@ ANOMALY_RE = re.compile(
     r"(above|below) (normal|average))\b"
 )
 
-# Rank-metric paraphrases (VERDICT r11 item 7): "what's the MRR" /
-# "precision at 10" reach the MRR/P/R@10 companion eval the same way
-# the generic phrasing reaches nDCG@10. Checked BEFORE EVAL_RE so
-# "evaluate the retrieval MRR" lands on the more specific builder.
+# Rank-metric paraphrases: "what's the MRR" / "precision at 10" name
+# a different metric than nDCG, so they reach the MRR/P/R@10
+# companion eval the way the generic phrasing reaches nDCG@10.
+# Checked BEFORE EVAL_RE so "evaluate the retrieval MRR" lands on the
+# more specific builder.
 MRR_RE = re.compile(
     r"\b(mrr|mean reciprocal rank|reciprocal rank|"
     r"(precision|recall)\s*(at|@)\s*10)\b"
@@ -480,7 +467,7 @@ class ClimateEngine:
         if domain == "emissions":
             spec = self._spec_emissions(question)
             yearly = (
-                _apply_eq_filters(self.tables["emissions"], spec.filters)
+                apply_filters(spec, self.tables["emissions"])[0]
                 .groupBy("country", "year")
                 .agg(F.round(F.sum("value"), 6).alias("val"))
             )
@@ -488,11 +475,7 @@ class ClimateEngine:
         if domain == "era5":
             spec = self._spec_era5(question)
             yearly = (
-                _apply_eq_filters(
-                    self.tables["era5_monthly"],
-                    spec.filters,
-                    ci=spec.case_insensitive,
-                )
+                apply_filters(spec, self.tables["era5_monthly"])[0]
                 .groupBy(
                     F.concat_ws(" ", "city", "metric").alias("series"),
                     F.year("date").alias("year"),
@@ -517,9 +500,7 @@ class ClimateEngine:
         and ``round`` semantics. Values pin to the 6-dp grid before
         the subtraction so the anomaly is a well-defined number."""
         spec = self._spec_era5(question)
-        tbl = _apply_eq_filters(
-            self.tables["era5_monthly"], spec.filters, ci=spec.case_insensitive
-        )
+        tbl, _ = apply_filters(spec, self.tables["era5_monthly"])
         rows = _collect_series(
             tbl.select(
                 "city",
@@ -677,8 +658,7 @@ class ClimateEngine:
                 window[key][year].append(val)
         if zero_fill:
             # A sparse disaster type / country is a valid question, not
-            # an exception (ADVICE r9): each window year without a row
-            # counts 0.
+            # an exception: each window year without a row counts 0.
             series = {
                 key: [
                     0 if v is None else v
@@ -723,13 +703,13 @@ class ClimateEngine:
 
     def ask(self, question: str) -> Answer:
         question = _normalize_question(question)
+        q = question.lower()
+        dropped: list[str] = []
         # Route ONCE; the trend branch and the spec builders consume
         # the same routing decision. Trend covers the three
         # time-series domains; FEMA stays on the plain path (its
         # grain is per-event assistance, not a yearly series).
-        if self.corpus_dir and (
-            MRR_RE.search(question.lower()) or EVAL_RE.search(question.lower())
-        ):
+        if self.corpus_dir and (MRR_RE.search(q) or EVAL_RE.search(q)):
             # Corpus-eval intent: reaches the registry's eval
             # builders the way trend reaches Holt — checked BEFORE
             # the climate router because these questions carry no
@@ -741,29 +721,21 @@ class ClimateEngine:
                 retrieval_ndcg_at_10,
             )
 
-            builder = (
-                retrieval_mrr_at_10
-                if MRR_RE.search(question.lower())
-                else retrieval_ndcg_at_10
-            )
+            builder = retrieval_mrr_at_10 if MRR_RE.search(q) else retrieval_ndcg_at_10
+            domain = "corpus"
             plan = builder(self.spark, self.corpus_dir)
             spec = QuerySpec(dataset="documents", metrics=list(plan.columns))
-            text = answer(question, plan, self.transport)
-            return Answer(question, "corpus", spec, plan, text, [])
-        domain = self.route(question)
-        if domain in ("disasters", "emissions", "era5") and TREND_RE.search(
-            question.lower()
-        ):
-            spec, plan = self._plan_trend(domain, question)
-            text = answer(question, plan, self.transport)
-            return Answer(question, domain, spec, plan, text, [])
-        if domain == "era5" and ANOMALY_RE.search(question.lower()):
-            spec, plan = self._plan_anomaly(question)
-            text = answer(question, plan, self.transport)
-            return Answer(question, domain, spec, plan, text, [])
-        spec = self._spec_for(domain, question)
-        # ERA5's year column lives in `date`; emissions/disasters use
-        # integer `year` — compile_spec handles both via _time_column.
-        plan, dropped = compile_spec(spec, self.tables[spec.dataset])
+        else:
+            domain = self.route(question)
+            if domain in ("disasters", "emissions", "era5") and TREND_RE.search(q):
+                spec, plan = self._plan_trend(domain, question)
+            elif domain == "era5" and ANOMALY_RE.search(q):
+                spec, plan = self._plan_anomaly(question)
+            else:
+                spec = self._spec_for(domain, question)
+                # ERA5's year column lives in `date`; emissions/disasters
+                # use integer `year` — compile_spec handles both via
+                # _time_column.
+                plan, dropped = compile_spec(spec, self.tables[spec.dataset])
         text = answer(question, plan, self.transport)
         return Answer(question, domain, spec, plan, text, dropped)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lifecycle import hold, release
+from .dedup import md5_hash64
 from .similarity import exploded_pairwise_cosine
 from .trend import round6
 
@@ -87,21 +88,12 @@ def _train_sample_pred(id_col: str, stride: int):
     assign ids in ingestion order, so ``id % stride`` would correlate
     the sample with sources/time (measured pathology: on a corpus
     whose cluster equals id % 8, a stride-4 raw-modulo sample
-    contains 2 of the 8 clusters). The md5/conv form is the repo's
-    rule-6 cross-engine hash (operators/sampling.md5_bucket), so the
-    DuckDB oracle replays the exact sample:
+    contains 2 of the 8 clusters). :func:`md5_hash64` is the repo's
+    rule-6 cross-engine hash, so the DuckDB oracle replays the exact
+    sample:
     CAST(('0x' || substr(md5('tcap:' || CAST(id AS VARCHAR)), 1, 8))
     AS BIGINT) % stride = 0."""
-    hexpart = F.substring(
-        F.md5(
-            F.concat_ws(":", F.lit("tcap"), F.col(id_col).cast("string")).cast(
-                "binary"
-            )
-        ),
-        1,
-        8,
-    )
-    return F.pmod(F.conv(hexpart, 16, 10).cast("long"), F.lit(int(stride))) == 0
+    return F.pmod(md5_hash64(F.lit("tcap"), F.col(id_col)), F.lit(int(stride))) == 0
 
 
 def _collect_rows(

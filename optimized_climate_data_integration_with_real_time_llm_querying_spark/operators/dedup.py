@@ -501,6 +501,14 @@ def md5_hash64(*cols) -> "F.Column":
     registered ``*_md5`` query variants use it so DuckDB can recompute
     the full signature -> band -> candidate -> verify pipeline, while
     production defaults keep xxhash64 (64-bit, no hex/string work).
+
+    This is the one Spark side of rule 6: every md5 bucket in the
+    package is this value, with ``pmod``/``%`` where a site buckets.
+    ``concat_ws`` skips NULL arguments, so a NULL hashes as if it were
+    absent: ``md5_hash64(NULL)`` is the hash of the empty string,
+    never NULL (DuckDB's ``md5(NULL)`` is NULL, so a twin over a
+    nullable key must say how it treats NULL; the registry's keys
+    are non-null).
     """
     s = F.concat_ws(":", *[c.cast("string") for c in cols])
     return F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
@@ -1007,34 +1015,20 @@ def simhash_signatures(
     hash_family=F.xxhash64,
     n_bits: int = 64,
 ) -> DataFrame:
-    """``n_bits``-bit SimHash per document from token hashes.
-
-    bit_i(sig) = 1 iff sum over tokens of (+1 if bit_i(hash)=1 else -1)
-    is positive — computed branchlessly as 2*sum(bit_i) > n_tokens.
-    The token hash is projected ONCE before the aggregate (not inlined
-    into all the sums, which would lean on codegen CSE), and each sum
-    is plain shift/mask arithmetic — wide but fully codegen'd, no UDF.
+    """``n_bits``-bit SimHash per document from token hashes: the
+    weight-1 case of :func:`weighted_simhash_signatures`, so bit_i is
+    the majority vote 2*sum(bit_i) > n_tokens. The token hash is
+    projected ONCE before the aggregate (not inlined into all the
+    sums, which would lean on codegen CSE).
 
     The default is 64 bits over xxhash64; the oracle-able twin passes
     ``hash_family=md5_hash64, n_bits=32`` (md5_hash64 values carry 32
     meaningful bits), which DuckDB recomputes bit-for-bit.
     """
     tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token")).select(
-        F.col(id_col), hash_family(F.col("token")).alias("h")
+        F.col(id_col), hash_family(F.col("token")).alias("h"), F.lit(1).alias("w")
     )
-    bit_sums = [
-        F.sum(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"bs_{i}")
-        for i in range(n_bits)
-    ]
-    agg = tok.groupBy(id_col).agg(*bit_sums, F.count(F.lit(1)).alias("n_tok"))
-    sig = None
-    for i in range(n_bits):
-        bit = F.when(
-            F.col(f"bs_{i}") * 2 > F.col("n_tok"),
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-        sig = bit if sig is None else sig.bitwiseOR(bit)
-    return agg.select(F.col(id_col), sig.alias("simhash"))
+    return weighted_simhash_signatures(tok, id_col, "h", "w", n_bits)
 
 
 def simhash_near_duplicates(
@@ -1109,9 +1103,8 @@ def weighted_simhash_signatures(
     floor(w*1e6 + 0.5) micro-units): the per-bit sums are then exact
     int64 arithmetic — accumulation-order-free, so the sign (and the
     whole signature) is deterministic across partitionings and
-    engines, the same discipline as the covariance grid. Like
-    ``simhash_signatures``, everything is codegen'd shift/mask
-    arithmetic — no UDF.
+    engines, the same discipline as the covariance grid. Each sum is
+    plain shift/mask arithmetic, wide but fully codegen'd, no UDF.
     """
     bit_sums = [
         F.sum(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import md5_hash64
+
 _DENOM = 1_000_000
 
 
@@ -29,12 +31,7 @@ def md5_bucket(key: Column, seed: int = 0) -> Column:
     in ANY engine with md5 (DuckDB, Postgres, pandas/hashlib), which
     makes sampling decisions auditable outside Spark — use it when a
     cross-engine contract matters more than per-row cost."""
-    hexpart = F.substring(
-        F.md5(F.concat_ws(":", F.lit(str(seed)), key.cast("string")).cast("binary")),
-        1,
-        8,
-    )
-    return F.pmod(F.conv(hexpart, 16, 10).cast("long"), F.lit(_DENOM))
+    return F.pmod(md5_hash64(F.lit(str(seed)), key), F.lit(_DENOM))
 
 
 def split_corpus(
@@ -158,8 +155,6 @@ def priority_sample(
     tiny-domain global window.
     """
     from pyspark.sql import Window
-    from .dedup import md5_hash64
-
     h = md5_hash64(F.lit(seed), F.col(key_col))
     pr = (F.col(weight_col).cast("double") * F.lit(4294967296.0)) / (
         2 * h + 1

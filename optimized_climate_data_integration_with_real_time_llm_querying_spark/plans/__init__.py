@@ -10,7 +10,7 @@ plan, replacing the reference's Cartesian query fan-out
 (``era5client.py:246-277``, ``EDGARclient.py:228-303``).
 """
 
-from .planner import compile_spec
+from .planner import apply_filters, compile_spec
 from .queryspec import QuerySpec
 
-__all__ = ["QuerySpec", "compile_spec"]
+__all__ = ["QuerySpec", "apply_filters", "compile_spec"]

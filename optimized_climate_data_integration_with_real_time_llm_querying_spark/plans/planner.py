@@ -76,6 +76,25 @@ def _time_column(df: DataFrame) -> tuple[Column, bool] | None:
     return None
 
 
+def apply_filters(
+    spec: QuerySpec, df: DataFrame
+) -> tuple[DataFrame, list[str]]:
+    """The spec's filters dict as a conjunction of predicates on
+    ``df`` (P9's whitelist builder): (filtered, dropped_fields), where
+    dropped_fields are the filter keys ``df`` lacks. A column in
+    ``spec.case_insensitive`` compares ``upper()`` on both sides.
+    The filter stage of :func:`compile_spec`, and the whole read of a
+    series the NL layer finishes on the driver."""
+    cols = set(df.columns)
+    dropped: list[str] = []
+    for name, value in spec.filters.items():
+        if name not in cols:
+            dropped.append(name)
+            continue
+        df = df.filter(_filter_expr(F.col(name), value, name in spec.case_insensitive))
+    return df, dropped
+
+
 def compile_spec(
     spec: QuerySpec, df: DataFrame
 ) -> tuple[DataFrame, list[str]]:
@@ -88,14 +107,7 @@ def compile_spec(
     """
     spec.validate()
     cols = set(df.columns)
-    dropped: list[str] = []
-
-    # P9 conjunctive filter builder with whitelist.
-    for name, value in spec.filters.items():
-        if name not in cols:
-            dropped.append(name)
-            continue
-        df = df.filter(_filter_expr(F.col(name), value, name in spec.case_insensitive))
+    df, dropped = apply_filters(spec, df)
 
     # P6/P8 time constraints.
     if spec.year is not None or spec.year_range is not None or spec.months:

@@ -18,7 +18,7 @@ an engine bug. Check ALL of them before registering a query:
    ``SUM(int)`` returns HUGEINT (int128), which pandas canonicalizes
    to float64 — ``1.0`` vs Spark's ``1`` hash-mismatches even though
    the values are equal. Always ``CAST(SUM(x) AS BIGINT)`` in the
-   oracle. (Bit r3: user_sessionization.)
+   oracle. (Found on user_sessionization.)
 2. **FLOOR before double→int casts.** Spark ``CAST(double AS INT)``
    truncates toward zero; DuckDB rounds. Apply ``FLOOR`` (or
    ``ROUND``) explicitly on BOTH sides so the semantics are pinned.
@@ -35,13 +35,15 @@ an engine bug. Check ALL of them before registering a query:
    which factorizes cell values — ``list`` cells raise ``TypeError:
    unhashable type``. Explode to scalar rows (Spark ``posexplode`` /
    DuckDB ``unnest(range(...))`` + subscript) or hash the array to a
-   string on both sides. (Bit r3: embedding_quantize_int8,
+   string on both sides. (Found on embedding_quantize_int8,
    media_feature_extract.)
 6. **Hash/bucket logic uses the md5 trick, not xxhash64.** DuckDB
    ``CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)`` equals Spark
-   ``conv(substring(md5(x), 1, 8), 16, 10)`` (md5 needs
-   ``.cast("binary")`` on the Spark side). xxhash64 has no DuckDB
-   twin — queries built on it are rows-only forever.
+   ``operators.dedup.md5_hash64(x)``, the one Spark side of this
+   rule: every md5 bucket in the package calls it (``pmod``/``%`` on
+   top where a site buckets), and ``md5_hash64(a, b)`` hashes
+   ``a || ':' || b``. xxhash64 has no DuckDB twin — queries built on
+   it are rows-only forever.
 7. **DuckDB ``range()`` cannot lateral-reference columns** in the
    FROM clause — use ``unnest(range(0, col))`` in the SELECT list of
    a subquery instead; constant-bound ``FROM t, range(a, b) i`` is
@@ -51,7 +53,7 @@ an engine bug. Check ALL of them before registering a query:
    centered means) can round to -0.0 on one engine and +0.0 on the
    other — the canonicalizer prints "-0.000000" vs "0.000000".
    IEEE (+0.0) + (-0.0) = +0.0, so ``ROUND(x, n) + 0.0`` pins it on
-   both sides. (Bit r7: embedding_covariance.)
+   both sides. (Found on embedding_covariance.)
 9. **Chained CTEs that each read the previous one MUST be
    ``AS MATERIALIZED`` in DuckDB** when any CTE has two readers —
    DuckDB inlines CTEs by default, so an n-round chain (BPE

@@ -1,8 +1,8 @@
-"""Embedding-clustering queries (round 6): deterministic k-means and
-SemDeDup semantic dedup, both under full DuckDB oracles.
+"""Embedding-clustering queries: deterministic k-means and SemDeDup
+semantic dedup, both under full DuckDB oracles.
 
-The iterative Lloyd loop is made falsifiable the same way round 5's
-connected components were: the algorithm is pinned deterministic (no
+The iterative Lloyd loop is made falsifiable the same way the
+connected-components query is: the algorithm is pinned deterministic (no
 RNG — lowest-id seeds, 6-dp rounding grid, lowest-cluster tie-break)
 and the oracle UNROLLS the iterations as a CTE chain, so DuckDB
 recomputes the exact fixpoint trajectory. See the ORACLE-HYGIENE
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..lifecycle import hold
 from ..operators.clustering import kmeans_assign, semantic_dedup
+from ..operators.dedup import md5_hash64
 from . import register
 
 K = 8
@@ -222,7 +223,7 @@ def ann_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide scan touches projected vectors only; full vectors
     are read for 100 rows.
 
-    REGISTRY ROW RETIRED in round 16 (#4 in the pinned displacement
+    REGISTRY ROW RETIRED (#4 in the pinned displacement
     order in __spark_entry__.py), displaced by the FULL-oracled
     ann_batch_recall_at_10: this entry was rows-only by construction
     (JL distortion), while its coarse stage has the oracled twin
@@ -230,7 +231,7 @@ def ann_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cosine shape — retiring the row loses no oracle coverage.
     The plan itself stays: recall@10 vs the exact twin stays floored
     in tests/test_clustering_retrieval.py at these exact parameters,
-    and the r1-bar-18 bench slot survives via the local builder in
+    and its bench slot survives via the local builder in
     bench.py."""
     from ..operators.similarity import cosine_topk
 
@@ -367,8 +368,8 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PQ_M, PQ_K, PQ_ITER, PQ_DSUB = 8, 16, 2, 8
-# Bounded-sample quantizer training for the PQ/IVF index family
-# (round 14): FAISS never trains a quantizer on the corpus — it CAPS
+# Bounded-sample quantizer training for the PQ/IVF index family:
+# FAISS never trains a quantizer on the corpus — it CAPS
 # the training set (max_points_per_centroid=256 by default; sampling
 # engages only when the corpus exceeds the cap) because codebooks
 # converge on a sample and the corpus-sized training scan is pure
@@ -389,7 +390,7 @@ PQ_M, PQ_K, PQ_ITER, PQ_DSUB = 8, 16, 2, 8
 # refuse to sample; at sf0.1+ sampling engages and the measured mean
 # recall@10 over 20 queries is statistically unchanged (ADC
 # 0.145 -> 0.175, re-rank 0.385 -> 0.350, SE ~0.05; BASELINE.md
-# round-14 table). TRAIN_CAP=500 puts the demonstration knee between
+# train-cap table). TRAIN_CAP=500 puts the demonstration knee between
 # the two test scales; production would set FAISS's 256 x k (~4k) —
 # a parameter, not a different plan. The clustering-as-deliverable
 # entries (kmeans_embedding_clusters, semantic_dedup_prune) keep
@@ -1005,7 +1006,7 @@ def _batch_recall_eval(emb: DataFrame) -> DataFrame:
     """The batched index-quality eval composition over a given
     embeddings frame — shared verbatim by the registry entry (full
     corpus, byte-stable plan) and :func:`ann_batch_recall_sampled`
-    (the round-16 eval-pricing rule made executable)."""
+    (the eval-pricing rule made executable)."""
     from ..operators.clustering import ivf_pq_batch_topk as batch
     from ..operators.similarity import cosine_topk_batch
 
@@ -1044,21 +1045,13 @@ _EVAL_SAMPLE_SALT = "esamp"
 def _eval_sample_pred(id_col: str, sample_mod: int):
     """Keep predicate for the eval's corpus hash-sample: md5-bucket
     ("esamp:" salt — independent of the training cap's "tcap:"
-    buckets) == 0 (mod sample_mod). Rule-6 md5/conv form, so the
-    sample is replayable in any engine:
+    buckets) == 0 (mod sample_mod). The rule-6 hash, so the sample is
+    replayable in any engine:
     CAST(('0x' || substr(md5('esamp:' || CAST(vec_id AS VARCHAR)),
     1, 8)) AS BIGINT) % sample_mod = 0 (the DuckDB twin,
     :func:`eval_sample_pred_sql`)."""
-    hexpart = F.substring(
-        F.md5(
-            F.concat_ws(
-                ":", F.lit(_EVAL_SAMPLE_SALT), F.col(id_col).cast("string")
-            ).cast("binary")
-        ),
-        1,
-        8,
-    )
-    return F.pmod(F.conv(hexpart, 16, 10).cast("long"), F.lit(int(sample_mod))) == 0
+    h = md5_hash64(F.lit(_EVAL_SAMPLE_SALT), F.col(id_col))
+    return F.pmod(h, F.lit(int(sample_mod))) == 0
 
 
 def eval_sample_pred_sql(sample_mod: int, id_col: str = "vec_id") -> str:
@@ -1073,7 +1066,7 @@ def eval_sample_pred_sql(sample_mod: int, id_col: str = "vec_id") -> str:
 def ann_batch_recall_sampled(
     spark: SparkSession, sf_dir: str, sample_mod: int = 4
 ) -> DataFrame:
-    """The round-16 exact-eval AFFORDABILITY RULE made executable
+    """The exact-eval AFFORDABILITY RULE made executable
     (BASELINE.md eval-pricing: the exact side costs ~8.1 us per
     corpus vector per 8-query batch, so past ~10^8 vectors per node
     the full eval stops being affordable — "run the eval on a rule-6

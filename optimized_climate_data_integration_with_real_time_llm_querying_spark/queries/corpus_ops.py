@@ -1,11 +1,11 @@
-r"""Corpus-construction operators (round 5): near-dup clustering,
+r"""Corpus-construction operators: near-dup clustering,
 unigram-LM quality scoring, BPE pair statistics, and deterministic
 source mixing — the post-dedup steps of a pretraining-data pipeline.
 
 Every query here carries a full DuckDB oracle (see the ORACLE-HYGIENE
 RULES in ``queries/__init__``): the cluster query reconstructs the
 iterative component computation with a recursive CTE, and the mixing
-query uses the md5/conv cross-engine hash trick (rule 6).
+queries bucket with the cross-engine md5 hash (rule 6, md5_hash64).
 """
 
 from __future__ import annotations
@@ -597,14 +597,7 @@ def source_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(10000) * F.col("min_chars").cast("double") / F.col("src_chars")
         ).alias("keep_per_10k"),
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
+    bucket = dedup.md5_hash64(F.col("doc_id")) % 10000
     return (
         d.join(F.broadcast(rates), "source")
         .filter(bucket < F.col("keep_per_10k"))
@@ -922,7 +915,7 @@ def source_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Full BPE encode (round 7): learn a merge list, tokenize documents
+# Full BPE encode: learn a merge list, tokenize documents
 # --------------------------------------------------------------------------
 
 N_BPE_MERGES = 12
@@ -1092,18 +1085,7 @@ def temperature_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.sqrt(F.col("min_chars").cast("double") / F.col("src_chars"))
         ).alias("keep_per_1m"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("t:"), F.col("doc_id").cast("string")).cast("binary")),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
+    bucket = dedup.md5_hash64(F.lit("t"), F.col("doc_id")) % 1000000
     return (
         d.join(F.broadcast(rates), "source")
         .filter(bucket < F.col("keep_per_1m"))
@@ -2022,9 +2004,10 @@ def tfidf_simhash_candidates(
     hash_family=None,
 ) -> DataFrame:
     """Candidate pairs from weighted SimHash over the tf-idf vectors,
-    with bits/bands EXPOSED — the measured log(n) knob (VERDICT r9
-    item 5). Per band the random-collision term is n^2 / 2^(n_bits /
-    n_bands): 2 x 16-bit bands (the registry query's setting) cost
+    with bits/bands EXPOSED — the measured log(n) knob, because the
+    random-collision volume decides when banding stops pruning. Per
+    band the random-collision term is n^2 / 2^(n_bits / n_bands):
+    2 x 16-bit bands (the registry query's setting) cost
     n^2/65536 per band; 2 x 24-bit bands (n_bits=48) divide that by
     another 256 — the next decade's setting, measured head-to-head in
     BASELINE.md's knob table via scripts/scale_bench.py

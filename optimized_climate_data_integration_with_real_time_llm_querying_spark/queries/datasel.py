@@ -1,4 +1,4 @@
-r"""Data-selection scoring for LLM training corpora (round 8).
+r"""Data-selection scoring for LLM training corpora.
 
 Two published selection/scoring methods the existing quality stack
 (unigram/bigram add-1 LMs, Gopher rules, entropy screens) doesn't
@@ -33,6 +33,7 @@ from pyspark.sql import Window as W
 
 from ..catalog import load_table
 from ..lifecycle import hold
+from ..operators.dedup import md5_hash64
 from ..operators.text import tokens, word_grams
 from . import register
 
@@ -110,26 +111,13 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = _doc_bigrams(d).select(
         "doc_id",
         "lang",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.col("w1"), F.lit(" "), F.col("w2")).cast(
-                            "binary"
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 1024
-        ).alias("bucket"),
+        (md5_hash64(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))) % 1024).alias(
+            "bucket"
+        ),
     )
     # Four consumers (target counts, raw counts, bucket grid, scorer)
-    # would each re-run the tokenize+window pass; persist the compact
-    # (doc_id, lang, bucket) frame once; the result holds it.
+    # would each re-run the tokenize and bigram explode; persist the
+    # compact (doc_id, lang, bucket) frame once; the result holds it.
     bg = bg.persist()
     tgt = bg.filter(F.col("lang") == "en").groupBy("bucket").agg(
         F.count(F.lit(1)).alias("tc")

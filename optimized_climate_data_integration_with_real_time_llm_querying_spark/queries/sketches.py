@@ -1,28 +1,29 @@
-"""Deterministic, fully-oracled streaming sketches (round 8).
+"""Deterministic, fully-oracled sketches: HyperLogLog and Count-Min.
 
 The registry's two approximate aggregates (`approx_distinct_custkeys`,
 `approx_revenue_quantiles`) wrap Spark's native HLL++/KLL and are
-rows-only forever — their register layouts are engine-internal. These
-queries implement the SKETCHES THEMSELVES on the md5 permutation
-family (oracle-hygiene rule 6), so DuckDB recomputes every register /
-counter bit-for-bit and the driver hash-checks estimate AND ground
-truth — the same falsifiability upgrade the md5 MinHash/SimHash twins
-made in round 7 (VERDICT r7 What's-missing #3 precedent).
+rows-only: their register layouts are engine-internal. These queries
+run the sketches themselves, from the shared cores in
+``operators/sketch.py`` over the md5 hash family (oracle-hygiene rule
+6), so DuckDB recomputes every register and counter bit for bit and
+the driver hash-checks the estimate and the ground truth beside it.
+The streaming maintenance (``streaming/sketch_maintenance.py``) runs
+the same cores, which is why streamed equals batch.
 
-- `hll_distinct_md5`: a real HyperLogLog (Flajolet et al. 2007) with
-  p=8 / 256 registers, including the small-range linear-counting
-  correction, grouped per order priority, with the exact distinct
-  count and relative error beside it.
-- `cms_heavy_hitters`: a Count-Min sketch (Cormode & Muthukrishnan
-  2005) with 4 salted rows x 512 buckets over document tokens; the
-  point-query minimum per token vs its exact count, top-15.
+- `hll_distinct_md5`: HyperLogLog with p=8 / 256 registers, including
+  the small-range linear-counting correction, grouped per order
+  priority, with the exact distinct count and relative error beside
+  it.
+- `cms_heavy_hitters`: a Count-Min sketch with 4 salted rows x 512
+  buckets over document tokens; the point-query minimum per token vs
+  its exact count, top-15.
 
 Scale notes (100 TB): both sketches are what you deploy when exact
-distinct/frequency state no longer fits — the engine-side state here
-is (group x 256) registers / (4 x 512) counters REGARDLESS of input
+distinct/frequency state no longer fits. The engine-side state is
+(group x 256) registers / (4 x 512) counters regardless of input
 size; inputs reach the aggregation as 8-byte hashes, partial
 aggregation combines map-side, and the exact twins beside them are
-the auditable baseline (at true scale you'd sample the audit, as
+the auditable baseline (at true scale you would sample the audit, as
 minhash_estimate_vs_exact documents).
 """
 
@@ -32,14 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.text import tokens
+from ..operators import sketch
 from . import register
-
-# 32-bit md5 prefix (the repo-wide cross-engine hash family).
-def _h32(col):
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
 
 
 @register(
@@ -100,50 +95,18 @@ def _h32(col):
 )
 def hll_distinct_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderpriority", "o_custkey")
-    h = o.select(
-        "o_orderpriority", _h32(F.col("o_custkey").cast("string")).alias("h32")
+    est = sketch.hll_estimate(
+        sketch.hll_registers(o, "o_orderpriority", "o_custkey")
     )
-    rem = F.col("h32") % 16777216
-    rho = F.when(rem == 0, F.lit(25)).otherwise(25 - F.length(F.bin(rem)))
-    reg = (
-        h.select(
-            "o_orderpriority",
-            F.floor(F.col("h32") / 16777216).cast("long").alias("bucket"),
-            rho.alias("rho"),
-        )
-        .groupBy("o_orderpriority", "bucket")
-        .agg(F.max("rho").alias("m"))
-    )
-    z = reg.groupBy("o_orderpriority").agg(
-        (256 - F.count(F.lit(1))).cast("long").alias("v"),
-        (
-            (256 - F.count(F.lit(1))) * F.lit(1.0)
-            + F.sum(F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), m)"))
-        ).alias("zsum"),
-    )
-    alpha = 0.7213 / (1.0 + 1.079 / 256)
-    est = z.select(
-        "o_orderpriority",
-        "v",
-        (F.lit(alpha) * 256 * 256 / F.col("zsum")).alias("e_raw"),
-    )
-    corrected = F.when(
-        (F.col("e_raw") <= 640) & (F.col("v") > 0),
-        F.lit(256.0) * F.log(F.lit(256.0) / F.col("v")),
-    ).otherwise(F.col("e_raw"))
-    ex = o.groupBy("o_orderpriority").agg(
+    ex = o.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.countDistinct("o_custkey").alias("n_exact")
     )
-    return (
-        est.join(ex, "o_orderpriority")
-        .select(
-            F.col("o_orderpriority").alias("priority"),
-            "n_exact",
-            F.round(corrected, 2).alias("hll_estimate"),
-            F.round(
-                F.abs(corrected - F.col("n_exact")) / F.col("n_exact"), 4
-            ).alias("rel_error"),
-        )
+    e, n = F.col("estimate"), F.col("n_exact")
+    return est.join(ex, "grp").select(
+        F.col("grp").alias("priority"),
+        "n_exact",
+        F.round(e, 2).alias("hll_estimate"),
+        F.round(F.abs(e - n) / n, 4).alias("rel_error"),
     )
 
 
@@ -193,37 +156,15 @@ def hll_distinct_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_estimate_vs_exact spells out.",
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents", rebalance=True).filter(
-        F.trim(F.col("text")) != ""
-    )
-    tc = (
-        d.select(F.explode(tokens("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    hashed = tc.select(
-        "token",
-        "n_exact",
-        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("r"),
-    ).withColumn(
-        "bucket",
-        _h32(
-            F.concat(F.col("r").cast("string"), F.lit("|"), F.col("token"))
-        )
-        % 512,
-    )
-    sketch = hashed.groupBy("r", "bucket").agg(F.sum("n_exact").alias("cell"))
-    est = (
-        hashed.join(sketch, ["r", "bucket"])
-        .groupBy("token", "n_exact")
-        .agg(F.min("cell").alias("cms_estimate"))
-    )
+    d = load_table(spark, sf_dir, "documents", rebalance=True)
+    tc = sketch.token_counts(d)
+    est = sketch.cms_point_query(tc, sketch.cms_cells(tc))
     return (
         est.select(
             "token",
             "cms_estimate",
-            "n_exact",
-            (F.col("cms_estimate") - F.col("n_exact")).alias("overestimate"),
+            F.col("n").alias("n_exact"),
+            (F.col("cms_estimate") - F.col("n")).alias("overestimate"),
         )
         .orderBy(F.desc("cms_estimate"), "token")
         .limit(15)

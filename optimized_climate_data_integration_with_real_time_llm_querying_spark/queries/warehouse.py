@@ -1,4 +1,4 @@
-"""Warehouse / lakehouse maintenance shapes (round 8, third wave).
+"""Warehouse / lakehouse maintenance shapes.
 
 The reference runs its tables as static SQLite files refreshed by
 re-running ETL notebooks end to end (``noaa_disaster_db.ipynb:cell6``
@@ -35,6 +35,7 @@ from pyspark.sql import Window as W
 
 from ..catalog import load_table
 from ..lifecycle import CheckpointHandle, hold
+from ..operators.dedup import md5_hash64
 from ..operators.sampling import md5_bucket
 from . import register
 
@@ -590,7 +591,7 @@ def copurchase_edges(spark: SparkSession, sf_dir: str, min_support: int = 2):
         (F.col("a.l_orderkey") == F.col("c.l_orderkey"))
         & (F.col("a.l_partkey") < F.col("c.l_partkey")),
     ).select(F.col("a.l_partkey").alias("pa"), F.col("c.l_partkey").alias("pb"))
-    # Round-17 (guide §2.4): every consumer references the edge list
+    # Every consumer references the edge list
     # 2-3 times (triangle/wedge self-joins, BFS levels); left lazy,
     # each reference re-ran the basket self-join + aggregate inside
     # one plan. One eager localCheckpoint truncates the lineage so the
@@ -1167,9 +1168,8 @@ def user_lifecycle_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def copurchase_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     li, e0 = copurchase_edges(spark, sf_dir)
-    # Round-17 (guide §2.4): symmetrize with ONE scan — the former
-    # union of two selects evaluated the (self-join) edge lineage
-    # twice when the persist materialized.
+    # Symmetrize with ONE scan: a union of two selects would evaluate
+    # the (self-join) edge lineage twice when the persist materializes.
     e = (
         e0.select(
             F.explode(
@@ -1393,6 +1393,11 @@ _BLOOM_POS = (
 )
 
 
+def _bloom_pos(key: str) -> F.Column:
+    """Spark twin of ``_BLOOM_POS``: the bit of ``key`` under hash ``j``."""
+    return F.pmod(md5_hash64(F.col("j"), F.col(key)), F.lit(_BLOOM_BITS))
+
+
 @register(
     "bloom_semi_join_audit",
     f"""
@@ -1463,21 +1468,8 @@ def bloom_semi_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     js = F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j")
-
-    def pos_of(key: str) -> F.Column:
-        h = F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.col("j").cast("string"), F.col(key).cast("string")
-                ).cast("binary")
-            ),
-            1,
-            8,
-        )
-        return F.pmod(F.conv(h, 16, 10).cast("long"), F.lit(_BLOOM_BITS))
-
     kpos = c.select("c_custkey", js).select(
-        pos_of("c_custkey").alias("pos")
+        _bloom_pos("c_custkey").alias("pos")
     ).distinct()
     bit = F.expr(
         f"shiftleft(CAST(1 AS BIGINT), CAST(pos % {_BLOOM_WPB} AS INT))"
@@ -1486,7 +1478,7 @@ def bloom_semi_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") / _BLOOM_WPB).cast("int").alias("word")
     ).agg(F.bit_or(bit).alias("bits"))
     probes = o.select("o_orderkey", "o_custkey", js).select(
-        "o_orderkey", "o_custkey", pos_of("o_custkey").alias("pos")
+        "o_orderkey", "o_custkey", _bloom_pos("o_custkey").alias("pos")
     )
     hits = (
         probes.join(

@@ -11,6 +11,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds this package. Python UDF workers import it
+# to unpickle the package's functions, and they start from Spark's own
+# path, not the driver's sys.path.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_cpus() -> int:
     """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
@@ -44,6 +49,9 @@ def get_spark(app_name: str = "ocdi-spark", cpus: int | None = None) -> SparkSes
       boundary in columnar batches.
     - UTC session timezone: deterministic timestamp semantics and
       parity with DuckDB oracle comparisons.
+    - The package root on the Python workers' PYTHONPATH (Spark
+      merges it with its own), so a query with a Python UDF runs from
+      any working directory.
     """
     if cpus is None:
         cpus = default_cpus()
@@ -69,6 +77,7 @@ def get_spark(app_name: str = "ocdi-spark", cpus: int | None = None) -> SparkSes
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

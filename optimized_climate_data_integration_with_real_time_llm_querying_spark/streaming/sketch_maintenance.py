@@ -1,24 +1,24 @@
 """Streaming maintenance of mergeable sketches (HLL + Count-Min).
 
-The batch HLL (queries/sketches.py ``hll_distinct_md5``) computes
-per-group registers in one aggregation. Real pipelines maintain the
-same registers CONTINUOUSLY as events arrive; HLL's defining
-property — registers merge by element-wise MAX — makes that cheap
-and, more interestingly, makes an APPEND-ONLY maintenance protocol
-semantically exactly-once under at-least-once delivery: a replayed
-micro-batch appends duplicate (group, bucket, rho) rows, and the
-MAX-merge at read time is idempotent to duplicates. No transactional
-sink, no dedup state — the algebra of the sketch absorbs retries.
-(Contrast the MinHash index maintenance next door, which relies on
-pair-level dedup downstream, and the SUM-merged Count-Min in the
-second half of this module, which would double-count on replay and
-therefore uses batch-id-KEYED overwrites instead.)
+A micro-batch runs the batch query's own sketch code, the cores in
+``operators/sketch.py`` that ``queries/sketches.py`` also runs, over
+only its own rows, and the reader merges the partial sketches with
+the sketch's own merge. So ``streamed == batch`` holds because both
+sides run one implementation, not two copies kept in step; it is
+checked cell for cell in tests/test_streaming_sketch.py.
 
-Each micro-batch computes registers over ONLY its own rows (one
-narrow aggregation) and appends them; the estimate reader re-merges
-with MAX and applies the identical Flajolet correction, so
-``streamed == batch`` exactly — proven cell-for-cell in
-tests/test_streaming_sketch.py.
+The two sketches need different replay disciplines:
+
+- HLL registers merge by element-wise MAX, so an APPEND-ONLY protocol
+  is exactly-once under at-least-once delivery: a replayed
+  micro-batch appends duplicate (grp, bucket, m) rows, and the
+  MAX-merge at read time is idempotent to duplicates. No
+  transactional sink, no dedup state: the algebra absorbs retries.
+- Count-Min cells merge by SUM, which would double-count a replay,
+  so each batch OVERWRITES its own batch-id-keyed directory instead.
+
+(Contrast the MinHash index maintenance next door, which relies on
+pair-level dedup downstream.)
 """
 
 from __future__ import annotations
@@ -26,39 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Identical constants/formulas to queries/sketches.py hll_distinct_md5
-# (p=8 -> 256 buckets, 24-bit remainder, alpha_256).
-_M = 256
-_REM = 16777216  # 2^24
-_RHO_MAX = 25
-_ALPHA = 0.7213 / (1.0 + 1.079 / _M)
+from ..operators import sketch
 
-
-def _h32(col: F.Column) -> F.Column:
-    return F.conv(
-        F.substring(F.md5(col.cast("string").cast("binary")), 1, 8), 16, 10
-    ).cast("long")
-
-
-def batch_registers(
-    df: DataFrame, grp_col: str, key_col: str
-) -> DataFrame:
-    """(grp, bucket, m) register rows for ONE batch of rows — the
-    map-reduce half of HLL; merging across batches is MAX."""
-    h = df.select(F.col(grp_col).alias("grp"), _h32(F.col(key_col)).alias("h32"))
-    rem = F.col("h32") % _REM
-    rho = F.when(rem == 0, F.lit(_RHO_MAX)).otherwise(
-        _RHO_MAX - F.length(F.bin(rem))
-    )
-    return (
-        h.select(
-            "grp",
-            F.floor(F.col("h32") / _REM).cast("long").alias("bucket"),
-            rho.alias("rho"),
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("m"))
-    )
+# (grp, bucket, m) register rows for ONE batch of rows; merging
+# across batches is MAX.
+batch_registers = sketch.hll_registers
 
 
 def register_writer(registers_path: str, grp_col: str, key_col: str):
@@ -96,69 +68,27 @@ def run_hll_maintenance_available_now(
 def estimate_from_registers(
     spark: SparkSession, registers_path: str
 ) -> DataFrame:
-    """MAX-merge all appended register rows and apply the identical
-    estimate formula as the batch query: (grp, hll_estimate)."""
+    """MAX-merge all appended register rows and apply the batch
+    query's estimate: (grp, hll_estimate)."""
     reg = (
         spark.read.parquet(registers_path)
         .groupBy("grp", "bucket")
         .agg(F.max("m").alias("m"))
     )
-    z = reg.groupBy("grp").agg(
-        (_M - F.count(F.lit(1))).cast("long").alias("v"),
-        (
-            (_M - F.count(F.lit(1))) * F.lit(1.0)
-            + F.sum(F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), m)"))
-        ).alias("zsum"),
+    return sketch.hll_estimate(reg).select(
+        "grp", F.round("estimate", 2).alias("hll_estimate")
     )
-    est = z.select(
-        "grp",
-        "v",
-        (F.lit(_ALPHA) * _M * _M / F.col("zsum")).alias("e_raw"),
-    )
-    corrected = F.when(
-        (F.col("e_raw") <= 2.5 * _M) & (F.col("v") > 0),
-        F.lit(float(_M)) * F.log(F.lit(float(_M)) / F.col("v")),
-    ).otherwise(F.col("e_raw"))
-    return est.select("grp", F.round(corrected, 2).alias("hll_estimate"))
 
 
 # ------------------------------------------------------------------
-# Count-Min maintenance — the SUM-merged counterpart
+# Count-Min maintenance: the SUM-merged counterpart
 # ------------------------------------------------------------------
-# CMS cells merge by SUM, so the HLL append-only protocol above is
-# NOT replay-safe here: a re-delivered micro-batch would double-count
-# every cell. The standard fix is batch-id-KEYED writes — each batch
-# OVERWRITES its own partition directory, so replays converge to the
-# same bytes instead of accumulating. This pair of modules is the
-# worked contrast: idempotence from sketch algebra (MAX) vs
-# idempotence from write discipline (keyed overwrite).
-
-_CMS_ROWS = 4
-_CMS_WIDTH = 512
 
 
 def cms_batch_cells(batch_df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(r, bucket, cell) partial sketch for ONE micro-batch — same
-    md5 row-hash family as the batch cms_heavy_hitters query, so
-    summed partials equal the one-shot sketch exactly."""
-    from ..operators.text import tokens
-
-    tc = (
-        batch_df.filter(F.trim(F.col(text_col)) != "")
-        .select(F.explode(tokens(text_col)).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    hashed = tc.select(
-        "n",
-        F.explode(F.array(*[F.lit(i) for i in range(_CMS_ROWS)])).alias("r"),
-        "token",
-    ).withColumn(
-        "bucket",
-        _h32(F.concat(F.col("r").cast("string"), F.lit("|"), F.col("token")))
-        % _CMS_WIDTH,
-    )
-    return hashed.groupBy("r", "bucket").agg(F.sum("n").alias("cell"))
+    """(r, bucket, cell) partial sketch for ONE micro-batch; summed
+    partials equal the one-shot sketch of cms_heavy_hitters."""
+    return sketch.cms_cells(sketch.token_counts(batch_df, text_col))
 
 
 def cms_cell_writer(cells_path: str, text_col: str = "text"):
@@ -197,16 +127,4 @@ def cms_point_estimates(
         .groupBy("r", "bucket")
         .agg(F.sum("cell").alias("cell"))
     )
-    probes = tokens_df.select(
-        "token",
-        F.explode(F.array(*[F.lit(i) for i in range(_CMS_ROWS)])).alias("r"),
-    ).withColumn(
-        "bucket",
-        _h32(F.concat(F.col("r").cast("string"), F.lit("|"), F.col("token")))
-        % _CMS_WIDTH,
-    )
-    return (
-        probes.join(merged, ["r", "bucket"], "left")
-        .groupBy("token")
-        .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).alias("cms_estimate"))
-    )
+    return sketch.cms_point_query(tokens_df.select("token"), merged)

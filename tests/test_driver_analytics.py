@@ -127,16 +127,15 @@ def _spark_anomaly(engine, question):
     """The anomaly as Spark aggregates over the question's filtered
     series: full-table climatology per (city, metric, month), the
     spec's years' monthly values, their 6-dp departure."""
-    from optimized_climate_data_integration_with_real_time_llm_querying_spark.nl.pipeline import (
-        _apply_eq_filters,
+    from optimized_climate_data_integration_with_real_time_llm_querying_spark.plans import (
+        apply_filters,
     )
 
     spec = engine._spec_era5(question)
     lo, hi = engine.ask(question).spec.year_range
-    monthly = _apply_eq_filters(
-        engine.tables["era5_monthly"], spec.filters, ci=spec.case_insensitive
-    ).select("city", "metric", F.year("date").alias("year"),
-             F.month("date").alias("month"), "value")
+    monthly, _ = apply_filters(spec, engine.tables["era5_monthly"])
+    monthly = monthly.select("city", "metric", F.year("date").alias("year"),
+                             F.month("date").alias("month"), "value")
     clim = monthly.groupBy("city", "metric", "month").agg(
         F.round(F.avg("value"), 6).alias("climatology"),
         F.countDistinct("year").alias("n_years"),

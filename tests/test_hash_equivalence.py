@@ -112,3 +112,24 @@ def test_md5_hash64_pinned_values(spark, value):
         "SELECT CAST(('0x' || substr(md5(?), 1, 8)) AS BIGINT)", params=[value]
     ).fetchall()[0][0]
     assert got == want
+
+
+def test_md5_hash64_null_is_skipped(spark):
+    """The NULL rule: ``concat_ws`` skips NULL arguments, so a NULL
+    hashes as if it were absent — ``md5_hash64(NULL)`` is the hash of
+    the empty string (never NULL), and a NULL next to other arguments
+    drops out of the ':'-joined string. DuckDB's ``md5(NULL)`` is
+    NULL, so an oracle twin over a nullable key has to decide NULL
+    handling itself; every registry key hashed today is non-null."""
+    null = F.lit(None).cast("string")
+    row = spark.range(1).select(
+        md5_hash64(null).alias("null"),
+        md5_hash64(F.lit("")).alias("empty"),
+        md5_hash64(null, F.lit("x")).alias("null_x"),
+        md5_hash64(F.lit("x")).alias("x"),
+    ).first()
+    want_empty = duckdb.sql(
+        "SELECT CAST(('0x' || substr(md5(''), 1, 8)) AS BIGINT)"
+    ).fetchall()[0][0]
+    assert row["null"] == row["empty"] == want_empty
+    assert row["null_x"] == row["x"]
